@@ -3,30 +3,47 @@ package graft
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.GraftSparkBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
-/** Per-entry executor-side metrics for the bench surfaces (Bench,
-  * TimeQ): executor CPU time, JVM GC time, and shuffle bytes,
-  * accumulated off the listener bus and read as before/after deltas
-  * around each timed query.
+/** Per-entry metrics for the bench surfaces: executor CPU time, JVM GC
+  * time, shuffle and input bytes, the job/stage/task census, spill
+  * (memory + disk) and peak execution memory, accumulated off the
+  * listener bus and read as before/after deltas around each timed entry
+  * (`SPARK_GRAFT_ONLY=q Bench` for a single entry).
   *
   * Wall time on a shared host is throttle-hostage — two rounds of
   * judge re-runs measured the same entries 1.5-2x apart under
-  * identical code. CPU time and shuffle bytes are load-independent:
-  * they move only when the PLAN moves, so regressions can't hide
-  * behind host load and throttle can't fake them. The reference's own
-  * self-stats diff CPU for the same reason (its collector_stats track
-  * rusage, not wall). */
+  * identical code. CPU time and bytes are load-independent: they move
+  * only when the PLAN moves, so regressions can't hide behind host load
+  * and throttle can't fake them. The census says whether CPU goes to
+  * WORK (few stages, hot tasks) or to ORCHESTRATION (hundreds of stages
+  * of near-empty tasks, where per-task fixed cost dominates). The
+  * reference's own self-stats diff CPU for the same reason (its
+  * collector_stats track rusage, not wall). */
 final class BenchMetrics(spark: SparkSession) {
   private val cpuNs = new AtomicLong
   private val gcMs = new AtomicLong
   private val shufRead = new AtomicLong
   private val shufWrite = new AtomicLong
   private val input = new AtomicLong
+  private val jobs = new AtomicLong
+  private val stages = new AtomicLong
+  private val tasks = new AtomicLong
+  private val memSpill = new AtomicLong
+  private val diskSpill = new AtomicLong
+  private val peakMem = new AtomicLong
 
   spark.sparkContext.addSparkListener(new SparkListener {
+    override def onJobStart(j: SparkListenerJobStart): Unit = {
+      jobs.incrementAndGet(); ()
+    }
+    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
+      stages.incrementAndGet(); ()
+    }
     override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
+      tasks.incrementAndGet()
       val m = t.taskMetrics
       if (m != null) {
         cpuNs.addAndGet(m.executorCpuTime)
@@ -34,30 +51,42 @@ final class BenchMetrics(spark: SparkSession) {
         shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
         shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
         input.addAndGet(m.inputMetrics.bytesRead)
-        ()
+        memSpill.addAndGet(m.memoryBytesSpilled)
+        diskSpill.addAndGet(m.diskBytesSpilled)
+        peakMem.getAndAccumulate(m.peakExecutionMemory, Math.max(_, _))
       }
+      ()
     }
   })
 
   /** Drain the (async) bus, then snapshot — call before AND after the
-    * timed action so the delta holds exactly its task-end events. */
+    * timed action so the delta holds exactly its events. The peak is the
+    * largest task peak since the previous snapshot (a max has no delta). */
   def snapshot(): BenchMetrics.Snap = {
     GraftSparkBridge.drainListenerBus(spark.sparkContext)
     BenchMetrics.Snap(cpuNs.get, gcMs.get, shufRead.get, shufWrite.get,
-      input.get)
+      input.get, jobs.get, stages.get, tasks.get, memSpill.get,
+      diskSpill.get, peakMem.getAndSet(0L))
   }
 }
 
 object BenchMetrics {
   final case class Snap(cpuNs: Long, gcMs: Long, shufRead: Long,
-      shufWrite: Long, input: Long) {
+      shufWrite: Long, input: Long, jobs: Long = 0L, stages: Long = 0L,
+      tasks: Long = 0L, memSpill: Long = 0L, diskSpill: Long = 0L,
+      peakMem: Long = 0L) {
     def -(prev: Snap): Snap = Snap(cpuNs - prev.cpuNs, gcMs - prev.gcMs,
       shufRead - prev.shufRead, shufWrite - prev.shufWrite,
-      input - prev.input)
+      input - prev.input, jobs - prev.jobs, stages - prev.stages,
+      tasks - prev.tasks, memSpill - prev.memSpill,
+      diskSpill - prev.diskSpill, peakMem)
     def cpuSec: Double = cpuNs / 1e9
     def gcSec: Double = gcMs / 1e3
     def shufReadMb: Double = shufRead / 1e6
     def shufWriteMb: Double = shufWrite / 1e6
     def inputMb: Double = input / 1e6
+    def memSpillMb: Double = memSpill / 1e6
+    def diskSpillMb: Double = diskSpill / 1e6
+    def peakMemMb: Double = peakMem / 1e6
   }
 }

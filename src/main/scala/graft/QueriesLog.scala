@@ -171,16 +171,6 @@ object QueriesLog {
   // (runner/logs.go:236-286, logs/stream/stream.go:240-312).
   def w5StreamBatch(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    // phase-split diagnostics (SPARK_GRAFT_STREAM_DEBUG=1): wall per
-    // pipeline leg, same pattern as the soak's SOAK_DEBUG — stderr only,
-    // zero cost when unset
-    val dbg = sys.env.get("SPARK_GRAFT_STREAM_DEBUG").contains("1")
-    var tPhase = System.nanoTime()
-    def phase(name: String): Unit = if (dbg) {
-      val now = System.nanoTime()
-      System.err.println(f"[w5-phase] $name ${(now - tPhase) / 1e9}%.2f s")
-      tPhase = now
-    }
     val tmp = scratchDir("graft_w5")
     val inDir = s"$tmp/in"; val outDir = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
     val sentinels = LogSynth.lines(s, dir)
@@ -202,7 +192,6 @@ object QueriesLog {
     LogSynth.renderedLines(s, dir).select("line").unionByName(sentinels)
       .unionByName(orphans)
       .write.mode("overwrite").text(inDir)
-    phase("input-write")
     graft.streaming.LogStreamPipeline.configureFor(s)
     val analyzed = graft.streaming.LogStreamPipeline.analyzed(
       s.readStream.text(inDir), Compiled)
@@ -234,7 +223,6 @@ object QueriesLog {
       s.conf.set("spark.sql.shuffle.partitions", oldParts)
       s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", oldNoData)
     }
-    phase("stream1-drain")
     // W7 discard counter (the poison lines surfaced by the stitcher's
     // dead-letter channel) and the watermark-advancer bound, in ONE
     // pass over the bridged parquet: count(when(...)) ignores the null
@@ -244,7 +232,6 @@ object QueriesLog {
       count(when(col("level") === "DISCARDED", 1)).as("n_discarded"),
       max("ts").as("max_ts")).head
     val nDiscarded = aggHead.getLong(0)
-    phase("discard-count")
 
     // K2 — the REAL streaming windowed-count sink: the bridged parquet
     // is replayed as a STREAM into windowedClassCounts (append mode:
@@ -254,7 +241,6 @@ object QueriesLog {
     // batch finalizes all of them; the advancer's own window never
     // closes and its marker class is dropped after the sink.
     val maxTs = aggHead.getTimestamp(1)
-    phase("max-ts")
     import s.implicits._
     Seq(1).toDF("x").select(
       lit(-1L).as("pid"),
@@ -263,7 +249,6 @@ object QueriesLog {
       lit(1).as("nLines"), lit(false).as("truncated"),
       lit(-999).as("classification"), lit("ADVANCER").as("class_name"))
       .write.mode("append").parquet(outDir)
-    phase("advancer-append")
     val out2 = s"$tmp/out2"; val ckpt2 = s"$tmp/ckpt2"
     val bridged = s.readStream.schema(s.read.parquet(outDir).schema)
       .parquet(outDir)
@@ -286,7 +271,6 @@ object QueriesLog {
       s.conf.set("spark.sql.shuffle.partitions", oldParts2)
       s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", oldNoData)
     }
-    phase("stream2-drain")
     // helper rows aggregate into their own groups: dead-letter lines at
     // the epoch-0 window (a raw continuation carries no event time),
     // the advancer under its marker class — drop both after the sink
@@ -297,7 +281,6 @@ object QueriesLog {
         col("classification") =!= -999)
       .withColumn("n_discarded", lit(nDiscarded))
       .localCheckpoint() // materialize before the temp dir is deleted
-    phase("final-read")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
     result
   }

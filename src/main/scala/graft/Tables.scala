@@ -36,8 +36,11 @@ object Tables {
     spark.read.schema(s).parquet(path)
   }
 
+  /** `events` always loads through [[eventsRaw]], so no caller can
+    * memoize an events schema inferred without `nanosAsLong`. */
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    readMemoized(spark, s"$dir/$name.parquet")
+    if (name == "events") eventsRaw(spark, dir)
+    else readMemoized(spark, s"$dir/$name.parquet")
 
   /** The events table's `ts` has shipped as two different parquet
     * physical types across testdata generations: TIMESTAMP(NANOS) (no

@@ -1,74 +1,27 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json / oracle_sampled.json, for the driver's DuckDB
+  * compare. Under `SPARK_GRAFT_ONLY` / `SPARK_GRAFT_SKIP` it dumps only
+  * the selected entries and writes only their oracles, so the checker
+  * checks just those; a full run writes every oracle. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // master precedence: spark-submit's --master (spark.master sysprop,
-    // how the local-cluster distributed-execution gate runs), then
-    // SPARK_GRAFT_MASTER, then local[$cpus]
-    val master = sys.props.get("spark.master")
-      .orElse(sys.env.get("SPARK_GRAFT_MASTER"))
-      .getOrElse(s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-    // shuffle/spill on tmpfs when available (see Bench: the host disk
-    // throttles under sustained load); SPARK_GRAFT_TMPFS=0 opts out
-    if (sys.env.get("SPARK_GRAFT_TMPFS").forall(_ != "0") &&
-        new java.io.File("/dev/shm").isDirectory)
-      builder.config("spark.local.dir", "/dev/shm/graft_spark_local")
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(defaultCpus = 4,
+      Seq("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS"))
     new java.io.File(outDir).mkdirs()
-    // local-iteration filter: SPARK_GRAFT_ONLY=a,b,c runs just those
-    // entries (the driver never sets it, so the gate always runs all)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
-      case None        => SparkEntry.queries
-    }
-    selected.foreach { case (name, fn) =>
+    val selected = Harness.selection()
+    val entries = SparkEntry.queries.filter(kv => selected(kv._1))
+    entries.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // drop per-query localCheckpoint blocks (see Bench.force)
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      Harness.release(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // scale-feasible alternates for entries whose exact oracle is
-    // infeasible at 100×+ data: the checker falls back to these on
-    // ORACLE_TIMEOUT/ORACLE_OOM and reports a SAMPLED verdict
-    val sampled = SparkEntry.sampledOracleSql
-      .map { case (k, (e, o)) =>
-        s"${q(k)}: {${q("engine")}: ${q(e)}, ${q("oracle")}: ${q(o)}}" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sampled.json"), sampled)
+    Harness.writeOracles(outDir, selected)
     spark.stop()
   }
 }

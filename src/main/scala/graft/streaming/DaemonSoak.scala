@@ -303,25 +303,13 @@ object DaemonSoak {
       ActivitySnapshotPipeline.docFrameTagged(b.unionByName(v))
     }
 
-    // SOAK_DEBUG phase split of the activity critical path:
-    // substitute+head (Spark) vs encode+zlib vs HTTP ship vs decode
-    val phaseNanos = new ConcurrentHashMap[String, java.lang.Long]()
-    def phased[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      phaseNanos.merge(name, System.nanoTime() - t0, (a, b) => a + b)
-      r
-    }
-
     def activityTick(fire: Long): TickResult = {
       val lo = fire - Scheduler.ActivityPeriod
-      val doc = phased("act.head")(ActivitySnapshotPipeline.docFromRow(
-        actFrame(lo, fire).head(), graft.sinks.SectionCap.BackendLimit))
-      val wire = phased("act.encode")(
-        ProtoWire.zlib(ActivitySnapshotPipeline.encode(doc)))
-      val shipped = phased("act.ship")(ship(wire, s"act-$fire", fire,
-        compact = true))
-      val c = phased("act.decode")(ActivitySnapshotPipeline.decodeCounts(shipped))
+      val doc = ActivitySnapshotPipeline.docFromRow(
+        actFrame(lo, fire).head(), graft.sinks.SectionCap.BackendLimit)
+      val wire = ProtoWire.zlib(ActivitySnapshotPipeline.encode(doc))
+      val shipped = ship(wire, s"act-$fire", fire, compact = true)
+      val c = ActivitySnapshotPipeline.decodeCounts(shipped)
       val ok = c.nBackends == doc.backendRows.length &&
         c.nVacuums == doc.vacuumRows.length &&
         c.nRoles == doc.roleRows.length && c.nDbs == doc.dbRows.length &&
@@ -400,7 +388,6 @@ object DaemonSoak {
     }
 
     val results = new ConcurrentHashMap[(String, Long), TickResult]()
-    val cadNanos = new ConcurrentHashMap[String, java.lang.Long]()
     val reports = Scheduler.runConcurrent(ticks, { t =>
       if (slowTick.exists(_(t))) Thread.sleep(3600000L)
       // label the tick's jobs (guide: label your jobs) — an explicit
@@ -418,9 +405,7 @@ object DaemonSoak {
         case other => sys.error(s"unknown cadence $other")
       }
       results.put((t.cadence, t.fireAt), r)
-      val tickNanos = System.nanoTime() - tn0
-      onTickNanos(t, tickNanos)
-      cadNanos.merge(t.cadence, tickNanos, (a, b) => a + b)
+      onTickNanos(t, System.nanoTime() - tn0)
     }, tickBudgetMs)
     Seq(folded, backsBase, vacsBase, linesBase)
       .foreach(_.unpersist(blocking = false))
@@ -440,10 +425,6 @@ object DaemonSoak {
       api.received.size == doneA + doneF,
       s"shipping accounting off: ${api.compactSubmissions}/${api.fullSubmissions}" +
         s"/${api.received.size} vs $doneA activity + $doneF full")
-    if (sys.env.contains("SPARK_GRAFT_SOAK_DEBUG")) {
-      cadNanos.forEach((c, n) => println(f"SOAK $c ${n / 1e9}%.1f s"))
-      phaseNanos.forEach((c, n) => println(f"SOAK $c ${n / 1e9}%.1f s"))
-    }
 
     val outcomeOf = reports.map(r =>
       (r.tick.cadence, r.tick.fireAt) -> r.outcome).toMap

@@ -2,8 +2,6 @@ package graft.tools
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.SparkSession
-
 import graft.streaming.{DaemonSoak, Scheduler}
 
 /** Per-tick deadline-headroom measurement for the daemon soak (round-15
@@ -22,13 +20,7 @@ import graft.streaming.{DaemonSoak, Scheduler}
 object DaemonHeadroom {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/tmp/graft_sf1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session(defaultCpus = 32)
 
     val periods = Map(
       Scheduler.Activity -> Scheduler.ActivityPeriod,

@@ -4,7 +4,6 @@ import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger, AtomicLong}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerExecutorRemoved,
   SparkListenerTaskEnd, SparkListenerTaskStart}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Executor-loss drill — run under a multi-JVM master:
@@ -34,19 +33,15 @@ import org.apache.spark.sql.functions._
 object ExecutorLossDrill {
 
   def main(args: Array[String]): Unit = {
-    val master = sys.props.getOrElse("spark.master",
-      sys.env.getOrElse("SPARK_GRAFT_MASTER", "local-cluster[3,4,4096]"))
+    // the kill loses finished map outputs → FetchFailed → stage retry;
+    // keep the defaults for task/stage retry so the drill exercises the
+    // production recovery path
+    val spark = graft.Harness.session(defaultCpus = 4,
+      Seq("spark.sql.shuffle.partitions" -> "24"),
+      fallbackMaster = Some("local-cluster[3,4,4096]"))
+    val master = spark.sparkContext.master
     require(master.startsWith("local-cluster"),
       s"drill needs separate executor JVMs, got $master")
-    val spark = SparkSession.builder().master(master)
-      .appName("ExecutorLossDrill")
-      .config("spark.sql.shuffle.partitions", 24)
-      .config("spark.ui.enabled", "false")
-      // the kill loses finished map outputs → FetchFailed → stage
-      // retry; keep the defaults for task/stage retry so the drill
-      // exercises the production recovery path
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     val tasksStarted = new AtomicInteger
     val tasksFailed = new AtomicInteger

@@ -1,37 +1,30 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.{Harness, SparkEntry}
 
-import graft.SparkEntry
-
-/** Plan inspector: prints the formatted physical plan for one or all
-  * queries. Usage: runMain graft.tools.Explain <queryName|all> [sfDir]
+/** Plan inspector: prints the formatted physical plan of the named
+  * queries. Usage: `runMain graft.tools.Explain [name|all|entry]… [sfDir]`
+  * — no name means `all`; an argument containing '/' is the sf dir
+  * (default sf0.001).
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val name = args.headOption.getOrElse("all")
-    val sfDir =
-      if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    if (name == "entry") {
-      val df = SparkEntry.entry(spark)
-      df.explain("formatted")
-      println(s"entry rows: ${df.count()}")
-      spark.stop()
-      return
-    }
-    val targets =
-      if (name == "all") SparkEntry.queries
-      else SparkEntry.queries.filter(_._1 == name)
-    targets.foreach { case (n, fn) =>
-      println(s"\n===== $n =====")
-      fn(spark, sfDir).explain("formatted")
+    val (dirs, names) = args.toSeq.partition(_.contains('/'))
+    val sfDir = dirs.headOption.getOrElse("/root/testdata/sf0.001")
+    val spark = Harness.session(defaultCpus = 4)
+    (if (names.isEmpty) Seq("all") else names).foreach {
+      case "entry" =>
+        val df = SparkEntry.entry(spark)
+        df.explain("formatted")
+        println(s"entry rows: ${df.count()}")
+      case "all" =>
+        SparkEntry.queries.foreach { case (n, fn) =>
+          println(s"\n===== $n =====")
+          fn(spark, sfDir).explain("formatted")
+        }
+      case n =>
+        println(s"\n===== $n =====")
+        SparkEntry.queries(n)(spark, sfDir).explain("formatted")
     }
     spark.stop()
   }

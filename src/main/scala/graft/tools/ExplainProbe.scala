@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Print `explain("formatted")` of the PERSISTED-LSH-INDEX probe frame
@@ -12,10 +11,7 @@ import org.apache.spark.sql.functions._
 object ExplainProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session(defaultCpus = 4)
     val tmp = java.nio.file.Files.createTempDirectory("graft_explain_probe_")
       .toString
     try {

@@ -4,7 +4,6 @@ import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger, AtomicLong}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerExecutorRemoved,
   SparkListenerTaskStart}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Executor-loss drill for the persisted-LSH streaming ingest loop —
@@ -30,18 +29,13 @@ import org.apache.spark.sql.functions._
 object IngestLcDrill {
 
   def main(args: Array[String]): Unit = {
-    val master = sys.props.getOrElse("spark.master",
-      sys.env.getOrElse("SPARK_GRAFT_MASTER", "local-cluster[2,16,8192]"))
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = graft.Harness.session(defaultCpus = 8,
+      Seq("spark.sql.shuffle.partitions" -> "8"),
+      fallbackMaster = Some("local-cluster[2,16,8192]"))
+    val master = spark.sparkContext.master
     require(master.startsWith("local-cluster"),
       s"drill needs separate executor JVMs, got $master")
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master(master)
-      .appName("IngestLcDrill")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     import org.apache.spark.sql.streaming.Trigger
 
     val tasksStarted = new AtomicInteger

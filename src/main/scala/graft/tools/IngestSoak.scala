@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Long-horizon soak of the persisted-LSH streaming ingest loop
@@ -61,14 +60,7 @@ object IngestSoak {
     // fraction >= 0.5, checked after every committed batch
     val maxSegments = 25
     val fracThreshold = 0.5
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("IngestSoak")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session(defaultCpus = 8)
     import org.apache.spark.sql.streaming.Trigger
 
     val tmp = java.nio.file.Files.createTempDirectory(

@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 
 /** Phase census for the e2e snapshot-sink family (round-15 verdict item
   * #8): attributes each entry's wall to its pipeline phases —
@@ -19,23 +18,11 @@ import org.apache.spark.sql.functions._
 object SinkPhases {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val builder = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    if (sys.env.get("SPARK_GRAFT_TMPFS").forall(_ != "0") &&
-        new java.io.File("/dev/shm").isDirectory)
-      builder.config("spark.local.dir", "/dev/shm/graft_spark_local")
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session(defaultCpus = 32)
 
     def force(df: DataFrame): Unit = {
-      df.agg(sum(xxhash64(struct(df.columns.map(col).toIndexedSeq: _*))
-        .cast("decimal(38,0)"))).head
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      graft.Harness.force(df)
+      graft.Harness.release(spark)
     }
     def t[T](f: => T): (T, Double) = {
       val t0 = System.nanoTime(); val r = f

@@ -2,7 +2,7 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import graft.Harness
 
 /** Resumable, budgeted variant of [[graft.Verify]] for large-SF sweeps:
   *
@@ -27,18 +27,8 @@ object VerifySweep {
     val sfDir = args(0)
     val outDir = args(1)
     val budgetSec = if (args.length > 2) args(2).toInt else 600
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-    if (sys.env.get("SPARK_GRAFT_TMPFS").forall(_ != "0") &&
-        new java.io.File("/dev/shm").isDirectory)
-      builder.config("spark.local.dir", "/dev/shm/graft_spark_local")
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(defaultCpus = 32,
+      Seq("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS"))
     new java.io.File(outDir).mkdirs()
 
     val watchdog = java.util.concurrent.Executors.newSingleThreadScheduledExecutor()
@@ -67,35 +57,13 @@ object VerifySweep {
           } finally {
             cancel.cancel(false)
             spark.sparkContext.clearJobGroup()
-            spark.sharedState.cacheManager.clearCache()
-            spark.sparkContext.getPersistentRDDs.values
-              .foreach(_.unpersist(blocking = false))
+            Harness.release(spark)
           }
         println(f"SWEEP $name $status ${(System.nanoTime() - t0) / 1e9}%.1f")
       }
     }
     watchdog.shutdownNow()
-
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = graft.SparkEntry.oracleSql.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }
-      .mkString("{", ", ", "}")
-    Files.write(Paths.get(outDir, "oracle_sql.json"),
-      json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val sampled = graft.SparkEntry.sampledOracleSql.toSeq.sortBy(_._1)
-      .map { case (k, (e, o)) =>
-        s"${q(k)}: {${q("engine")}: ${q(e)}, ${q("oracle")}: ${q(o)}}" }
-      .mkString("{", ", ", "}")
-    Files.write(Paths.get(outDir, "oracle_sampled.json"),
-      sampled.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    Harness.writeOracles(outDir, _ => true)
     println("SWEEP done")
     spark.stop()
   }

@@ -1,0 +1,89 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.sql.types.TimestampType
+
+/** The shared driver-main decisions in [[Harness]]: the force hash, the
+  * release of cached state, entry selection and the oracle files. */
+class HarnessSpec extends SparkSpec {
+
+  test("force gives the same hash on two runs and consumes every column") {
+    val df = Tables.orders(spark, Sf)
+    val h = Harness.force(df)
+    assert(h != null)
+    assert(Harness.force(Tables.orders(spark, Sf)) == h)
+    assert(Harness.force(df.drop(df.columns.last)) != h)
+  }
+
+  test("release drops every cached frame and persisted RDD") {
+    Tables.nation(spark, Sf).cache().count()
+    Tables.region(spark, Sf).localCheckpoint()
+    spark.range(10).rdd.persist().count()
+    assert(!spark.sharedState.cacheManager.isEmpty)
+    assert(spark.sparkContext.getPersistentRDDs.nonEmpty)
+    Harness.release(spark)
+    assert(spark.sharedState.cacheManager.isEmpty)
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+  }
+
+  test("SPARK_GRAFT_ONLY / SPARK_GRAFT_SKIP select entries") {
+    def sel(env: (String, String)*): Seq[String] =
+      Seq("a", "b", "c").filter(Harness.selection(env.toMap.get))
+    assert(sel() == Seq("a", "b", "c"))
+    assert(sel("SPARK_GRAFT_ONLY" -> " a, c,") == Seq("a", "c"))
+    assert(sel("SPARK_GRAFT_SKIP" -> "b") == Seq("a", "c"))
+    assert(sel("SPARK_GRAFT_ONLY" -> "a,b", "SPARK_GRAFT_SKIP" -> "b") ==
+      Seq("a"))
+  }
+
+  test("the JSON escape parses back: quotes, backslashes, control chars") {
+    val s = "say \"hi\" \\ C:\\path\ttab\rcr\nlf\u0000nul\u0001\u001f\u007f é"
+    assert(new ObjectMapper().readValue(Harness.jsonString(s),
+      classOf[String]) == s)
+  }
+
+  test("oracle files parse back to the selected entries' oracles") {
+    val dir = Files.createTempDirectory("graft_oracles")
+    val mapper = new ObjectMapper()
+    def read(f: String): Map[String, AnyRef] = mapper
+      .readValue(dir.resolve(f).toFile, classOf[java.util.Map[String, AnyRef]])
+      .asScala.toMap
+    try {
+      Harness.writeOracles(dir.toString, _ => true)
+      assert(read("oracle_sql.json") == SparkEntry.oracleSql.toMap)
+      val sampled = read("oracle_sampled.json")
+      assert(sampled.keySet == SparkEntry.sampledOracleSql.keySet)
+      SparkEntry.sampledOracleSql.foreach { case (k, (e, o)) =>
+        assert(sampled(k) == Map("engine" -> e, "oracle" -> o).asJava)
+      }
+      val keep = SparkEntry.oracleSql.keys.toSeq.sorted.take(3).toSet
+      Harness.writeOracles(dir.toString, keep)
+      assert(read("oracle_sql.json") ==
+        SparkEntry.oracleSql.filter(kv => keep(kv._1)).toMap)
+      assert(read("oracle_sampled.json").keySet ==
+        SparkEntry.sampledOracleSql.keySet.filter(keep))
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
+  }
+
+  test("Tables(events) loads through eventsRaw") {
+    val generic = Tables(spark, Sf, "events")
+    assert(generic.schema("ts").dataType == TimestampType)
+    assert(generic.schema == Tables.events(spark, Sf).schema)
+  }
+
+  test("session building and the force hash live only in Harness") {
+    val patterns = Seq("SparkSession.builder()", "xxhash64(struct(")
+    val files = Files.walk(Paths.get("src/main/scala")).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    val offenders = for {
+      f <- files if f.getFileName.toString != "Harness.scala"
+      p <- patterns if Files.readString(f).contains(p)
+    } yield s"$f: $p"
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+    assert(files.exists(_.getFileName.toString == "Harness.scala"))
+  }
+}
