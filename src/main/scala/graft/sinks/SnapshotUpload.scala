@@ -1,12 +1,12 @@
 package graft.sinks
 
 import java.io.ByteArrayOutputStream
-import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
 
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import com.sun.net.httpserver.HttpExchange
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.LocalHttp
 import graft.sinks.SnapshotTransport._
 
 /** The SHIPPED full-snapshot lifecycle — the two gate entries that
@@ -72,7 +72,7 @@ object SnapshotUpload {
     var stored: Array[Byte] = null
     var submittedLocation: String = null
     var grantRequests = 0
-    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    val server = LocalHttp.server()
     val base = s"http://127.0.0.1:${server.getAddress.getPort}"
     server.createContext("/storage", (ex: HttpExchange) => {
       stored = filePart(readBody(ex))

@@ -1,11 +1,13 @@
 package graft.sources
 
 import java.io.ByteArrayOutputStream
-import java.net.{HttpURLConnection, InetSocketAddress, URL}
+import java.net.{HttpURLConnection, URL}
 import java.nio.charset.StandardCharsets.UTF_8
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import com.sun.net.httpserver.HttpExchange
+
+import graft.LocalHttp
 
 /** EC2 Instance Metadata Service v2 — the last arm of the SDK default
   * credential chain `GetAwsConfig` relies on
@@ -128,8 +130,7 @@ object AwsImds {
     @volatile var tokenRequests = 0
     @volatile var credentialRequests = 0
 
-    private val server =
-      HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    private val server = LocalHttp.server()
     val port: Int = server.getAddress.getPort
     val url: String = s"http://127.0.0.1:$port"
 

@@ -1,13 +1,14 @@
 package graft.sources
 
 import java.io.ByteArrayOutputStream
-import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import com.sun.net.httpserver.HttpExchange
 
 import javax.xml.parsers.DocumentBuilderFactory
 import org.w3c.dom.Element
+
+import graft.LocalHttp
 
 /** AWS STS at the protocol level — the two temporary-credential
   * exchanges `GetAwsConfig` wires through `stscreds`
@@ -155,8 +156,7 @@ object AwsSts {
     private def errorXml(code: String): String =
       s"""<ErrorResponse><Error><Type>Sender</Type><Code>$code</Code></Error></ErrorResponse>"""
 
-    private val server =
-      HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    private val server = LocalHttp.server()
     val port: Int = server.getAddress.getPort
     val host: String = s"127.0.0.1:$port"
     val url: String = s"http://$host/"

@@ -6,9 +6,10 @@ import java.security.cert.{CertificateFactory, X509Certificate}
 import java.util.Base64
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import com.sun.net.httpserver.HttpExchange
 import java.io.ByteArrayOutputStream
-import java.net.InetSocketAddress
+
+import graft.LocalHttp
 
 /** Azure AD (Entra) token acquisition — the credential selection and
   * OAuth2 protocols behind `getAzureCredential`
@@ -217,8 +218,7 @@ object AzureAad {
       issuedTokens.contains(token)
     }
 
-    private val server =
-      HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    private val server = LocalHttp.server()
     val port: Int = server.getAddress.getPort
     val tokenUrl: String =
       s"http://127.0.0.1:$port/$tenantId/oauth2/v2.0/token"

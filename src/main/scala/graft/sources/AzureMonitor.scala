@@ -1,11 +1,12 @@
 package graft.sources
 
 import java.io.ByteArrayOutputStream
-import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import com.sun.net.httpserver.HttpExchange
+
+import graft.LocalHttp
 
 /** Azure Monitor system metrics (`input/system/azure/system.go:18-290`):
   * the collector resolves its database's ARM resource by listing the
@@ -235,8 +236,7 @@ object AzureMonitor {
     var cosmosPageCalls = 0
     var metricCalls = 0
 
-    private val server =
-      HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    private val server = LocalHttp.server()
     val port: Int = server.getAddress.getPort
     val url: String = s"http://127.0.0.1:$port"
 

@@ -3,7 +3,9 @@ package graft.sources
 import java.nio.charset.StandardCharsets.UTF_8
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import com.sun.net.httpserver.HttpExchange
+
+import graft.LocalHttp
 
 /** GCP Application Default Credentials — the discovery strategy the
   * google SDK runs when the reference passes no explicit key file
@@ -194,8 +196,7 @@ object GcpAdc {
     private var counter = 0
     @volatile var tokenRequests = 0
 
-    private val server =
-      HttpServer.create(new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    private val server = LocalHttp.server()
     val port: Int = server.getAddress.getPort
     val url: String = s"http://127.0.0.1:$port"
 

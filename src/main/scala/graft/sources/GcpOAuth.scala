@@ -6,6 +6,8 @@ import java.util.Base64
 
 import com.fasterxml.jackson.databind.ObjectMapper
 
+import graft.LocalHttp
+
 /** The GCP service-account OAuth2 flow under the reference's Pub/Sub
   * subscriber (`input/system/google_cloudsql/logs.go` authenticates via
   * the google SDK's token source; the underlying protocol is the public
@@ -161,8 +163,7 @@ object GcpOAuth {
       expiresInSecs: Long = 3600L) {
     private val issued = scala.collection.mutable.Set.empty[String]
     private val seq = new java.util.concurrent.atomic.AtomicLong(0L)
-    private val server = com.sun.net.httpserver.HttpServer.create(
-      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    private val server = LocalHttp.server()
     val port: Int = server.getAddress.getPort
     val uri: String = s"http://127.0.0.1:$port/token"
 

@@ -1,13 +1,14 @@
 package graft.sources
 
 import java.io.ByteArrayOutputStream
-import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, StandardCopyOption}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import com.sun.net.httpserver.HttpExchange
 import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.LocalHttp
 
 /** The LIVE transport leg of the Heroku HTTPS log drain (S29,
   * `input/system/heroku/http_handler.go:13-32`): logplex POSTs
@@ -33,8 +34,7 @@ object HttpDrain {
   /** One spool file per accepted POST body; `.tmp` then atomic move. */
   final class Receiver(spoolDir: Path, maxPending: Int = 64) {
     Files.createDirectories(spoolDir)
-    private val server =
-      HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    private val server = LocalHttp.server()
     val port: Int = server.getAddress.getPort
     private val seq = new AtomicLong(0L)
     private val droppedCount = new AtomicInteger(0)

@@ -1,16 +1,16 @@
 package graft.sources
 
 import java.io.ByteArrayOutputStream
-import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, StandardCopyOption}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import java.util.zip.GZIPInputStream
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import com.sun.net.httpserver.HttpExchange
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.LocalHttp
 import graft.sinks.ProtoWire
 
 /** The LIVE transport leg of the OTLP logs endpoint (S28,
@@ -40,8 +40,7 @@ object OtelReceiver {
 
   final class Receiver(spoolDir: Path, maxPending: Int = 64) {
     Files.createDirectories(spoolDir)
-    private val server =
-      HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    private val server = LocalHttp.server()
     val port: Int = server.getAddress.getPort
     private val seq = new AtomicLong(0L)
     private val droppedCount = new AtomicInteger(0)

@@ -1,11 +1,13 @@
 package graft.sources
 
 import java.io.ByteArrayOutputStream
-import java.net.{HttpURLConnection, InetSocketAddress, URL}
+import java.net.{HttpURLConnection, URL}
 import java.nio.charset.StandardCharsets.UTF_8
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import com.sun.net.httpserver.HttpExchange
+
+import graft.LocalHttp
 
 /** PlanetScale log download — the signature-authenticated logs API
   * (`input/system/planetscale/logs.go`): resolve the branch ID once
@@ -275,8 +277,7 @@ object PlanetScaleLogs {
     var branchCalls = 0
     var signatureCalls = 0
 
-    private val server =
-      HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    private val server = LocalHttp.server()
     val port: Int = server.getAddress.getPort
     val url: String = s"http://127.0.0.1:$port"
 

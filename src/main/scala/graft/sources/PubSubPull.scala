@@ -1,7 +1,6 @@
 package graft.sources
 
 import java.io.ByteArrayOutputStream
-import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, StandardCopyOption}
 import java.time.{Duration, Instant}
@@ -12,8 +11,10 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import com.sun.net.httpserver.HttpExchange
 import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.LocalHttp
 
 /** The LIVE transport leg of the Google Cloud SQL / AlloyDB log source
   * (S30, `input/system/google_cloudsql/logs.go:43-191`): a pull
@@ -230,8 +231,7 @@ object PubSubPull {
     def availableCount: Int = lock.synchronized(available.size)
     def outstandingCount: Int = lock.synchronized(outstanding.size)
 
-    private val server =
-      HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    private val server = LocalHttp.server()
     val port: Int = server.getAddress.getPort
     val endpoint: String = s"http://127.0.0.1:$port"
 

@@ -1,11 +1,13 @@
 package graft.sources
 
 import java.io.ByteArrayOutputStream
-import java.net.{HttpURLConnection, InetSocketAddress, URL}
+import java.net.{HttpURLConnection, URL}
 import java.nio.charset.StandardCharsets.UTF_8
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import com.sun.net.httpserver.HttpExchange
+
+import graft.LocalHttp
 
 /** The LIVE AWS leg of S32 — RDS log download over the real auth and
   * wire protocol (`input/system/rds/logs.go:31-130`): the reference's
@@ -231,8 +233,7 @@ object RdsLogs {
       }
 
     private val mapper = new ObjectMapper()
-    private val server =
-      HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    private val server = LocalHttp.server()
     val port: Int = server.getAddress.getPort
     val host: String = s"127.0.0.1:$port"
     val url: String = s"http://$host/"

@@ -2,10 +2,13 @@ package graft.streaming
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftNative, Row,
+  SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
-import graft.Tables
+import graft.{LocalHttp, Tables}
 import graft.logsys.LogSynth
 import graft.sinks.{ActivitySnapshotPipeline, FullSnapshotPipeline,
   ProtoWire, SnapshotTransport, SnapshotUpload}
@@ -76,7 +79,7 @@ object DaemonSoak {
     * `upload_http_legacy.go:24-170`). Received file parts are kept by
     * uuid so each tick decodes the bytes the SERVER got. */
   private final class SoakApi {
-    import com.sun.net.httpserver.{HttpExchange, HttpServer}
+    import com.sun.net.httpserver.HttpExchange
     val received = new ConcurrentHashMap[String, Array[Byte]]()
     private val grants = new java.util.concurrent.atomic.AtomicInteger
     private val fulls = new java.util.concurrent.atomic.AtomicInteger
@@ -86,8 +89,7 @@ object DaemonSoak {
     def compactSubmissions: Int = compacts.get
 
     private val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    private val server =
-      HttpServer.create(new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    private val server = LocalHttp.server()
     server.setExecutor(pool)
     val base = s"http://127.0.0.1:${server.getAddress.getPort}"
 
@@ -138,73 +140,10 @@ object DaemonSoak {
   final case class SoakRow(cadence: String, fireAt: Long, tickIndex: Long,
       outcome: String, nItems: Long, nDims: Long, wireOk: Boolean)
 
-  /** Drive the four-cadence daemon for [[Cycles]] cycles. Returns every
-    * tick's row plus the raw scheduler reports (spec hooks). `slowTick`
-    * lets the spec inject one deadline-blowing runner. */
-  def run(s: SparkSession, dir: String, tickBudgetMs: Long = 3000L,
-      horizon: Long = Horizon,
-      slowTick: Option[Scheduler.Tick => Boolean] = None,
-      onTickNanos: (Scheduler.Tick, Long) => Unit = (_, _) => ())
-      : (Seq[SoakRow], Seq[Scheduler.Report]) = {
-    // the tick cadences run on their own session: a 10 s tick over a
-    // bounded window is latency-critical, so per-stage adaptivity and
-    // 32-way shuffles of ~hundred-row frames only add scheduler
-    // round-trips (measured ~2.3x per tick). The full-snapshot cadence
-    // keeps the primary session — its corpus-scale plans want both.
-    // newSession shares the SparkContext and cache manager, so the
-    // cached base below serves both sessions.
-    val ts = s.newSession()
-    ts.conf.set("spark.sql.adaptive.enabled", "false")
-    ts.conf.set("spark.sql.shuffle.partitions", "1")
-    // each tick's window bounds are inlined into generated code, so
-    // whole-stage codegen compiles a fresh class per tick (~200 ms) to
-    // run over a few hundred rows — interpreted mode wins that trade at
-    // any tick size the cadence contract allows (measured 2.4x/tick)
-    ts.conf.set("spark.sql.codegen.wholeStage", "false")
-    ts.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    val base = Tables.events(ts, dir)
-      .withColumn("es", expr("unix_micros(ts) div 1000000"))
-    val esMin = base.agg(min("es")).head.getLong(0)
-    // The simulated live server, derived ONCE: what the reference's
-    // ticks read (pg_stat_activity, pg_stat_progress_vacuum, the log
-    // files, the event stream behind pg_stat_statements) exists
-    // server-side before any tick runs, so its emulation is soak setup,
-    // not per-tick pipeline work — each tick's runner starts from these
-    // frames exactly where the collector's reads start. One cached
-    // partition, clustered by offset: a tick's window filter prunes to
-    // its own in-memory batches instead of scanning (and
-    // task-scheduling) the whole corpus 270 times; a tick's window is
-    // period-bounded, so single-partition is the right shape for it at
-    // any corpus size — the same boundedness argument as assembleDoc's.
-    def clustered(df: DataFrame): DataFrame = {
-      val out = df.coalesce(1).sortWithinPartitions("off").persist()
-      out.count()
-      out
-    }
-    val folded = clustered(
-      base.withColumn("off", (col("es") - esMin) % horizon))
-    def offOf(tsCol: String): org.apache.spark.sql.Column =
-      (expr(s"unix_micros($tsCol) div 1000000") - esMin) % horizon
-    // per-tick plans are re-ANALYZED by Catalyst every tick (window
-    // bounds are literals) — measured ~2/3 of activity-tick wall. The
-    // per-row-constant derivation + tag subtrees (incl. the
-    // pgFingerprint/pgNormalize scanners) are hoisted HERE, into the
-    // base shaped once; per tick only filter + latest-per-pid +
-    // document fold remain to plan. Ordering columns ride along via
-    // `keep` for the per-tick latest-per-pid window.
-    val backsBase = clustered(ActivitySnapshotPipeline.tagBackends(
-      ActivitySnapshotPipeline.deriveBackendCols(
-        CatalogSynth.backendsFromEvents(folded))
-        .withColumn("off", offOf("query_start")),
-      keep = Seq("off", "query_start", "event_id")))
-    val vacsBase = clustered(ActivitySnapshotPipeline.tagVacuums(
-      ActivitySnapshotPipeline.deriveVacuumCols(
-        CatalogSynth.vacuumProgressFromEvents(folded, keep = Seq("off"))),
-      keep = Seq("off", "event_id")))
-    val linesBase = clustered(
-      LogSynth.render(LogSynth.linesFrom(folded).withColumn("off", offOf("ts")),
-        keep = Seq("off")))
-
+  /** The soak's tick plan over `horizon`: the four cadences' ticks, and
+    * the start of each windowed tick's window, which ends at its fire
+    * time. */
+  def plan(horizon: Long): (Seq[Scheduler.Tick], Scheduler.Tick => Long) = {
     val ticks = Scheduler.plan(0L, horizon) ++
       Scheduler.planCadence(Scheduler.LogDownload,
         Scheduler.LogDownloadPeriod, 0L, horizon)
@@ -215,44 +154,177 @@ object DaemonSoak {
       .map(_.fireAt).sorted
     val hfPrev: Map[Long, Long] =
       hfFires.zip(0L +: hfFires.init).toMap
+    (ticks, t => t.cadence match {
+      case Scheduler.Activity => t.fireAt - Scheduler.ActivityPeriod
+      case Scheduler.HighFreq => hfPrev(t.fireAt)
+      case Scheduler.LogDownload => t.fireAt - Scheduler.LogDownloadPeriod
+      case other => sys.error(s"$other ticks read no window")
+    })
+  }
 
-    // ---- prepared tick plans: every tick of a cadence re-executes ONE
-    // fixed tree in which only the two window-bound literals differ, so
-    // the tree is ANALYZED once and the bounds substituted per tick
-    // (distinctive marker literals → actual bounds in the resolved
-    // plan). Optimization, physical planning and execution — the work
-    // under the per-tick deadline budget — still run per tick; only the
-    // redundant re-analysis of an identical resolved tree is hoisted
-    // (measured ~45% of activity-tick wall post-r14-hoist; the document
-    // fold + classify trees are large). Cache substitution happens per
-    // execution (withCachedData), so the ticks keep reading the cached
-    // bases.
-    val MarkLo = -271828183L
-    val MarkHi = -314159265L
-    def prepared(build: (org.apache.spark.sql.Column,
-        org.apache.spark.sql.Column) => DataFrame)
-        : (Long, Long) => DataFrame = {
-      import org.apache.spark.sql.catalyst.expressions.Literal
-      import org.apache.spark.sql.types.LongType
-      val plan = org.apache.spark.sql.GraftNative.analyzed(
-        build(lit(MarkLo), lit(MarkHi)))
-      (lo: Long, hi: Long) => {
-        // a marker the analyzer rewrote (e.g. wrapped in a cast that
-        // folded) would survive as an always-false predicate and every
-        // tick would silently run over an empty window — count the
-        // substitutions and fail loudly instead
-        var nLo = 0; var nHi = 0
-        val sub = plan.transformAllExpressions {
-          case Literal(MarkLo, LongType) => nLo += 1; Literal(lo)
-          case Literal(MarkHi, LongType) => nHi += 1; Literal(hi)
-        }
-        require(nLo >= 1 && nHi >= 1,
-          s"prepared(): expected at least one MarkLo and one MarkHi in " +
-            s"the analyzed tick plan (a rewritten marker would leave an " +
-            s"always-false window), found lo=$nLo hi=$nHi")
-        org.apache.spark.sql.GraftNative.ofRows(ts, sub)
-      }
+  /** The simulated live system and the windowed frames the activity,
+    * highfreq and log ticks read from it, on the soak's tick session.
+    *
+    * The tick session: a 10 s tick over a bounded window is
+    * latency-critical, so per-stage adaptivity and 32-way shuffles of
+    * ~hundred-row frames only add scheduler round-trips (measured ~2.3x
+    * per tick). The full-snapshot cadence keeps the primary session —
+    * its corpus-scale plans want both. newSession shares the
+    * SparkContext and cache manager, so the cached bases below serve
+    * both sessions. */
+  final class LiveServer(s: SparkSession, dir: String, horizon: Long) {
+    val ts: SparkSession = s.newSession()
+    ts.conf.set("spark.sql.adaptive.enabled", "false")
+    ts.conf.set("spark.sql.shuffle.partitions", "1")
+    // each tick's window bounds are inlined into generated code, so
+    // whole-stage codegen compiles a fresh class per tick (~200 ms) to
+    // run over a few hundred rows — interpreted mode wins that trade at
+    // any tick size the cadence contract allows (measured 2.4x/tick)
+    ts.conf.set("spark.sql.codegen.wholeStage", "false")
+    ts.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+
+    private val base = Tables.events(ts, dir)
+      .withColumn("es", expr("unix_micros(ts) div 1000000"))
+    private val esMin = base.agg(min("es")).head.getLong(0)
+    // The simulated live server, derived ONCE: what the reference's
+    // ticks read (pg_stat_activity, pg_stat_progress_vacuum, the log
+    // files, the event stream behind pg_stat_statements) exists
+    // server-side before any tick runs, so its emulation is soak setup,
+    // not per-tick pipeline work — each tick's runner starts from these
+    // frames exactly where the collector's reads start. One cached
+    // partition, sorted by offset, so the ticks do not re-read the lake
+    // 270 times; a tick's window is period-bounded, so single-partition
+    // is the right shape for it at any corpus size — the same
+    // boundedness argument as assembleDoc's. The window filter prunes
+    // whole in-memory column batches only: at sf0.01 the default
+    // 10,000-row batch holds the ~10.5k-row base in two, so a tick
+    // scans most of it. A 200-row batch measured only ~4 ms/tick
+    // faster, so the batch size stays the default.
+    private def clustered(df: DataFrame): DataFrame = {
+      val out = df.coalesce(1).sortWithinPartitions("off").persist()
+      out.count()
+      out
     }
+    private val folded = clustered(
+      base.withColumn("off", (col("es") - esMin) % horizon))
+    private def offOf(tsCol: String): Column =
+      (expr(s"unix_micros($tsCol) div 1000000") - esMin) % horizon
+    // The per-row-constant derivation + tag subtrees (incl. the
+    // pgFingerprint/pgNormalize scanners) are computed HERE, once, into
+    // the cached bases, instead of per tick over each window's rows;
+    // per tick only filter + latest-per-pid + document fold remain.
+    // Ordering columns ride along via `keep` for the per-tick
+    // latest-per-pid window.
+    private val backsBase = clustered(ActivitySnapshotPipeline.tagBackends(
+      ActivitySnapshotPipeline.deriveBackendCols(
+        CatalogSynth.backendsFromEvents(folded))
+        .withColumn("off", offOf("query_start")),
+      keep = Seq("off", "query_start", "event_id")))
+    private val vacsBase = clustered(ActivitySnapshotPipeline.tagVacuums(
+      ActivitySnapshotPipeline.deriveVacuumCols(
+        CatalogSynth.vacuumProgressFromEvents(folded, keep = Seq("off"))),
+      keep = Seq("off", "event_id")))
+    private val linesBase = clustered(
+      LogSynth.render(LogSynth.linesFrom(folded).withColumn("off", offOf("ts")),
+        keep = Seq("off")))
+
+    /** The activity document over the backends and vacuum ticks of
+      * [lo, hi): one row. */
+    def activity(lo: Column, hi: Column): DataFrame = {
+      val b = ActivitySnapshotPipeline.latestPerPid(
+          backsBase.filter(col("off") >= lo && col("off") < hi),
+          Seq(col("query_start").desc, col("event_id").desc))
+        .drop("off", "query_start", "event_id", "rn")
+      val v = ActivitySnapshotPipeline.latestPerPid(
+          vacsBase.filter(col("off") >= lo && col("off") < hi),
+          Seq(col("event_id").desc))
+        .drop("off", "event_id", "rn")
+      ActivitySnapshotPipeline.docFrameTagged(b.unionByName(v))
+    }
+
+    /** The statement-stats scrape of [lo, hi): one row per statement. */
+    def highFreq(lo: Column, hi: Column): DataFrame =
+      CatalogSynth.statementStatsFromEvents(
+        folded.filter(col("off") >= lo && col("off") < hi))
+
+    /** The log lines of [lo, hi) parsed and classified, summed to one
+      * row: lines, distinct classes, unparsed lines. */
+    def logs(lo: Column, hi: Column): DataFrame = {
+      val rendered = linesBase
+        .filter(col("off") >= lo && col("off") < hi)
+        .select(col("line").as("value"))
+      LogStreamPipeline.parse(rendered, graft.QueriesLog.Compiled)
+        .withColumn("classification",
+          graft.logsys.LogClassify.classify(col("content")))
+        .agg(
+          count(lit(1)).as("n"),
+          count_distinct(col("classification")).as("n_classes"),
+          coalesce(sum(when(col("pid") === -1L, 1L).otherwise(0L)), lit(0L))
+            .as("unparsed"))
+    }
+
+    def release(): Unit = Seq(folded, backsBase, vacsBase, linesBase)
+      .foreach(_.unpersist(blocking = false))
+  }
+
+  private val MarkLo = -271828183L
+  private val MarkHi = -314159265L
+
+  /** A windowed tick frame planned ONCE: every tick of a cadence runs one
+    * fixed tree in which only the two window-bound literals differ, so
+    * the tree is analyzed, optimized and physically planned over
+    * distinctive marker literals here, and each tick substitutes its
+    * bounds into a copy of the physical plan and runs it. A tick pays
+    * for its window, not for planning (analysis, optimization and
+    * physical planning were ~50 ms of a ~196 ms activity tick run
+    * alone). The cached bases are read through the plan's in-memory
+    * scans. The returned runner decodes with one deserializer, so one
+    * cadence's ticks must run one after another — as
+    * [[Scheduler.runConcurrent]] runs them. */
+  def compiled(build: (Column, Column) => DataFrame)
+      : (Long, Long) => Array[Row] = {
+    val frame = GraftNative.compile(build(lit(MarkLo), lit(MarkHi)))
+    // the markers the physical plan holds, in every node and subquery
+    // plan: each bound sits in a Filter and in its in-memory scan's
+    // pruning predicates
+    def held(mark: Long): Int = frame.template.collectWithSubqueries {
+      case p => p.expressions.map(_.collect {
+        case Literal(`mark`, LongType) => }.size).sum
+    }.sum
+    val nLo = held(MarkLo)
+    val nHi = held(MarkHi)
+    // a marker the optimizer rewrote (e.g. folded into a cast) is gone
+    // from the plan: every tick would silently run an always-false window
+    require(nLo >= 1 && nHi >= 1,
+      s"compiled(): the tick plan holds lo=$nLo hi=$nHi window markers")
+    (lo: Long, hi: Long) => {
+      var sLo = 0; var sHi = 0
+      val plan = frame.template.transformAllExpressions {
+        case Literal(MarkLo, LongType) => sLo += 1; Literal(lo)
+        case Literal(MarkHi, LongType) => sHi += 1; Literal(hi)
+      }
+      // a marker the substitution does not reach (a subquery plan)
+      // would keep its always-false bound: fail loudly instead
+      require(sLo == nLo && sHi == nHi,
+        s"compiled(): substituted lo=$sLo hi=$sHi of the plan's " +
+          s"lo=$nLo hi=$nHi window markers")
+      frame.collect(plan)
+    }
+  }
+
+  /** Drive the four-cadence daemon for [[Cycles]] cycles. Returns every
+    * tick's row plus the raw scheduler reports (spec hooks). `slowTick`
+    * lets the spec inject one deadline-blowing runner. */
+  def run(s: SparkSession, dir: String, tickBudgetMs: Long = 3000L,
+      horizon: Long = Horizon,
+      slowTick: Option[Scheduler.Tick => Boolean] = None,
+      onTickNanos: (Scheduler.Tick, Long) => Unit = (_, _) => ())
+      : (Seq[SoakRow], Seq[Scheduler.Report]) = {
+    val live = new LiveServer(s, dir, horizon)
+    val (ticks, windowStart) = plan(horizon)
+    val actRows = compiled(live.activity)
+    val hfRows = compiled(live.highFreq)
+    val logRows = compiled(live.logs)
 
     // the reference's previous-scrape state (`state/state.go`) —
     // pgss.max-bounded per server, held in collector memory
@@ -291,22 +363,9 @@ object DaemonSoak {
       got
     }
 
-    val actFrame = prepared { (lo, hi) =>
-      val b = ActivitySnapshotPipeline.latestPerPid(
-          backsBase.filter(col("off") >= lo && col("off") < hi),
-          Seq(col("query_start").desc, col("event_id").desc))
-        .drop("off", "query_start", "event_id", "rn")
-      val v = ActivitySnapshotPipeline.latestPerPid(
-          vacsBase.filter(col("off") >= lo && col("off") < hi),
-          Seq(col("event_id").desc))
-        .drop("off", "event_id", "rn")
-      ActivitySnapshotPipeline.docFrameTagged(b.unionByName(v))
-    }
-
-    def activityTick(fire: Long): TickResult = {
-      val lo = fire - Scheduler.ActivityPeriod
+    def activityTick(rows: Array[Row], fire: Long): TickResult = {
       val doc = ActivitySnapshotPipeline.docFromRow(
-        actFrame(lo, fire).head(), graft.sinks.SectionCap.BackendLimit)
+        rows.head, graft.sinks.SectionCap.BackendLimit)
       val wire = ProtoWire.zlib(ActivitySnapshotPipeline.encode(doc))
       val shipped = ship(wire, s"act-$fire", fire, compact = true)
       val c = ActivitySnapshotPipeline.decodeCounts(shipped)
@@ -317,18 +376,11 @@ object DaemonSoak {
       TickResult(c.nBackends, c.nRoles + c.nDbs + c.nQueries + c.nRels, ok)
     }
 
-    val hfFrame = prepared { (lo, hi) =>
-      CatalogSynth.statementStatsFromEvents(
-        folded.filter(col("off") >= lo && col("off") < hi))
-    }
-
-    def highFreqTick(fire: Long): TickResult = {
-      val batch = hfFrame(hfPrev(fire), fire)
-        .collect().toIndexedSeq
+    def highFreqTick(rows: Array[Row]): TickResult = {
       var changed = 0L
       val qids = scala.collection.mutable.HashSet.empty[Long]
       var monotonic = true
-      batch.foreach { r =>
+      rows.foreach { r =>
         val key = (r.getAs[Number]("db_oid").longValue,
           r.getAs[Number]("user_oid").longValue,
           r.getAs[Number]("query_id").longValue,
@@ -366,23 +418,8 @@ object DaemonSoak {
       }
     }
 
-    val logFrame = prepared { (lo, hi) =>
-      val rendered = linesBase
-        .filter(col("off") >= lo && col("off") < hi)
-        .select(col("line").as("value"))
-      LogStreamPipeline.parse(rendered, graft.QueriesLog.Compiled)
-        .withColumn("classification",
-          graft.logsys.LogClassify.classify(col("content")))
-        .agg(
-          count(lit(1)).as("n"),
-          count_distinct(col("classification")).as("n_classes"),
-          coalesce(sum(when(col("pid") === -1L, 1L).otherwise(0L)), lit(0L))
-            .as("unparsed"))
-    }
-
-    def logTick(fire: Long): TickResult = {
-      val row =
-        logFrame(fire - Scheduler.LogDownloadPeriod, fire).head()
+    def logTick(rows: Array[Row]): TickResult = {
+      val row = rows.head
       TickResult(row.getAs[Long]("n"), row.getAs[Long]("n_classes"),
         row.getAs[Long]("unparsed") == 0L)
     }
@@ -395,20 +432,21 @@ object DaemonSoak {
       // regex filter, measured ~11% of the cadence worker's driver-side
       // CPU across 270 ticks (thread-local, so each cadence worker
       // labels only its own jobs)
-      ts.sparkContext.setCallSite(s"soak:${t.cadence}")
+      live.ts.sparkContext.setCallSite(s"soak:${t.cadence}")
       val tn0 = System.nanoTime()
+      def window(rows: (Long, Long) => Array[Row]) =
+        rows(windowStart(t), t.fireAt)
       val r = t.cadence match {
-        case Scheduler.Activity => activityTick(t.fireAt)
-        case Scheduler.HighFreq => highFreqTick(t.fireAt)
+        case Scheduler.Activity => activityTick(window(actRows), t.fireAt)
+        case Scheduler.HighFreq => highFreqTick(window(hfRows))
         case Scheduler.Full => fullTick(t.fireAt)
-        case Scheduler.LogDownload => logTick(t.fireAt)
+        case Scheduler.LogDownload => logTick(window(logRows))
         case other => sys.error(s"unknown cadence $other")
       }
       results.put((t.cadence, t.fireAt), r)
       onTickNanos(t, System.nanoTime() - tn0)
     }, tickBudgetMs)
-    Seq(folded, backsBase, vacsBase, linesBase)
-      .foreach(_.unpersist(blocking = false))
+    live.release()
     // shipping accounting: one real grant fetch (plus the refused
     // wrong-key probe) served every completed upload; each completed
     // activity/full tick stored exactly one document and submitted it

@@ -1,12 +1,16 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.functions.lit
+
 import graft.streaming.{DaemonSoak, Scheduler}
 
 /** The concurrent daemon composition (`runner/run.go:285-309`): ≥3 full
   * 600 s cycles of all four cadences from one SparkSession, with the
   * overlap-skip observed in the executed run, per-tick wire integrity,
-  * deadline cancellation under an injected stall, and session-level
-  * memory stability across cycles. */
+  * deadline cancellation under an injected stall, session-level
+  * memory stability across cycles, and the plan-once tick frames. */
 class DaemonSoakSpec extends SparkSpec {
 
   // one full 3-cycle soak, shared by the assertions below
@@ -67,5 +71,34 @@ class DaemonSoakSpec extends SparkSpec {
     // the stall neither starved nor failed the rest of the cadence
     assert(act.filter(_.fireAt > 10L).forall(_.outcome == "completed"))
     assert(reports.count(_.outcome == Scheduler.TimedOut) == 1)
+  }
+
+  test("compiled tick frames return the freshly planned rows of every tick, generating no code") {
+    val horizon = 600L
+    val sf001 = java.nio.file.Paths.get(Sf).resolveSibling("sf0.01").toString
+    val live = new DaemonSoak.LiveServer(spark, sf001, horizon)
+    try {
+      val (ticks, windowStart) = DaemonSoak.plan(horizon)
+      def sorted(rows: Array[Row]): Seq[Row] = rows.toSeq.sortBy(_.toString)
+      Seq[(String, (Column, Column) => DataFrame)](
+        Scheduler.Activity -> live.activity,
+        Scheduler.HighFreq -> live.highFreq,
+        Scheduler.LogDownload -> live.logs).foreach { case (cad, build) =>
+        val windows = ticks.filter(_.cadence == cad).sortBy(_.fireAt)
+          .map(t => (windowStart(t), t.fireAt))
+        val rowsOf = DaemonSoak.compiled(build)
+        // the tick session's conf reaches the tasks: interpreted
+        // evaluation, so no tick compiles a class for its literals
+        val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        val got = windows.map { case (lo, hi) => rowsOf(lo, hi) }
+        assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiles,
+          s"$cad ticks generated code")
+        assert(got.exists(_.nonEmpty))
+        windows.zip(got).foreach { case ((lo, hi), rows) =>
+          assert(sorted(rows) == sorted(build(lit(lo), lit(hi)).collect()),
+            s"$cad [$lo, $hi)")
+        }
+      }
+    } finally live.release()
   }
 }

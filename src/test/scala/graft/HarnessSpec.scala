@@ -86,4 +86,17 @@ class HarnessSpec extends SparkSpec {
     assert(offenders.isEmpty, offenders.mkString("\n"))
     assert(files.exists(_.getFileName.toString == "Harness.scala"))
   }
+
+  test("every in-process HTTP endpoint is created by LocalHttp") {
+    // split so this file does not match itself
+    val create = "HttpServer" + ".create("
+    val sites = Seq("src/main/scala", "src/test/scala").flatMap { root =>
+      Files.walk(Paths.get(root)).iterator.asScala
+        .filter(_.toString.endsWith(".scala")).toSeq
+    }.flatMap { f =>
+      java.util.regex.Pattern.quote(create).r.findAllIn(Files.readString(f))
+        .map(_ => f.getFileName.toString)
+    }
+    assert(sites == Seq("LocalHttp.scala"), sites.mkString("\n"))
+  }
 }
