@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
@@ -13,14 +15,17 @@ import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
   * sorted value so the encoding is deterministic under any partitioning /
   * parallelism (insertion order is not reproducible on a cluster).
   *
-  * Scale notes: the index is assigned with a distributed range-partitioned
-  * sort + `zipWithIndex` — NOT a global `Window.orderBy` (which would move
-  * every distinct value to a single partition; fatal when the dimension is
-  * query fingerprints with millions of distinct values at 100 TB). The
-  * fact-side join is broadcast only when the measured dim cardinality is
-  * under `maxBroadcastRows` (an RDD-backed dim has no stats, so an
-  * unconditional hint would driver-collect a million-row dimension);
-  * larger dims take a shuffled equi-join on the dimension value.
+  * Scale notes: a dim whose distinct values number at most
+  * `maxBroadcastRows` is numbered on the driver — one `limit(max + 1)`
+  * collect of the sorted distinct values, numbered in order into a
+  * local relation that carries its size for the broadcast join and
+  * persists nothing. Only past that cap is the index assigned with a
+  * distributed range-partitioned sort + `zipWithIndex` — NOT a global
+  * `Window.orderBy` (which would move every distinct value to a single
+  * partition; fatal when the dimension is query fingerprints with
+  * millions of distinct values at 100 TB) — and the fact side then
+  * takes a shuffled equi-join on the dimension value. Both paths give
+  * the same ids.
   */
 object DimEncode {
 
@@ -31,19 +36,31 @@ object DimEncode {
 
   /** (dim table, distinct-count) for one dimension column: (value, idx)
     * with 1-based dense index by sorted value (nulls first). */
-  private def dimTable(df: DataFrame, dimCol: String): (DataFrame, Long) = {
-    val spark = df.sparkSession
+  private def dimTable(df: DataFrame, dimCol: String,
+      maxRows: Long): (DataFrame, Long) = {
     val idxCol = s"${dimCol}_idx"
-    val valueField = df.select(dimCol).schema.fields.head
-    // distinct + range-partitioned sort stay distributed; zipWithIndex
-    // assigns contiguous ids with one lightweight partition-size pass.
+    val schema = StructType(Seq(df.select(dimCol).schema.fields.head,
+      StructField(idxCol, IntegerType, nullable = false)))
     val sorted = df.select(col(dimCol)).distinct().orderBy(col(dimCol))
+    // one bounded probe: an orderBy + limit plan is a top-k, so driver
+    // memory stays cap-sized whatever the dim's cardinality
+    val head = sorted.limit(math.min(maxRows, Int.MaxValue - 1L).toInt + 1)
+      .collect()
+    if (head.length <= maxRows) {
+      val rows = head.toSeq.zipWithIndex.map { case (r, i) => Row(r.get(0), i + 1) }
+      (df.sparkSession.createDataFrame(rows.asJava, schema), head.length.toLong)
+    } else numberDistributed(sorted, schema)
+  }
+
+  /** The over-cap path: (value, idx) numbered by partition order of the
+    * range-partitioned sort. */
+  private def numberDistributed(sorted: DataFrame,
+      schema: StructType): (DataFrame, Long) = {
     // cache the sorted dim rows: a dim feeds several downstream ACTIONS
-    // (the fact join, direct reference-array collects, broadcasts in
-    // concurrent snapshot branches), and an uncached RDD re-runs the
-    // fact-scale distinct + range sort once per consumer. The sizes
-    // pass below materializes the blocks; dim cardinality is bounded by
-    // the distinct count, so MEMORY_AND_DISK degrades gracefully.
+    // (the fact join, direct reference-array collects), and an uncached
+    // RDD re-runs the fact-scale distinct + range sort once per
+    // consumer. The sizes pass below materializes the blocks;
+    // MEMORY_AND_DISK degrades gracefully.
     val sortedRdd = sorted.rdd
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // one partition-size pass replaces BOTH the separate count() job and
@@ -53,15 +70,12 @@ object DimEncode {
     val sizes = sortedRdd
       .mapPartitionsWithIndex((i, it) => Iterator((i, it.size)))
       .collect().sortBy(_._1).map(_._2.toLong)
-    val dimRows = sizes.sum
     val offsets = sizes.scanLeft(0L)(_ + _)
     val indexed = sortedRdd.mapPartitionsWithIndex { (pi, it) =>
       var k = offsets(pi)
       it.map { r => k += 1; Row(r.get(0), k.toInt) }
     }
-    val dim = spark.createDataFrame(indexed,
-      StructType(Seq(valueField, StructField(idxCol, IntegerType, nullable = false))))
-    (dim, dimRows)
+    (sorted.sparkSession.createDataFrame(indexed, schema), sizes.sum)
   }
 
   /** Returns (dim, fact): dim = (value, idx) with 1-based dense index by
@@ -69,7 +83,7 @@ object DimEncode {
     * Null-safe join: a NULL dimension value still gets an index. */
   def encode(df: DataFrame, dimCol: String,
       maxBroadcastRows: Long = DefaultMaxBroadcastRows): (DataFrame, DataFrame) = {
-    val (dim, dimRows) = dimTable(df, dimCol)
+    val (dim, dimRows) = dimTable(df, dimCol, maxBroadcastRows)
     val dimSide = if (dimRows <= maxBroadcastRows) broadcast(dim) else dim
     val fact = df.join(dimSide, df(dimCol) <=> dim(dimCol))
       .drop(dim(dimCol))
@@ -77,18 +91,19 @@ object DimEncode {
   }
 
   /** Encode several dimensions of one fact table. Each dim build runs
-    * its distinct→sort→count→zipWithIndex jobs on a separate thread, so
-    * the three-dim snapshot assembly overlaps its per-dim job latency
-    * (Spark schedules concurrent jobs from one session freely) instead
-    * of paying it serially; the fact then joins every dim in a single
-    * plan. Returns (dims by column, fact with all `<col>_idx` added). */
+    * its jobs (the probe, and past the cap the distributed numbering) on
+    * a separate thread, so the three-dim snapshot assembly overlaps its
+    * per-dim job latency (Spark schedules concurrent jobs from one
+    * session freely) instead of paying it serially; the fact then joins
+    * every dim in a single plan. Returns (dims by column, fact with all
+    * `<col>_idx` added). */
   def encodeAll(df: DataFrame, dimCols: Seq[String],
       maxBroadcastRows: Long = DefaultMaxBroadcastRows)
       : (Map[String, DataFrame], DataFrame) = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
-    val futures = dimCols.map(c => c -> Future(dimTable(df, c)))
+    val futures = dimCols.map(c => c -> Future(dimTable(df, c, maxBroadcastRows)))
     val dims = futures.map { case (c, f) => c -> Await.result(f, Duration.Inf) }
     var fact = df
     dims.foreach { case (c, (dim, rows)) =>

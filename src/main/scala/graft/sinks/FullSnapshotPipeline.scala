@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{BoundedSession, Tables}
 import graft.functions.PgFns
 import graft.operators.{Diff, DimEncode}
 import graft.sources.CatalogSynth
@@ -25,8 +25,9 @@ import graft.sources.CatalogSynth
   *   verification (`output/full.go:73-97` length equality PLUS every
   *   stat idx resolving) → the decoded document as a DataFrame.
   *
-  * Everything distributed stays distributed (diffs, grouping, dims are
-  * Spark plans); only the assembled DOCUMENT is collected — the
+  * Diffs and grouping are Spark plans; the dims are numbered on the
+  * driver under their broadcast cap ([[DimEncode]]), and only the
+  * assembled DOCUMENT is collected — the
   * snapshot is the reference's bounded per-server artifact (dims +
   * one tick's grouped facts), and the bound is ENFORCED: every
   * section collect runs through a [[SectionCap]] guard (schema 5000
@@ -152,70 +153,75 @@ object FullSnapshotPipeline {
       schemaTableLimit: Int = SectionCap.SchemaTableLimit,
       statementLimit: Int = SectionCap.StatementLimit)
 
-  /** Run the distributed stages and collect the bounded sections, each
-    * sorted by its dimension index. The four heavy branches (statement
-    * groups, relations+indexes, functions, database stats) have no
-    * cross-dependencies beyond the tiny database dim, so each runs in
-    * its own future — Spark schedules their jobs concurrently and the
-    * wall-clock is the longest branch, not the sum (same overlap trick
-    * as DimEncode.encodeAll). */
+  /** Run the stages and collect the bounded sections, each sorted by its
+    * dimension index. The document is bounded per server, so the
+    * stages run on the [[BoundedSession]] derived from `s`. The
+    * four heavy branches (statement groups, relations+indexes,
+    * functions, database stats) have no cross-dependencies beyond the
+    * tiny database dim, so each runs in its own future — Spark
+    * schedules their jobs concurrently and the wall-clock is the
+    * longest branch, not the sum (same overlap trick as
+    * DimEncode.encodeAll). Nothing stays persisted afterwards. */
   def assemble(s: SparkSession, dir: String, caps: Caps = Caps()): Doc = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
     def bg[T](f: => T): Future[T] = Future(f)
+    val bs = BoundedSession(s)
 
-    // J5: reference arrays built scale-safe (DimEncode sorts + zips, no
-    // global window), then every fact carries the small idx. The db dim
-    // is the one shared input — built up front, broadcast everywhere.
-    val dbs = CatalogSynth.databases(s, dir)
+    // J5: reference arrays (DimEncode numbers each cap-bounded dim on
+    // the driver), then every fact carries the small idx. The db dim is
+    // the one shared input — built up front, broadcast everywhere.
+    val dbs = CatalogSynth.databases(bs, dir)
     val (dbDim, dbFact) = DimEncode.encode(dbs, "db_oid")
 
     // -------- branch A: statement groups → role dim → query dim
     val fQ = bg {
-      // the grouped statement facts feed FOUR consumers (role dim
-      // build, qkey dim build, the dim-resolution join, the final
-      // collect) — materialize once or each re-runs the event-scale
-      // diff+fingerprint lineage; the table is #groups-sized (bounded
-      // by the per-server query cap), the reference's TransientState
-      val groups0 = queryGroups(s, dir).localCheckpoint(eager = false)
-      val (roleDim, groupsR) = DimEncode.encode(groups0, "user_oid")
-      val withDb = groupsR.join(broadcast(dbDim), Seq("db_oid"))
-      val (_, qFact) = DimEncode.encode(
-        withDb.withColumn("qkey",
-          struct(col("db_oid"), col("user_oid"), col("toplevel"), col("fp"))),
-        "qkey")
-      val roleRows = roleDim.select("user_oid_idx", "user_oid")
-        .orderBy("user_oid_idx").collect().toIndexedSeq
-      // statement cap (statements.go:78-110 holds entries near
-      // pg_stat_statements.max): over the limit the query section is
-      // dropped, never collected unbounded
-      val qSec = SectionCap.guarded(
-        qFact.select(
-          col("qkey_idx"), col("db_oid_idx"), col("user_oid_idx"),
-          col("toplevel"), col("fp"), col("normalized_query"),
-          col("query_ids"), col("calls"), col("total_ms"))
-          .orderBy("qkey_idx"),
-        caps.statementLimit, "statements", "statement")
-      (roleRows, qSec)
+      // the grouped statement facts feed THREE actions (the role dim
+      // probe, the qkey dim probe, the section collect) — cached once,
+      // or each re-runs the event-scale diff+fingerprint lineage, and
+      // released when the branch is done; the table is #groups-sized
+      // (bounded by the per-server query cap), the reference's
+      // TransientState
+      val groups0 = queryGroups(bs, dir).persist()
+      try {
+        val (roleDim, groupsR) = DimEncode.encode(groups0, "user_oid")
+        val withDb = groupsR.join(broadcast(dbDim), Seq("db_oid"))
+        val (_, qFact) = DimEncode.encode(
+          withDb.withColumn("qkey",
+            struct(col("db_oid"), col("user_oid"), col("toplevel"), col("fp"))),
+          "qkey")
+        val roleRows = roleDim.select("user_oid_idx", "user_oid")
+          .orderBy("user_oid_idx").collect().toIndexedSeq
+        // statement cap (statements.go:78-110 holds entries near
+        // pg_stat_statements.max): over the limit the query section is
+        // dropped, never collected unbounded
+        val qSec = SectionCap.guarded(
+          qFact.select(
+            col("qkey_idx"), col("db_oid_idx"), col("user_oid_idx"),
+            col("toplevel"), col("fp"), col("normalized_query"),
+            col("query_ids"), col("calls"), col("total_ms"))
+            .orderBy("qkey_idx"),
+          caps.statementLimit, "statements", "statement")
+        (roleRows, qSec)
+      } finally groups0.unpersist()
     }
 
     // -------- branch B: relations → D4 diff → indexes (D5, chained
     // through the relation dim: IndexInformation carries relation_idx)
     val fRel = bg {
-      val rels = CatalogSynth.relations(s, dir)
+      val rels = CatalogSynth.relations(bs, dir)
       val (relDim, relFact) = DimEncode.encode(rels, "rel_oid")
       val relRefs = relFact.join(broadcast(dbDim), Seq("db_oid"))
-        .localCheckpoint(eager = false) // feeds refs collect + idx join
       val relDiff = Diff.relationDiff(
-        CatalogSynth.relationStatsTimeline(s, dir),
+        CatalogSynth.relationStatsTimeline(bs, dir),
         keyCols = Seq("rel_oid"), snapCol = "snap",
         counterCols = Seq("seq_scan", "idx_scan"),
         gaugeCols = Seq("n_live_tup"), lockedCol = "locked")
         .filter(col("snap") === 2)
         .join(broadcast(relDim), Seq("rel_oid"))
       val idxDiff = Diff.relationDiff(
-        CatalogSynth.indexStatsTimeline(s, dir),
+        CatalogSynth.indexStatsTimeline(bs, dir),
         keyCols = Seq("index_oid"), snapCol = "snap",
         counterCols = Seq("idx_scan", "idx_tup_read"),
         gaugeCols = Seq("size_bytes"), lockedCol = "locked")
@@ -256,7 +262,7 @@ object FullSnapshotPipeline {
     // relations' database/schema derivation rules)
     val fFn = bg {
       val fnDiff = Diff.counterDiff(
-        CatalogSynth.functionStatsTimeline(s, dir),
+        CatalogSynth.functionStatsTimeline(bs, dir),
         keyCols = Seq("func_oid"), orderCols = Seq("snap"),
         counterCols = Seq("calls", "total_time_ms", "self_time_ms"))
         .filter(col("snap") === 2)
@@ -280,7 +286,7 @@ object FullSnapshotPipeline {
     // -------- branch D: database stats (D6 diff) + small sections
     val fDbStat = bg {
       Diff.counterDiff(
-        Tables.nation(s, dir)
+        Tables.nation(bs, dir)
           .select(col("n_nationkey"),
             explode(sequence(lit(0L), lit(2L))).as("snap"))
           .select(
@@ -298,18 +304,18 @@ object FullSnapshotPipeline {
           col("xact_rollback_delta"), col("temp_files"))
         .orderBy("db_oid_idx").collect().toIndexedSeq
     }
-    val fCollectedAt = bg(Tables.events(s, dir)
+    val fCollectedAt = bg(Tables.events(bs, dir)
       .agg(expr("unix_micros(max(ts)) div 1000000").as("s")).head.getLong(0))
     // -------- backend counts (`postgres_backend_counts.go`) + standbys
     // (`postgres_replication.go`): both SF-capped (a server has dozens
     // of backend-count groups and a handful of standbys, not 10⁵) —
     // raw facts collected distributed, dim idx resolution driver-side
     // once the role dim exists
-    val fBackendRaw = bg(Tables.part(s, dir)
+    val fBackendRaw = bg(Tables.part(bs, dir)
       .filter(col("p_partkey") % 11 === 0 && col("p_partkey") < 2200)
       .select(col("p_partkey").cast("long").as("pk"))
       .orderBy("pk").collect().map(_.getLong(0)).toIndexedSeq)
-    val fStandbyRaw = bg(Tables.supplier(s, dir)
+    val fStandbyRaw = bg(Tables.supplier(bs, dir)
       .filter(col("s_suppkey") < 5)
       .select(col("s_suppkey").cast("long").as("sk"))
       .orderBy("sk").collect().map(_.getLong(0)).toIndexedSeq)
@@ -318,7 +324,7 @@ object FullSnapshotPipeline {
     val fDbRows = bg(dbFact
       .select("db_oid_idx", "datname", "frozenxid", "temp_files")
       .orderBy("db_oid_idx").collect().toIndexedSeq)
-    val fSettings = bg(CatalogSynth.settings(s, dir).select("name", "setting")
+    val fSettings = bg(CatalogSynth.settings(bs, dir).select("name", "setting")
       .orderBy("name").collect().toIndexedSeq)
 
     val (roleRows, qSec) = Await.result(fQ, Duration.Inf)

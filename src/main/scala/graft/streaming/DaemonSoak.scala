@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-import graft.{LocalHttp, Tables}
+import graft.{BoundedSession, LocalHttp, Tables}
 import graft.logsys.LogSynth
 import graft.sinks.{ActivitySnapshotPipeline, FullSnapshotPipeline,
   ProtoWire, SnapshotTransport, SnapshotUpload}
@@ -165,23 +165,15 @@ object DaemonSoak {
   /** The simulated live system and the windowed frames the activity,
     * highfreq and log ticks read from it, on the soak's tick session.
     *
-    * The tick session: a 10 s tick over a bounded window is
-    * latency-critical, so per-stage adaptivity and 32-way shuffles of
-    * ~hundred-row frames only add scheduler round-trips (measured ~2.3x
-    * per tick). The full-snapshot cadence keeps the primary session —
-    * its corpus-scale plans want both. newSession shares the
-    * SparkContext and cache manager, so the cached bases below serve
-    * both sessions. */
+    * The tick session is [[BoundedSession]]: a 10 s tick over a bounded
+    * window is latency-critical, so per-stage adaptivity and wide
+    * shuffles of ~hundred-row frames only add scheduler round-trips
+    * (measured ~2.3x per tick), and generated code for a few hundred
+    * rows costs more than interpreting them (measured 2.4x per tick).
+    * The full-snapshot cadence derives the same policy inside
+    * [[FullSnapshotPipeline.assemble]]. */
   final class LiveServer(s: SparkSession, dir: String, horizon: Long) {
-    val ts: SparkSession = s.newSession()
-    ts.conf.set("spark.sql.adaptive.enabled", "false")
-    ts.conf.set("spark.sql.shuffle.partitions", "1")
-    // each tick's window bounds are inlined into generated code, so
-    // whole-stage codegen compiles a fresh class per tick (~200 ms) to
-    // run over a few hundred rows — interpreted mode wins that trade at
-    // any tick size the cadence contract allows (measured 2.4x/tick)
-    ts.conf.set("spark.sql.codegen.wholeStage", "false")
-    ts.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    val ts: SparkSession = BoundedSession(s)
 
     private val base = Tables.events(ts, dir)
       .withColumn("es", expr("unix_micros(ts) div 1000000"))

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions.lit
@@ -10,21 +12,30 @@ import graft.streaming.{DaemonSoak, Scheduler}
   * 600 s cycles of all four cadences from one SparkSession, with the
   * overlap-skip observed in the executed run, per-tick wire integrity,
   * deadline cancellation under an injected stall, session-level
-  * memory stability across cycles, and the plan-once tick frames. */
+  * memory stability across cycles, full snapshots that generate no
+  * code once warm, and the plan-once tick frames. */
 class DaemonSoakSpec extends SparkSpec {
+
+  // the JVM-wide generated-class count at the end of each full tick
+  private val compilesAfterFull =
+    new java.util.concurrent.ConcurrentSkipListMap[Long, Long]()
 
   // one full 3-cycle soak, shared by the assertions below
   private lazy val soak = {
     val sc = spark.sparkContext
-    val rddsBefore = sc.getPersistentRDDs.size
+    val rddsBefore = sc.getPersistentRDDs.keySet
     System.gc()
     val rt = Runtime.getRuntime
     val heapBefore = rt.totalMemory() - rt.freeMemory()
-    val (rows, reports) = DaemonSoak.run(spark, Sf)
+    val (rows, reports) = DaemonSoak.run(spark, Sf, onTickNanos = (t, _) =>
+      if (t.cadence == Scheduler.Full) compilesAfterFull.put(t.fireAt,
+        CodegenMetrics.METRIC_COMPILATION_TIME.getCount))
+    // read before the GC: once its objects are collected, the context
+    // cleaner would free an RDD the program left persisted
+    val rddsAfter = sc.getPersistentRDDs.keySet
     System.gc()
     val heapAfter = rt.totalMemory() - rt.freeMemory()
-    (rows, reports, rddsBefore, sc.getPersistentRDDs.size,
-      heapBefore, heapAfter)
+    (rows, reports, rddsBefore, rddsAfter, heapBefore, heapAfter)
   }
 
   test("3 cycles: every planned tick of all four cadences ran to completion") {
@@ -52,12 +63,22 @@ class DaemonSoakSpec extends SparkSpec {
 
   test("memory stable across cycles: caches released, heap returns to baseline") {
     val (_, _, rddsBefore, rddsAfter, heapBefore, heapAfter) = soak
-    // the soak's own cached bases are released; the only tolerated
-    // residue is the full pipeline's internal per-run checkpoints
-    assert(rddsAfter - rddsBefore <= 20,
-      s"persistent RDDs grew $rddsBefore -> $rddsAfter")
+    // the soak's cached bases are released, and a full snapshot
+    // releases what it caches: no RDD the soak persisted is left
+    val left = rddsAfter -- rddsBefore
+    assert(left.isEmpty, s"persistent RDDs left by the soak: $left")
     val growthMb = (heapAfter - heapBefore) / 1024 / 1024
     assert(growthMb < 512, s"driver heap grew ${growthMb} MB over 3 cycles")
+  }
+
+  test("full snapshots after the first generate no code") {
+    soak
+    val compiles = compilesAfterFull.values.asScala.toSeq
+    assert(compiles.size == 3)
+    // the assembly runs interpreted: from the end of the first full tick
+    // to the end of the third, no cadence compiled a class
+    assert(compiles.last == compiles.head,
+      s"compilation count at the end of each full tick: $compiles")
   }
 
   test("deadline cancellation: a stalled tick is cancelled at its budget, later ticks still run") {

@@ -1,10 +1,13 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
 import graft.operators.DimEncode
 
-/** J5 — dimension encoding: broadcast gating, null handling, integrity. */
+/** J5 — dimension encoding: broadcast gating, null handling, integrity,
+  * and the driver-numbered path against the distributed one. */
 class DimEncodeSpec extends SparkSpec {
 
   private def sampleDf = {
@@ -50,5 +53,50 @@ class DimEncodeSpec extends SparkSpec {
     // nulls first in Spark ascending sort
     assert(rows.head.isNullAt(0))
     assert(rows.drop(1).map(_.getString(0)).toSeq === Seq("a", "b", "c"))
+  }
+
+  // statement-group-shaped facts: a nullable string dim with duplicates,
+  // and a struct key shaped like the full snapshot's qkey, with null
+  // fields and a null key
+  private def groupsDf: DataFrame = {
+    import spark.implicits._
+    (0 until 40).map { i =>
+      (if (i % 7 == 0) None else Some(s"u${i % 9}"), i % 3, i % 5,
+        i % 2 == 0, if (i % 11 == 0) None else Some((i % 6).toLong), i)
+    }.toDF("user", "db_oid", "user_oid", "toplevel", "fp", "v")
+      .withColumn("qkey", when(col("v") =!= 13, struct(col("db_oid"),
+        col("user_oid"), col("toplevel"), col("fp"))))
+  }
+
+  private def isLocal(dim: DataFrame): Boolean =
+    dim.queryExecution.analyzed.isInstanceOf[LocalRelation]
+
+  private def sorted(df: DataFrame): Seq[Row] =
+    df.collect().toSeq.sortBy(_.toString)
+
+  test("driver-numbered dims match the distributed path and persist nothing: nulls, duplicates, struct keys, n = cap and n = cap + 1") {
+    val sc = spark.sparkContext
+    Seq("user", "qkey").foreach { c =>
+      val df = groupsDf
+      val n = df.select(c).distinct().count()
+      // n = cap: numbered on the driver; n = cap + 1: distributed
+      val persisted = sc.getPersistentRDDs.keySet
+      val (dimD, factD) = DimEncode.encode(df, c, maxBroadcastRows = n)
+      assert(isLocal(dimD), s"$c: n = cap must number on the driver")
+      val idx = s"${c}_idx"
+      val dimRows = dimD.orderBy(idx).collect().toSeq
+      val factRows = sorted(factD)
+      assert(sc.getPersistentRDDs.keySet == persisted, c)
+      val (dimS, factS) = DimEncode.encode(df, c, maxBroadcastRows = n - 1)
+      assert(!isLocal(dimS), s"$c: n = cap + 1 must take the distributed path")
+      assert(dimRows == dimS.orderBy(idx).collect().toSeq, c)
+      assert(dimD.schema == dimS.schema, c)
+      assert(factRows == sorted(factS), c)
+      assert(factD.count() == 40)
+      assert(DimEncode.checkIntegrity(dimD, factD, c))
+      // ids are dense and 1-based, the null key first
+      assert(dimRows.map(_.getInt(1)) == (1 to n.toInt))
+      assert(dimRows.head.isNullAt(0))
+    }
   }
 }

@@ -167,7 +167,10 @@ class FullSnapshotSpec extends SparkSpec {
   }
 
   test("full pipeline on testdata: every query group survives the wire") {
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
     val doc = P.assemble(spark, Sf)
+    // the assembly releases what it caches and persists no dim
+    assert(spark.sparkContext.getPersistentRDDs.keySet -- persisted == Set.empty)
     val df = P.decodeVerify(spark, ProtoWire.zlib(P.encode(doc)))
     val rows = df.collect()
     assert(rows.length === doc.queryRows.length)

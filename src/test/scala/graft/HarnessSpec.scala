@@ -87,6 +87,16 @@ class HarnessSpec extends SparkSpec {
     assert(files.exists(_.getFileName.toString == "Harness.scala"))
   }
 
+  test("the bounded-work session policy is defined once, in BoundedSession") {
+    val key = java.util.regex.Pattern.quote("spark.sql.codegen.factoryMode")
+    val sites = Files.walk(Paths.get("src/main/scala")).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+      .flatMap { f =>
+        key.r.findAllIn(Files.readString(f)).map(_ => f.getFileName.toString)
+      }
+    assert(sites == Seq("BoundedSession.scala"), sites.mkString("\n"))
+  }
+
   test("every in-process HTTP endpoint is created by LocalHttp") {
     // split so this file does not match itself
     val create = "HttpServer" + ".create("
