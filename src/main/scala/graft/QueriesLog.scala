@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.PgFns
 import graft.logsys.{LogClassify, LogPrefix, LogSynth}
+import graft.streaming.{Drain, LogStreamPipeline}
 
 /** Log-pipeline query surface (SURVEY §2.8/§2.9): prefix parse,
   * classification, query-sample extraction + the flagship "top queries by
@@ -170,7 +171,6 @@ object QueriesLog {
   // deterministically without waiting on event-time timeouts
   // (runner/logs.go:236-286, logs/stream/stream.go:240-312).
   def w5StreamBatch(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val tmp = scratchDir("graft_w5")
     val inDir = s"$tmp/in"; val outDir = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
     val sentinels = LogSynth.lines(s, dir)
@@ -192,36 +192,15 @@ object QueriesLog {
     LogSynth.renderedLines(s, dir).select("line").unionByName(sentinels)
       .unionByName(orphans)
       .write.mode("overwrite").text(inDir)
-    graft.streaming.LogStreamPipeline.configureFor(s)
-    val analyzed = graft.streaming.LogStreamPipeline.analyzed(
-      s.readStream.text(inDir), Compiled)
-    // pre-create outDir with the pipeline schema so the read below
-    // succeeds even if the stream commits zero micro-batches
-    s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      analyzed.schema).write.mode("overwrite").parquet(outDir)
-    // Stream-scoped tuning, restored after the drain: 8 state partitions
-    // (the state here is tiny — per-pid pendings — and each partition
-    // pays a per-batch state-store commit), and no trailing no-data
-    // micro-batch (sentinels, not timeouts, flush the real pendings, so
-    // the extra batch only re-plans the pipeline to emit rows the rollup
-    // filters out anyway).
-    val oldParts = s.conf.get("spark.sql.shuffle.partitions")
-    val oldNoData = s.conf.get(
-      "spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    try {
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      val q = analyzed.writeStream
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          b.write.mode("append").parquet(outDir); () }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .outputMode("append")
-        .start()
-      q.awaitTermination()
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", oldParts)
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", oldNoData)
+    // 8 state partitions (the state here is tiny — per-pid pendings —
+    // and each partition pays a per-batch state-store commit), and no
+    // trailing no-data micro-batch (sentinels, not timeouts, flush the
+    // real pendings, so the extra batch only re-plans the pipeline to
+    // emit rows the rollup filters out anyway)
+    Drain(s, ckpt, outDir, Drain.partitions(8) ++ Drain.noDataBatches(false)) {
+      ss =>
+        LogStreamPipeline.configureFor(ss)
+        LogStreamPipeline.analyzed(ss.readStream.text(inDir), Compiled)
     }
     // W7 discard counter (the poison lines surfaced by the stitcher's
     // dead-letter channel) and the watermark-advancer bound, in ONE
@@ -250,26 +229,12 @@ object QueriesLog {
       lit(-999).as("classification"), lit("ADVANCER").as("class_name"))
       .write.mode("append").parquet(outDir)
     val out2 = s"$tmp/out2"; val ckpt2 = s"$tmp/ckpt2"
-    val bridged = s.readStream.schema(s.read.parquet(outDir).schema)
-      .parquet(outDir)
-    val wcc = graft.streaming.LogStreamPipeline.windowedClassCounts(bridged)
-    s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      wcc.schema).write.mode("overwrite").parquet(out2)
-    val oldParts2 = s.conf.get("spark.sql.shuffle.partitions")
-    try {
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-      val q2 = wcc.writeStream
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          b.write.mode("append").parquet(out2); () }
-        .option("checkpointLocation", ckpt2)
-        .trigger(Trigger.AvailableNow())
-        .outputMode("append")
-        .start()
-      q2.awaitTermination()
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", oldParts2)
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", oldNoData)
+    val bridgedSchema = s.read.parquet(outDir).schema
+    Drain(s, ckpt2, out2, Drain.partitions(8) ++ Drain.noDataBatches(true)) {
+      ss =>
+        LogStreamPipeline.configureFor(ss)
+        LogStreamPipeline.windowedClassCounts(
+          ss.readStream.schema(bridgedSchema).parquet(outDir))
     }
     // helper rows aggregate into their own groups: dead-letter lines at
     // the epoch-0 window (a raw continuation carries no event time),
@@ -365,7 +330,6 @@ object QueriesLog {
   // stateful form knows). (user_id, ts) is unique in the corpus, so
   // orderTs alone is a total order per key.
   def w11StreamDiff(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     import s.implicits._
     val tmp = scratchDir("graft_w11")
     val inDir = s"$tmp/in"; val outDir = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
@@ -374,23 +338,10 @@ object QueriesLog {
       col("ts").as("orderTs"),
       map(lit("value"), col("value")).as("counters"))
     rows.write.mode("overwrite").parquet(inDir)
-    val stream = s.readStream.schema(rows.schema).parquet(inDir)
-      .as[graft.streaming.StreamingDiff.DiffRow]
-    val diffed = graft.streaming.StreamingDiff(stream).toDF()
-    s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      diffed.schema).write.mode("overwrite").parquet(outDir)
-    val oldParts = s.conf.get("spark.sql.shuffle.partitions")
-    try {
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val q = diffed.writeStream
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          b.write.mode("append").parquet(outDir); () }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .outputMode("append")
-        .start()
-      q.awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", oldParts)
+    Drain(s, ckpt, outDir, Drain.partitions(8)) { ss =>
+      graft.streaming.StreamingDiff(ss.readStream.schema(rows.schema)
+        .parquet(inDir).as[graft.streaming.StreamingDiff.DiffRow]).toDF()
+    }
     val result = s.read.parquet(outDir)
       .select(col("key").cast("long").as("user_id"),
         unix_micros(col("orderTs")).as("ts_us"),
@@ -408,7 +359,6 @@ object QueriesLog {
   // min-id window: within one drain the stateful operator must agree
   // with it exactly.
   def dedupStream(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     import s.implicits._
     val tmp = scratchDir("graft_sdedup")
     val inDir = s"$tmp/in"; val outDir = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
@@ -427,36 +377,14 @@ object QueriesLog {
       .write.mode("overwrite").parquet(s"$inDir/b1")
     rows.filter(col("docId") >= mid).coalesce(1)
       .write.mode("overwrite").parquet(s"$inDir/b2")
-    new java.io.File(inDir).listFiles.filter(_.isDirectory).foreach { d =>
-      val t = if (d.getName == "b1") 1000000L else 2000000L
-      d.listFiles.filter(_.getName.endsWith(".parquet"))
-        // mtime is the batch-order contract: fail loudly on a
-        // filesystem that ignores the update instead of letting the
-        // file-source order (and every verdict) silently diverge
-        .foreach(f => require(f.setLastModified(t),
-          s"setLastModified unsupported on ${f.getAbsolutePath}"))
+    Drain.pinOrder(inDir)(d => if (d == "b1") 1000000L else 2000000L)
+    // RocksDB state store: per-fingerprint state off-heap
+    Drain(s, ckpt, outDir, Drain.partitions(4) ++ Drain.RocksDb) { ss =>
+      graft.streaming.StreamingDedup(ss.readStream.schema(rows.schema)
+        .option("maxFilesPerTrigger", 1)
+        .option("recursiveFileLookup", "true").parquet(inDir)
+        .as[graft.streaming.StreamingDedup.DocRow]).toDF()
     }
-    val stream = s.readStream.schema(rows.schema)
-      .option("maxFilesPerTrigger", 1)
-      .option("recursiveFileLookup", "true").parquet(inDir)
-      .as[graft.streaming.StreamingDedup.DocRow]
-    val tagged = graft.streaming.StreamingDedup(stream).toDF()
-    s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      tagged.schema).write.mode("overwrite").parquet(outDir)
-    val oldParts = s.conf.get("spark.sql.shuffle.partitions")
-    // RocksDB state store: per-fingerprint state off-heap, heap flat at
-    // any corpus-distinct count (default HDFS store holds it all in heap)
-    try graft.streaming.StreamingDedup.withRocksDb(s) {
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      val q = tagged.writeStream
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          b.write.mode("append").parquet(outDir); () }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .outputMode("append")
-        .start()
-      q.awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", oldParts)
     val result = s.read.parquet(outDir)
       .select(col("docId").as("doc_id"), col("fingerprint"),
         col("isFirst").as("is_first"), col("canonicalId").as("canonical_id"))
@@ -475,7 +403,6 @@ object QueriesLog {
   // batch-boundary-independent — gated by the same plain GROUP BY
   // oracle as the batch entry.
   def streamHeavyHitters(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     import s.implicits._
     val K = 200
     val tmp = scratchDir("graft_shh")
@@ -487,24 +414,11 @@ object QueriesLog {
       .select(explode(graft.functions.TextFns.words(col("text"))).as("w"))
       .select(pmod(h, lit(16L)).cast("int").as("grp"), col("w"))
     toks.repartition(2).write.mode("overwrite").parquet(inDir)
-    val stream = s.readStream.schema(toks.schema)
-      .option("maxFilesPerTrigger", 1).parquet(inDir)
-      .as[graft.streaming.StreamingHeavyHitters.Tok]
-    val cands = graft.streaming.StreamingHeavyHitters(stream, K).toDF()
-    s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      cands.schema).write.mode("overwrite").parquet(outDir)
-    val oldParts = s.conf.get("spark.sql.shuffle.partitions")
-    try {
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val q = cands.writeStream
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          b.write.mode("append").parquet(outDir); () }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .outputMode("update")
-        .start()
-      q.awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", oldParts)
+    Drain(s, ckpt, outDir, Drain.partitions(8), outputMode = "update") { ss =>
+      graft.streaming.StreamingHeavyHitters(ss.readStream.schema(toks.schema)
+        .option("maxFilesPerTrigger", 1).parquet(inDir)
+        .as[graft.streaming.StreamingHeavyHitters.Tok], K).toDF()
+    }
     val wlast = Window.partitionBy("grp").orderBy(col("gen").desc)
     val candWords = s.read.parquet(outDir)
       .withColumn("rn", row_number().over(wlast))
@@ -532,7 +446,6 @@ object QueriesLog {
   // arrival order, assembled after the drain. final_keep is the
   // conjunction the batch funnel verifies stage by stage.
   def streamCuration(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     import s.implicits._
     val tmp = scratchDir("graft_scur")
     val inDir = s"$tmp/in"; val outDir = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
@@ -542,50 +455,28 @@ object QueriesLog {
       .write.mode("overwrite").parquet(s"$inDir/b1")
     docs.filter(col("doc_id") >= mid).coalesce(1)
       .write.mode("overwrite").parquet(s"$inDir/b2")
-    // mtime decides maxFilesPerTrigger order: pin it explicitly
-    val fs = new java.io.File(inDir)
-    fs.listFiles().filter(_.isDirectory).foreach { d =>
-      val t = if (d.getName == "b1") 1000000L else 2000000L
-      d.listFiles().filter(_.getName.endsWith(".parquet"))
-        // mtime is the batch-order contract: fail loudly on a
-        // filesystem that ignores the update instead of letting the
-        // file-source order (and every verdict) silently diverge
-        .foreach(f => require(f.setLastModified(t),
-          s"setLastModified unsupported on ${f.getAbsolutePath}"))
-    }
+    Drain.pinOrder(inDir)(d => if (d == "b1") 1000000L else 2000000L)
     val benchFpsDf = docs.filter(col("doc_id") % 97 === 0)
       .select(explode(graft.functions.TextFns.winnowFingerprints(col("text")))
         .as("fp"))
       .distinct()
-    val stream = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", 1)
-      .option("recursiveFileLookup", "true").parquet(inDir)
     // the stream carries exactly the STATEFUL stage (first-seen vs all
     // history); the per-row gates are deterministic expressions that
-    // commute with arrival order, assembled after the drain
-    val tagged = graft.streaming.StreamingDedup(
-      stream.select(
-        graft.functions.TextFns.contentFingerprint(col("text"))
-          .as("fingerprint"),
-        col("doc_id").as("docId"),
-        expr("timestamp_millis(1700000000000 + doc_id)").as("ts"))
-        .as[graft.streaming.StreamingDedup.DocRow]).toDF()
-      .select(col("docId").as("doc_id"), col("isFirst").as("is_first"))
-    s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      tagged.schema).write.mode("overwrite").parquet(outDir)
-    val oldParts = s.conf.get("spark.sql.shuffle.partitions")
-    // RocksDB state store for the stateful dedup stage (off-heap state)
-    try graft.streaming.StreamingDedup.withRocksDb(s) {
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      val q = tagged.writeStream
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          b.write.mode("append").parquet(outDir); () }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .outputMode("append")
-        .start()
-      q.awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", oldParts)
+    // commute with arrival order, assembled after the drain. RocksDB
+    // state store for the stateful dedup stage (off-heap state)
+    Drain(s, ckpt, outDir, Drain.partitions(4) ++ Drain.RocksDb) { ss =>
+      graft.streaming.StreamingDedup(
+        ss.readStream.schema(docs.schema)
+          .option("maxFilesPerTrigger", 1)
+          .option("recursiveFileLookup", "true").parquet(inDir)
+          .select(
+            graft.functions.TextFns.contentFingerprint(col("text"))
+              .as("fingerprint"),
+            col("doc_id").as("docId"),
+            expr("timestamp_millis(1700000000000 + doc_id)").as("ts"))
+          .as[graft.streaming.StreamingDedup.DocRow]).toDF()
+        .select(col("docId").as("doc_id"), col("isFirst").as("is_first"))
+    }
     val firsts = s.read.parquet(outDir)
     // contamination via broadcast hash join on fingerprint (O(1) per
     // probe — the literal-array scan this replaces was O(|bench fps|)
@@ -643,7 +534,6 @@ object QueriesLog {
     * recurrence). Batch order is pinned by file mtimes under
     * maxFilesPerTrigger=1, exactly like the other streaming drains. */
   def dedupStreamIndex(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val tmp = scratchDir("graft_sidx")
     val inDir = s"$tmp/in"; val outDir = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
     val docs = Tables.documents(s, dir)
@@ -656,16 +546,7 @@ object QueriesLog {
       delta.filter(col("batch") === k).coalesce(1)
         .write.mode("overwrite").parquet(s"$inDir/b$k")
     }
-    val fs = new java.io.File(inDir)
-    fs.listFiles().filter(_.isDirectory).foreach { d =>
-      val t = 1000000L * (1 + d.getName.stripPrefix("b").toInt)
-      d.listFiles().filter(_.getName.endsWith(".parquet"))
-        // mtime is the batch-order contract: fail loudly on a
-        // filesystem that ignores the update instead of letting the
-        // file-source order (and every verdict) silently diverge
-        .foreach(f => require(f.setLastModified(t),
-          s"setLastModified unsupported on ${f.getAbsolutePath}"))
-    }
+    Drain.pinOrder(inDir)(d => 1000000L * (1 + d.stripPrefix("b").toInt))
     val verdictSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("doc_id",
         org.apache.spark.sql.types.LongType),
@@ -677,21 +558,12 @@ object QueriesLog {
         org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("est_jaccard",
         org.apache.spark.sql.types.DoubleType)))
-    s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      verdictSchema).write.mode("overwrite").parquet(outDir)
-    val stream = s.readStream.schema(delta.schema)
-      .option("maxFilesPerTrigger", 1)
-      .option("recursiveFileLookup", "true").parquet(inDir)
-    val oldParts = s.conf.get("spark.sql.shuffle.partitions")
-    try {
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      val q = stream.writeStream
-        .foreachBatch(ingestBatch(s, idx, outDir) _)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", oldParts)
+    new java.io.File(outDir).mkdirs() // ingestBatch's commit markers land here
+    Drain.foreachBatch(s, ckpt, Drain.partitions(4)) { ss =>
+      ss.readStream.schema(delta.schema)
+        .option("maxFilesPerTrigger", 1)
+        .option("recursiveFileLookup", "true").parquet(inDir)
+    } { (b, batchId) => ingestBatch(b.sparkSession, idx, outDir)(b, batchId) }
     // verdicts live in per-batch subdirectories (the idempotence unit);
     // underscore-prefixed commit markers are hidden to the file index.
     // localCheckpoint pins the rows so the scratch tree (tmpfs) can be
@@ -757,7 +629,6 @@ object QueriesLog {
   }
 
   def dedupStreamLsh(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     import s.implicits._
     val tmp = scratchDir("graft_snd")
     val inDir = s"$tmp/in"; val outDir = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
@@ -781,36 +652,15 @@ object QueriesLog {
       .write.mode("overwrite").parquet(s"$inDir/b1")
     rows.filter(col("docId") >= mid).coalesce(1)
       .write.mode("overwrite").parquet(s"$inDir/b2")
-    new java.io.File(inDir).listFiles.filter(_.isDirectory).foreach { d =>
-      val t = if (d.getName == "b1") 1000000L else 2000000L
-      d.listFiles.filter(_.getName.endsWith(".parquet"))
-        // mtime is the batch-order contract: fail loudly on a
-        // filesystem that ignores the update instead of letting the
-        // file-source order (and every verdict) silently diverge
-        .foreach(f => require(f.setLastModified(t),
-          s"setLastModified unsupported on ${f.getAbsolutePath}"))
-    }
-    val stream = s.readStream.schema(rows.schema)
-      .option("maxFilesPerTrigger", 1)
-      .option("recursiveFileLookup", "true").parquet(inDir)
-      .as[graft.streaming.StreamingNearDup.BandRow]
-    val matches = graft.streaming.StreamingNearDup(stream).toDF()
-    s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      matches.schema).write.mode("overwrite").parquet(outDir)
-    val oldParts = s.conf.get("spark.sql.shuffle.partitions")
+    Drain.pinOrder(inDir)(d => if (d == "b1") 1000000L else 2000000L)
     // RocksDB state store: per-bucket holder state off-heap (see
     // StreamingNearDup's 100 TB note)
-    try graft.streaming.StreamingDedup.withRocksDb(s) {
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      val q = matches.writeStream
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          b.write.mode("append").parquet(outDir); () }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .outputMode("append")
-        .start()
-      q.awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", oldParts)
+    Drain(s, ckpt, outDir, Drain.partitions(4) ++ Drain.RocksDb) { ss =>
+      graft.streaming.StreamingNearDup(ss.readStream.schema(rows.schema)
+        .option("maxFilesPerTrigger", 1)
+        .option("recursiveFileLookup", "true").parquet(inDir)
+        .as[graft.streaming.StreamingNearDup.BandRow]).toDF()
+    }
     val edges = s.read.parquet(outDir)
       .filter(col("est") >= 0.7)
       .groupBy(col("docId").as("child"))

@@ -49,14 +49,24 @@ object Tables {
     * TIMESTAMP(MICROS, isAdjustedToUTC=false) (reads as TIMESTAMP_NTZ).
     * Normalize both to session-TZ TimestampType holding the same instants
     * the DuckDB oracle sees: all engine/oracle sessions run UTC, so the
-    * NTZ wall-clock cast is instant-preserving. */
+    * NTZ wall-clock cast is instant-preserving.
+    *
+    * Only a NANOS file sets `nanosAsLong` on the caller's session: schema
+    * inference fails on NANOS without it, and the scan reads it again
+    * when it runs. A MICROS file leaves the session's conf as it was. */
   private def eventsRaw(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr}
     import org.apache.spark.sql.types.{LongType, TimestampType}
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // memoized AFTER the nanosAsLong conf is set, so the cached schema
-    // is the one that conf produces (LongType for the NANOS generation)
-    val df = readMemoized(spark, s"$dir/events.parquet")
+    val nanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+    val path = s"$dir/events.parquet"
+    val schema = schemaMemo.computeIfAbsent(path, p =>
+      try spark.read.parquet(p).schema
+      catch { case scala.util.control.NonFatal(_) =>
+        spark.conf.set(nanosAsLong, "true")
+        spark.read.parquet(p).schema
+      })
+    if (schema("ts").dataType == LongType) spark.conf.set(nanosAsLong, "true")
+    val df = spark.read.schema(schema).parquet(path)
     df.schema("ts").dataType match {
       case LongType => df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
       case TimestampType => df

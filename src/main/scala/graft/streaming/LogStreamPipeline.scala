@@ -1,18 +1,16 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
-import org.apache.spark.sql.types._
 
 import graft.logsys.{LogClassify, LogPrefix}
 
 /** End-to-end streaming log pipeline (SURVEY §3.3): raw line stream →
   * prefix parse → per-pid stitch (3 s readiness watermark) → classify →
-  * 1-minute windowed classification counts, 10 s micro-batch trigger —
-  * the Structured-Streaming shape of the reference's
-  * `AnalyzeStreamInGroups` (`logs/stream/stream.go:240-312`) +
-  * 10 s tick (`runner/logs.go:30-31`).
+  * 1-minute windowed classification counts — the Structured-Streaming
+  * shape of the reference's `AnalyzeStreamInGroups`
+  * (`logs/stream/stream.go:240-312`), drained in micro-batches by
+  * [[Drain]].
   *
   * Sources are interchangeable streaming DataFrames with a single
   * `value` string column: `spark.readStream.text(dir)` (the file-tail
@@ -20,8 +18,6 @@ import graft.logsys.{LogClassify, LogPrefix}
   * source in production (S28–S31).
   */
 object LogStreamPipeline {
-
-  val Trigger10s: Trigger = Trigger.ProcessingTime("10 seconds")
 
   /** Parse a raw `value` line stream with a compiled prefix — one regex
     * pass per line via the group-array extractor (unmatched lines are
@@ -96,13 +92,4 @@ object LogStreamPipeline {
     spark.conf.set(
       "spark.sql.streaming.statefulOperator.checkCorrectness.enabled",
       "false")
-
-  /** Wire to a sink with the reference's 10 s micro-batch cadence. */
-  def writer(df: DataFrame, format: String, checkpoint: String)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    df.writeStream
-      .format(format)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger10s)
-      .outputMode("append")
 }

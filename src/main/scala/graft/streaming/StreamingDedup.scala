@@ -34,7 +34,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *     re-tags as first — windowed-dedup semantics; pick the TTL ≥
   *     the dedup horizon the corpus needs. `None` keeps full history.
   *   - **RocksDB state store**: the gate entries run under
-  *     `RocksDBStateStoreProvider` (see [[withRocksDb]]) so per-key
+  *     `RocksDBStateStoreProvider` (see [[Drain.RocksDb]]) so per-key
   *     state lives off-heap/on-disk and executor heap stays flat no
   *     matter how many distinct fingerprints the corpus has — the
   *     default HDFS-backed store keeps ALL state in executor heap and
@@ -50,36 +50,6 @@ object StreamingDedup {
   /** Default TTL for gate entries: generous enough that nothing evicts
     * inside one AvailableNow drain, finite so state is time-bounded. */
   val DefaultTtlMs: Long = 60L * 60 * 1000
-
-  /** Runs `body` with the session's state store provider switched to
-    * RocksDB, restoring the previous provider after. Conf is read at
-    * query START, so the switch must wrap `.start()`. */
-  def withRocksDb[T](spark: org.apache.spark.sql.SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    // changelog checkpointing: each commit uploads only that batch's
-    // key deltas instead of a full RocksDB snapshot (snapshots still
-    // happen, in the background every N commits) — the per-batch commit
-    // cost becomes O(changed keys), not O(total state), which is the
-    // difference between a fixed tax and a growing one on a 100 TB
-    // keyspace drained in many micro-batches
-    val clKey = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val old = spark.conf.getOption(key)
-    val oldCl = spark.conf.getOption(clKey)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set(clKey, "true")
-    try body
-    finally {
-      old match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
-      }
-      oldCl match {
-        case Some(v) => spark.conf.set(clKey, v)
-        case None    => spark.conf.unset(clKey)
-      }
-    }
-  }
 
   def apply(rows: Dataset[DocRow],
       ttlMs: Option[Long] = Some(DefaultTtlMs)): Dataset[Tagged] = {

@@ -33,7 +33,7 @@ import graft.operators.Dedup
   * 100 TB state discipline: state is one (id, sig) pair per DISTINCT
   * bucket — Bands × corpus-distinct band-slices entries of ~72 longs.
   * The gate entry runs under the RocksDB state store
-  * ([[StreamingDedup.withRocksDb]]) so that lives off-heap, and
+  * ([[Drain.RocksDb]]) so that lives off-heap, and
   * `ttlMs` applies the same watermark-driven event-time eviction as
   * [[StreamingDedup]] (bucket not touched for ttlMs of event time →
   * holder evicted; a later claimant re-claims, i.e. windowed

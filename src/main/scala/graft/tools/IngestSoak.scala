@@ -81,11 +81,8 @@ object IngestSoak {
       delta.filter(col("batch") === k).coalesce(1)
         .write.mode("overwrite").parquet(s"$inDir/b$k")
     }
-    new java.io.File(inDir).listFiles().filter(_.isDirectory).foreach { d =>
-      val t = 1000000L * (1 + d.getName.stripPrefix("b").toInt)
-      d.listFiles().filter(_.getName.endsWith(".parquet"))
-        .foreach(f => require(f.setLastModified(t), s"mtime pin failed: $f"))
-    }
+    graft.streaming.Drain.pinOrder(inDir)(d =>
+      1000000L * (1 + d.stripPrefix("b").toInt))
 
     val stream = spark.readStream.schema(delta.schema)
       .option("maxFilesPerTrigger", 1)

@@ -97,6 +97,26 @@ class HarnessSpec extends SparkSpec {
     assert(sites == Seq("BoundedSession.scala"), sites.mkString("\n"))
   }
 
+  test("stream conf is set once, in Drain, and never on a caller's session") {
+    val files = Files.walk(Paths.get("src/main/scala")).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    for (key <- Seq("stateStore.providerClass", "noDataMicroBatches.enabled")) {
+      val sites = files.flatMap { f =>
+        java.util.regex.Pattern.quote(key).r.findAllIn(Files.readString(f))
+          .map(_ => f.getFileName.toString)
+      }
+      assert(sites == Seq("Drain.scala"), s"$key: ${sites.mkString(", ")}")
+    }
+    val callers = files.filter(f =>
+      Set("QueriesLog.scala", "StreamingDedup.scala")(f.getFileName.toString))
+    assert(callers.size == 2)
+    val offenders = for {
+      f <- callers
+      p <- Seq("conf.set(", "conf.unset(") if Files.readString(f).contains(p)
+    } yield s"$f: $p"
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
   test("every in-process HTTP endpoint is created by LocalHttp") {
     // split so this file does not match itself
     val create = "HttpServer" + ".create("

@@ -5,7 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
-import graft.streaming.{StreamingDedup, StreamingNearDup}
+import graft.streaming.{Drain, StreamingDedup, StreamingNearDup}
 
 /** RocksDB state-growth soak (SURVEY §3.3): ≥100 micro-batches of key
   * churn through the stateful dedup operators, with the state store's
@@ -62,73 +62,71 @@ class StateSoakSpec extends SparkSpec {
   }
 
   test("exact-dedup state plateaus at the watermark horizon over 120 churned batches") {
-    implicit val sqlCtx = spark.sqlContext
+    val ss = Drain.session(spark, Drain.RocksDb)
+    implicit val sqlCtx = ss.sqlContext
     import spark.implicits._
     val input = MemoryStream[StreamingDedup.DocRow]
     val out = StreamingDedup(input.toDS(), ttlMs = Some(1000L))
-    StreamingDedup.withRocksDb(spark) {
-      val q = out.writeStream.format("memory").queryName("soak_dedup")
-        .outputMode(OutputMode.Append).start()
-      try {
-        val metrics = soakMetrics(
-          run = { i =>
-            // churn: FreshPerBatch new keys + 5 repeats of the previous
-            // batch's keys (still inside the TTL — exercise the
-            // duplicate path), event time advancing 1 s per batch so
-            // the watermark evicts everything older than the horizon
-            val fresh = (0 until FreshPerBatch).map(k =>
-              StreamingDedup.DocRow(s"fp-$i-$k", i.toLong * 1000 + k, ts(i)))
-            val repeats = if (i == 0) Nil else (0 until 5).map(k =>
-              StreamingDedup.DocRow(s"fp-${i - 1}-$k", 900000L + i * 10 + k,
-                ts(i)))
-            input.addData(fresh ++ repeats: _*)
-            q.processAllAvailable()
-          },
-          progress = () => {
-            val so = q.lastProgress.stateOperators.apply(0)
-            (so.numRowsTotal, so.memoryUsedBytes)
-          })
-        assertPlateau(metrics, "exact dedup")
-        // the repeats actually hit restored state: duplicates were tagged
-        val dups = spark.table("soak_dedup").as[StreamingDedup.Tagged]
-          .filter(t => !t.isFirst).count()
-        assert(dups == (Batches - 1) * 5L,
-          s"expected ${(Batches - 1) * 5} duplicate tags, got $dups")
-      } finally q.stop()
-    }
+    val q = out.writeStream.format("memory").queryName("soak_dedup")
+      .outputMode(OutputMode.Append).start()
+    try {
+      val metrics = soakMetrics(
+        run = { i =>
+          // churn: FreshPerBatch new keys + 5 repeats of the previous
+          // batch's keys (still inside the TTL — exercise the
+          // duplicate path), event time advancing 1 s per batch so
+          // the watermark evicts everything older than the horizon
+          val fresh = (0 until FreshPerBatch).map(k =>
+            StreamingDedup.DocRow(s"fp-$i-$k", i.toLong * 1000 + k, ts(i)))
+          val repeats = if (i == 0) Nil else (0 until 5).map(k =>
+            StreamingDedup.DocRow(s"fp-${i - 1}-$k", 900000L + i * 10 + k,
+              ts(i)))
+          input.addData(fresh ++ repeats: _*)
+          q.processAllAvailable()
+        },
+        progress = () => {
+          val so = q.lastProgress.stateOperators.apply(0)
+          (so.numRowsTotal, so.memoryUsedBytes)
+        })
+      assertPlateau(metrics, "exact dedup")
+      // the repeats actually hit restored state: duplicates were tagged
+      val dups = ss.table("soak_dedup").as[StreamingDedup.Tagged]
+        .filter(t => !t.isFirst).count()
+      assert(dups == (Batches - 1) * 5L,
+        s"expected ${(Batches - 1) * 5} duplicate tags, got $dups")
+    } finally q.stop()
   }
 
   test("LSH near-dup bucket-holder state plateaus under churned buckets") {
-    implicit val sqlCtx = spark.sqlContext
+    val ss = Drain.session(spark, Drain.RocksDb)
+    implicit val sqlCtx = ss.sqlContext
     import spark.implicits._
     val input = MemoryStream[StreamingNearDup.BandRow]
     val out = StreamingNearDup(input.toDS(), ttlMs = Some(1000L))
-    StreamingDedup.withRocksDb(spark) {
-      val q = out.writeStream.format("memory").queryName("soak_lsh")
-        .outputMode(OutputMode.Append).start()
-      try {
-        val metrics = soakMetrics(
-          run = { i =>
-            val sig = Array.tabulate(8)(j => (i * 31 + j).toLong)
-            val fresh = (0 until FreshPerBatch).map(k =>
-              StreamingNearDup.BandRow(s"b-$i-$k", i.toLong * 1000 + k,
-                sig, ts(i)))
-            val rehits = if (i == 0) Nil else (0 until 5).map(k =>
-              StreamingNearDup.BandRow(s"b-${i - 1}-$k", 900000L + i * 10 + k,
-                Array.tabulate(8)(j => ((i - 1) * 31 + j).toLong), ts(i)))
-            input.addData(fresh ++ rehits: _*)
-            q.processAllAvailable()
-          },
-          progress = () => {
-            val so = q.lastProgress.stateOperators.apply(0)
-            (so.numRowsTotal, so.memoryUsedBytes)
-          })
-        assertPlateau(metrics, "LSH near-dup")
-        // re-hits within the TTL matched their bucket holders exactly
-        val matches = spark.table("soak_lsh").count()
-        assert(matches == (Batches - 1) * 5L,
-          s"expected ${(Batches - 1) * 5} band matches, got $matches")
-      } finally q.stop()
-    }
+    val q = out.writeStream.format("memory").queryName("soak_lsh")
+      .outputMode(OutputMode.Append).start()
+    try {
+      val metrics = soakMetrics(
+        run = { i =>
+          val sig = Array.tabulate(8)(j => (i * 31 + j).toLong)
+          val fresh = (0 until FreshPerBatch).map(k =>
+            StreamingNearDup.BandRow(s"b-$i-$k", i.toLong * 1000 + k,
+              sig, ts(i)))
+          val rehits = if (i == 0) Nil else (0 until 5).map(k =>
+            StreamingNearDup.BandRow(s"b-${i - 1}-$k", 900000L + i * 10 + k,
+              Array.tabulate(8)(j => ((i - 1) * 31 + j).toLong), ts(i)))
+          input.addData(fresh ++ rehits: _*)
+          q.processAllAvailable()
+        },
+        progress = () => {
+          val so = q.lastProgress.stateOperators.apply(0)
+          (so.numRowsTotal, so.memoryUsedBytes)
+        })
+      assertPlateau(metrics, "LSH near-dup")
+      // re-hits within the TTL matched their bucket holders exactly
+      val matches = ss.table("soak_lsh").count()
+      assert(matches == (Batches - 1) * 5L,
+        s"expected ${(Batches - 1) * 5} band matches, got $matches")
+    } finally q.stop()
   }
 }

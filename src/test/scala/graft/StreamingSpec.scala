@@ -348,86 +348,84 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("dedup state is bounded: RocksDB store + watermark-TTL eviction under key churn") {
-    import graft.streaming.StreamingDedup
-    implicit val sqlCtx = spark.sqlContext
+    import graft.streaming.{Drain, StreamingDedup}
+    val ss = Drain.session(spark, Drain.RocksDb)
+    implicit val sqlCtx = ss.sqlContext
     val input = MemoryStream[StreamingDedup.DocRow]
     // 1 s EVENT-time TTL: a key whose last sighting falls 1 s behind
     // the watermark evicts — deterministic (no wall clock), and the
     // gate entries use the same mechanism with a 1 h horizon
     val out = StreamingDedup(input.toDS(), ttlMs = Some(1000L))
-    StreamingDedup.withRocksDb(spark) {
-      val q = out.writeStream.format("memory").queryName("sdedup_ttl")
-        .outputMode(OutputMode.Append).start()
-      try {
-        def addWave(lo: Int, hi: Int, at: Timestamp): Unit = {
-          input.addData((lo until hi).map(i =>
-            StreamingDedup.DocRow(s"fp$i", i.toLong, at)))
-          q.processAllAvailable()
-        }
-        // three waves of disjoint keys, event time advancing 10 s per
-        // wave — an unbounded store would hold all 600 keys; the
-        // watermark passing wave N's ttl evicts it during wave N+2's
-        // batch (watermark trails by one batch)
-        addWave(0, 200, ts("2024-01-01 00:00:00"))
-        addWave(200, 400, ts("2024-01-01 00:00:10"))
-        addWave(400, 600, ts("2024-01-01 00:00:20"))
-        // wave 4 re-presents fp0: it was evicted when the watermark
-        // passed 00:00:01, so it re-tags as FIRST — windowed-dedup
-        // semantics, the documented price of bounded state
-        input.addData(StreamingDedup.DocRow("fp0", 9999L,
-          ts("2024-01-01 00:00:30")))
+    val q = out.writeStream.format("memory").queryName("sdedup_ttl")
+      .outputMode(OutputMode.Append).start()
+    try {
+      def addWave(lo: Int, hi: Int, at: Timestamp): Unit = {
+        input.addData((lo until hi).map(i =>
+          StreamingDedup.DocRow(s"fp$i", i.toLong, at)))
         q.processAllAvailable()
-        val stateOp = q.lastProgress.stateOperators.apply(0)
-        assert(stateOp.customMetrics.keySet.toArray
-          .exists(_.toString.startsWith("rocksdb")),
-          "expected the RocksDB state store provider to be active")
-        assert(stateOp.numRowsTotal < 600,
-          s"state not evicting: ${stateOp.numRowsTotal} rows resident")
-        val re = spark.table("sdedup_ttl").as[StreamingDedup.Tagged]
-          .collect().filter(t => t.fingerprint == "fp0" && t.docId == 9999L)
-        assert(re.length == 1 && re.head.isFirst,
-          s"evicted key should re-tag as first, got ${re.toSeq}")
-      } finally q.stop()
-    }
+      }
+      // three waves of disjoint keys, event time advancing 10 s per
+      // wave — an unbounded store would hold all 600 keys; the
+      // watermark passing wave N's ttl evicts it during wave N+2's
+      // batch (watermark trails by one batch)
+      addWave(0, 200, ts("2024-01-01 00:00:00"))
+      addWave(200, 400, ts("2024-01-01 00:00:10"))
+      addWave(400, 600, ts("2024-01-01 00:00:20"))
+      // wave 4 re-presents fp0: it was evicted when the watermark
+      // passed 00:00:01, so it re-tags as FIRST — windowed-dedup
+      // semantics, the documented price of bounded state
+      input.addData(StreamingDedup.DocRow("fp0", 9999L,
+        ts("2024-01-01 00:00:30")))
+      q.processAllAvailable()
+      val stateOp = q.lastProgress.stateOperators.apply(0)
+      assert(stateOp.customMetrics.keySet.toArray
+        .exists(_.toString.startsWith("rocksdb")),
+        "expected the RocksDB state store provider to be active")
+      assert(stateOp.numRowsTotal < 600,
+        s"state not evicting: ${stateOp.numRowsTotal} rows resident")
+      val re = ss.table("sdedup_ttl").as[StreamingDedup.Tagged]
+        .collect().filter(t => t.fingerprint == "fp0" && t.docId == 9999L)
+      assert(re.length == 1 && re.head.isFirst,
+        s"evicted key should re-tag as first, got ${re.toSeq}")
+    } finally q.stop()
   }
 
   test("near-dup holder state evicts on watermark TTL; bucket re-claimable after") {
-    import graft.streaming.{StreamingDedup, StreamingNearDup}
-    implicit val sqlCtx = spark.sqlContext
+    import graft.streaming.{Drain, StreamingNearDup}
+    val ss = Drain.session(spark, Drain.RocksDb)
+    implicit val sqlCtx = ss.sqlContext
     val input = MemoryStream[StreamingNearDup.BandRow]
     val out = StreamingNearDup(input.toDS(), ttlMs = Some(1000L))
-    StreamingDedup.withRocksDb(spark) {
-      val q = out.writeStream.format("memory").queryName("snd_ttl")
-        .outputMode(OutputMode.Append).start()
-      try {
-        val sig = Array.tabulate(8)(_.toLong)
-        def drain(rows: StreamingNearDup.BandRow*): Unit = {
-          input.addData(rows); q.processAllAvailable()
-        }
-        // doc 10 claims b1 at t0
-        drain(StreamingNearDup.BandRow("b1", 10L, sig,
-          ts("2024-01-01 00:00:00")))
-        // two watermark-advancing batches on an unrelated bucket: the
-        // first raises the watermark past b1's ttl, the second gives
-        // the expired timeout a batch (with no b1 data) to fire in
-        drain(StreamingNearDup.BandRow("wm", 1L, sig,
-          ts("2024-01-01 00:00:10")))
-        drain(StreamingNearDup.BandRow("wm", 2L, sig,
-          ts("2024-01-01 00:00:11")))
-        // b1's holder is gone: doc 20 re-claims (emits NO match) …
-        drain(StreamingNearDup.BandRow("b1", 20L, sig,
-          ts("2024-01-01 00:00:12")))
-        // … and doc 30 matches the NEW holder 20, not the evicted 10
-        drain(StreamingNearDup.BandRow("b1", 30L, sig,
-          ts("2024-01-01 00:00:13")))
-        val ms = spark.table("snd_ttl").as[StreamingNearDup.BandMatch]
-          .collect().filter(_.docId >= 20L)
-        assert(!ms.exists(_.docId == 20L),
-          s"doc 20 should have re-claimed the evicted bucket, got ${ms.toSeq}")
-        assert(ms.exists(m => m.docId == 30L && m.holderId == 20L && m.est == 1.0),
-          s"doc 30 should match the new holder 20, got ${ms.toSeq}")
-      } finally q.stop()
-    }
+    val q = out.writeStream.format("memory").queryName("snd_ttl")
+      .outputMode(OutputMode.Append).start()
+    try {
+      val sig = Array.tabulate(8)(_.toLong)
+      def drain(rows: StreamingNearDup.BandRow*): Unit = {
+        input.addData(rows); q.processAllAvailable()
+      }
+      // doc 10 claims b1 at t0
+      drain(StreamingNearDup.BandRow("b1", 10L, sig,
+        ts("2024-01-01 00:00:00")))
+      // two watermark-advancing batches on an unrelated bucket: the
+      // first raises the watermark past b1's ttl, the second gives
+      // the expired timeout a batch (with no b1 data) to fire in
+      drain(StreamingNearDup.BandRow("wm", 1L, sig,
+        ts("2024-01-01 00:00:10")))
+      drain(StreamingNearDup.BandRow("wm", 2L, sig,
+        ts("2024-01-01 00:00:11")))
+      // b1's holder is gone: doc 20 re-claims (emits NO match) …
+      drain(StreamingNearDup.BandRow("b1", 20L, sig,
+        ts("2024-01-01 00:00:12")))
+      // … and doc 30 matches the NEW holder 20, not the evicted 10
+      drain(StreamingNearDup.BandRow("b1", 30L, sig,
+        ts("2024-01-01 00:00:13")))
+      val ms = ss.table("snd_ttl").as[StreamingNearDup.BandMatch]
+        .collect().filter(_.docId >= 20L)
+      assert(!ms.exists(_.docId == 20L),
+        s"doc 20 should have re-claimed the evicted bucket, got ${ms.toSeq}")
+      assert(ms.exists(m => m.docId == 30L && m.holderId == 20L && m.est == 1.0),
+        s"doc 30 should match the new holder 20, got ${ms.toSeq}")
+    } finally q.stop()
   }
 
   test("LIVE socket syslog source: RFC5424 over TCP into stitch, out-of-order + W7") {
@@ -549,6 +547,31 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  test("Drain sets its conf on the query's session, never on the caller's") {
+    import graft.streaming.{Drain, StreamingDedup}
+    import graft.streaming.StreamingDedup.DocRow
+    val work = java.nio.file.Files.createTempDirectory("graft_drain_conf")
+    val in = work.resolve("in").toString
+    val out = work.resolve("out").toString
+    val rows = Seq(
+      DocRow("fpA", 1L, ts("2024-01-01 00:00:00")),
+      DocRow("fpA", 2L, ts("2024-01-01 00:00:01")),
+      DocRow("fpB", 3L, ts("2024-01-01 00:00:02"))).toDS()
+    rows.write.parquet(in)
+    val before = spark.conf.getAll.toSet
+    try {
+      val q = Drain(spark, work.resolve("ckpt").toString, out,
+          Drain.partitions(3) ++ Drain.RocksDb) { ss =>
+        StreamingDedup(ss.readStream.schema(rows.schema).parquet(in)
+          .as[DocRow]).toDF()
+      }
+      assert(q.lastProgress.stateOperators(0).numShufflePartitions == 3)
+      val after = spark.conf.getAll.toSet
+      assert(after == before, (after diff before) ++ (before diff after))
+      assert(spark.read.parquet(out).where("isFirst").count() == 2)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(work.toFile)
+  }
+
   test("RocksDB checkpoint kill/resume: dedup state restores, tags exactly-once") {
     // The reference persists collector state across process restarts
     // (state/state_file.go:1-81); the streaming analog is the RocksDB
@@ -557,9 +580,10 @@ class StreamingSpec extends SparkSpec {
     // reprocess (exactly-once tags in the file sink), (b) the restarted
     // query must tag wave-B duplicates against wave-A state it never
     // itself computed — proof the store RESTORED rather than recomputed.
-    import graft.streaming.StreamingDedup
+    import graft.streaming.{Drain, StreamingDedup}
     import graft.streaming.StreamingDedup.{DocRow, Tagged}
-    implicit val sqlCtx = spark.sqlContext
+    val ss = Drain.session(spark, Drain.RocksDb)
+    implicit val sqlCtx = ss.sqlContext
     val work = java.nio.file.Files.createTempDirectory("graft_resume")
     val ckpt = work.resolve("ckpt").toString
     val sink = work.resolve("out").toString
@@ -575,7 +599,7 @@ class StreamingSpec extends SparkSpec {
       spark.read.schema(org.apache.spark.sql.Encoders.product[Tagged].schema)
         .parquet(path).as[Tagged].collect()
         .map(t => (t.fingerprint, t.docId, t.isFirst, t.canonicalId)).toSet
-    try StreamingDedup.withRocksDb(spark) {
+    try {
       val input = MemoryStream[DocRow]
       val out = StreamingDedup(input.toDS())
       def start() = out.writeStream.format("parquet")
