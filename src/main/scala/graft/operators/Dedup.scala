@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.functions.{Hashing, TextFns}
 
@@ -204,25 +205,56 @@ object Dedup {
     * regardless of iteration order or partitioning. Only ids that appear
     * in a pair are returned (singletons are their own cluster trivially).
     *
-    * Algorithm: min-label propagation with pointer-jumping — each round
-    * every node takes the least of (its label, its neighbors' labels,
-    * its *label's* label). The neighbor step is a broadcast-free
-    * equi-join + map-side-combining groupBy; the pointer-jumping step
-    * (label-of-label, a self-join on the label table) halves remaining
-    * path lengths each round, so convergence is O(log diameter) rounds
-    * rather than O(diameter). Near-dup graphs are clique-like (a cluster
-    * of k near-identical docs has ~k² candidate pairs), so real corpora
-    * converge in 2–3 rounds; `maxIters` guards pathological chains.
-    * Each round's labels are materialized (`localCheckpoint`) to
-    * truncate the iterative lineage — on a cluster, checkpointing to
-    * reliable storage does the same job; the edge list is persisted once
-    * and re-read every round instead of being recomputed from text. */
+    * One `limit(cap + 1)` collect of the (persisted) pairs probes their
+    * count and gathers them; both paths give the same rows and schema.
+    * Up to `maxDriverEdges` (the broadcast budget at 16 B a pair):
+    * union-find on the driver, each root linked under the smaller, into
+    * a local relation. Over it: min-label propagation with pointer
+    * jumping — each round every node takes the least of (its label, its
+    * neighbors' labels, its *label's* label), so it converges in O(log
+    * diameter) rounds (2–3 on clique-like near-dup graphs); each round's
+    * labels are `localCheckpoint`ed, the edge list is persisted once,
+    * and labels still changing after `maxIters` rounds throw. */
   def connectedComponents(pairs: DataFrame, aCol: String = "id_a",
-      bCol: String = "id_b", maxIters: Int = 25): DataFrame = {
-    val edges = pairs
+      bCol: String = "id_b", maxIters: Int = 25,
+      maxDriverEdges: Long = DimEncode.BroadcastBudgetBytes / 16): DataFrame = {
+    val ends = pairs
       .select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
-      .unionByName(pairs
-        .select(col(bCol).cast("long").as("src"), col(aCol).cast("long").as("dst")))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val head = ends.coalesce(1)
+      .limit(math.min(maxDriverEdges, Int.MaxValue - 1L).toInt + 1).collect()
+    try {
+      if (head.length <= maxDriverEdges && !head.exists(_.anyNull))
+        unionFind(head, ends.schema.exists(_.nullable), pairs.sparkSession)
+      else propagate(ends, maxIters)
+    } finally ends.unpersist()
+  }
+
+  private def unionFind(ends: Array[Row], idNullable: Boolean,
+      s: SparkSession): DataFrame = {
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var y = x
+      while (y != r) { val up = parent(y); parent(y) = r; y = up }
+      r
+    }
+    ends.foreach { e =>
+      val (a, b) = (e.getLong(0), e.getLong(1))
+      parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
+      val (ra, rb) = (find(a), find(b))
+      parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val rows = parent.keys.toArray.sorted.map(id => Row(id, find(id)))
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(Seq(
+      StructField("id", LongType, idNullable),
+      StructField("component", LongType, nullable = true))))
+  }
+
+  private def propagate(ends: DataFrame, maxIters: Int): DataFrame = {
+    val edges = ends
+      .unionByName(ends.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
       // cache partitioned on the per-round join key, so every round's
       // edges⨝labels probe reuses the cached partitioning instead of
@@ -277,6 +309,8 @@ object Dedup {
       i += 1
     }
     edges.unpersist()
+    if (!done) throw new IllegalStateException(
+      s"connected components still changing after maxIters = $maxIters rounds")
     labels
   }
 }

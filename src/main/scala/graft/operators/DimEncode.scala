@@ -34,6 +34,10 @@ object DimEncode {
     * engine-default broadcast budget). */
   val DefaultMaxBroadcastRows = 150000L
 
+  /** That budget in bytes: also what a bounded iterative operator may
+    * gather to run its whole loop on the driver. */
+  val BroadcastBudgetBytes: Long = DefaultMaxBroadcastRows * 64
+
   /** (dim table, distinct-count) for one dimension column: (value, idx)
     * with 1-based dense index by sorted value (nulls first). */
   private def dimTable(df: DataFrame, dimCol: String,

@@ -1,12 +1,16 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.GraftNative
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructField, StructType}
 
 import graft.functions.Hashing
-import graft.functions.expressions.CosineSimilarity
+import graft.functions.expressions.{CosineSimilarity, CosineSimilarityFD, VecStructSumExpr}
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -133,25 +137,63 @@ object Similarity {
     * SQL oracle. Assignment is by cosine, ties broken by cluster id.
     * Empty clusters keep their previous centroid.
     *
-    * Scale shape: assignment is a broadcast of `k` centroids against the
-    * corpus (per-row argmax, no corpus shuffle); the update shuffles
-    * once on (cluster, chunk) and once on cluster. The fold order is a
-    * pure function of ids — chunk `id div chunkWidth`, members fold in
-    * ascending id within a chunk, chunk partial sums fold in ascending
-    * chunk — so NO task ever materializes a whole cluster: level 1
-    * buffers at most `chunkWidth` vectors per row, level 2 buffers one
-    * dim-length partial sum per chunk. At a fixed small k the old flat
-    * fold held corpus/k vectors in single rows (executor OOM at 100×);
-    * this caps level-1 rows at chunkWidth regardless of corpus size.
+    * The fold order is a pure function of ids — chunk `id div
+    * chunkWidth`, members fold in ascending id within a chunk, chunk
+    * partial sums fold in ascending chunk. Two paths give `==`
+    * centroids. With k ≤ [[TwoLevelMinK]] and at most `driverBytes` of
+    * vectors at 4·dim B each (≈ 37k at dim 64), one `limit(cap + 1)`
+    * collect gathers them and all rounds run on the driver into a local
+    * relation. Otherwise each round broadcasts the `k` centroids against
+    * the corpus (per-row argmax, no corpus shuffle), shuffles once on
+    * (cluster, chunk) and once on cluster — no task holds more than
+    * `chunkWidth` vectors of a cluster — and checkpoints the centroids.
     * Set `chunkWidth` ≈ sqrt(id-range) at lake scale to balance the
     * levels; the default matches the oracle's constant. */
   def ivfFit(emb: DataFrame, k: Int, iters: Int, dim: Int,
-      chunkWidth: Long = DefaultChunkWidth): DataFrame = {
-    var cents = seedCents(emb, k)
-    var i = 0
-    while (i < iters) {
-      cents = lloydUpdate(ivfAssign(emb, cents), cents, dim, chunkWidth)
-      i += 1
+      chunkWidth: Long = DefaultChunkWidth,
+      driverBytes: Long = DimEncode.BroadcastBudgetBytes): DataFrame = {
+    val s = emb.sparkSession
+    import s.implicits._
+    val cap = if (k <= TwoLevelMinK) driverBytes / (4L * dim) else -1L
+    lazy val head = emb.select("id", "vec").as[(Long, Array[Float])]
+      .coalesce(1).limit(math.min(cap, Int.MaxValue - 1L).toInt + 1).collect()
+    if (cap >= 0 && head.length <= cap) {
+      val cents = lloydOnDriver(head.sortBy(_._1), k, iters, dim, chunkWidth)
+      s.createDataFrame(cents.indices.map(c => Row(c, cents(c))).asJava,
+        StructType(Seq(StructField("cluster", IntegerType, nullable = false),
+          StructField("centroid", ArrayType(DoubleType), emb.schema("vec").nullable))))
+    } else (0 until iters).foldLeft(seedCents(emb, k))((cents, _) =>
+      lloydUpdate(ivfAssign(emb, cents), cents, dim, chunkWidth))
+  }
+
+  /** [[ivfFit]]'s rounds over id-sorted vectors, op for op: a vector
+    * goes to the max (sim, -cluster) as `max_by` orders it (-0.0 ==
+    * 0.0, NaN on top); sums fold as [[VecStructSumExpr]] does. */
+  private def lloydOnDriver(vs: Array[(Long, Array[Float])], k: Int,
+      iters: Int, dim: Int, chunkWidth: Long): Array[Array[Double]] = {
+    val data = vs.map(v => UnsafeArrayData.fromPrimitiveArray(v._2))
+    val wide = vs.map(_._2.map(_.toDouble))
+    def sum(xs: Iterable[Array[Double]]): Array[Double] =
+      xs.foldLeft(new Array[Double](dim)) { (acc, x) =>
+        var d = 0
+        while (d < dim) { acc(d) += x(d); d += 1 }
+        acc
+      }
+    var cents = wide.take(k)
+    for (_ <- 0 until iters) {
+      val cd = cents.map(c => UnsafeArrayData.fromPrimitiveArray(c))
+      val members = vs.indices.groupBy { i =>
+        val sims = cd.map(CosineSimilarityFD.sim(data(i), _))
+        sims.indices.foldLeft(0)((b, c) =>
+          if (sims(c) != sims(b) && java.lang.Double.compare(sims(c), sims(b)) > 0) c
+          else b)
+      }
+      cents = cents.indices.map { c =>
+        members.get(c).fold(cents(c)) { ms =>
+          val chunks = ms.groupBy(vs(_)._1 / chunkWidth).toSeq.sortBy(_._1)
+          sum(chunks.map(ch => sum(ch._2.map(wide(_))))).map(_ / ms.size.toDouble)
+        }
+      }.toArray
     }
     cents
   }
@@ -174,7 +216,6 @@ object Similarity {
     * previous centroid. */
   private def lloydUpdate(assigned: DataFrame, cents: DataFrame,
       dim: Int, chunkWidth: Long): DataFrame = {
-    import graft.functions.expressions.VecStructSumExpr
     // per-dim sums via the native ordered kernel (one pass over each
     // member list) instead of `transform(sequence(0, dim-1), d ->
     // aggregate(ms, …))` — dim separate interpreted HOF folds per row,

@@ -135,18 +135,34 @@ class DedupSimilaritySpec extends SparkSpec {
   }
 
   test("connected components: transitive chains collapse to the min id") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
     // two clusters: {1,2,3} via chain 1-2, 2-3 and {7,9}; 5 is isolated
-    val pairs = Seq((1L, 2L), (2L, 3L), (9L, 7L)).toDF("id_a", "id_b")
-    val comps = Dedup.connectedComponents(pairs)
-      .as[(Long, Long)].collect().toMap
-    assert(comps == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 9L -> 7L))
+    val pairs = Seq((1L, 2L), (2L, 3L), (9L, 7L))
+      .map { case (a, b) => (Option(a), Option(b)) }.toDF("id_a", "id_b")
+    // 3 pairs: on the driver at a cap of 3, distributed at a cap of 2;
+    // both keep the nullable id columns' nullability
+    val atCap = Dedup.connectedComponents(pairs, maxDriverEdges = 3)
+    val overCap = Dedup.connectedComponents(pairs, maxDriverEdges = 2)
+    assert(atCap.queryExecution.logical.isInstanceOf[LocalRelation])
+    assert(!overCap.queryExecution.logical.isInstanceOf[LocalRelation])
+    assert(atCap.schema == overCap.schema)
+    for (comps <- Seq(atCap, overCap))
+      assert(comps.as[(Long, Long)].collect().toMap ==
+        Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 9L -> 7L))
   }
 
   test("connected components: a long path converges within maxIters") {
     val n = 64 // path 0-1-2-…-64: diameter stresses the propagation loop
     val pairs = (0L until n).map(i => (i + 1, i)).toDF("id_a", "id_b")
-    val comps = Dedup.connectedComponents(pairs).as[(Long, Long)].collect()
-    assert(comps.length == n.toInt + 1 && comps.forall(_._2 == 0L))
+    for (df <- Seq(Dedup.connectedComponents(pairs),
+        Dedup.connectedComponents(pairs, maxDriverEdges = 0))) {
+      val comps = df.as[(Long, Long)].collect()
+      assert(comps.length == n.toInt + 1 && comps.forall(_._2 == 0L))
+    }
+    // the distributed loop throws rather than return unconverged labels
+    val err = intercept[IllegalStateException](
+      Dedup.connectedComponents(pairs, maxIters = 1, maxDriverEdges = 0))
+    assert(err.getMessage.contains("maxIters = 1 rounds"), err.getMessage)
   }
 
   test("connected components agree with union-find on a random graph") {
@@ -171,6 +187,75 @@ class DedupSimilaritySpec extends SparkSpec {
     val got = Dedup.connectedComponents(edges.toDF("id_a", "id_b"))
       .as[(Long, Long)].collect().toMap
     assert(got == want)
+  }
+
+  private def ccRows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+
+  test("connected components: union-find and the distributed loop return the same rows and schema") {
+    import org.scalacheck.{Gen, Prop, Test}
+    // random pairs plus a chain, with repeated pairs and both
+    // orientations of some; nullable or non-null id columns
+    val graphs = for {
+      n <- Gen.chooseNum(1, 12)
+      raw <- Gen.listOfN(n, Gen.zip(Gen.chooseNum(0L, 20L), Gen.chooseNum(0L, 20L)))
+      chain <- Gen.chooseNum(0, 8)
+      from <- Gen.chooseNum(0L, 30L)
+      nullable <- Gen.oneOf(true, false)
+    } yield {
+      val es = raw ++ (0 until chain).map(i => (from + i + 1, from + i))
+      (es ++ es.take(3).map(_.swap) ++ es.take(2), nullable)
+    }
+    val prop = Prop.forAll(graphs) { case (es, nullable) =>
+      val pairs =
+        if (nullable) es.map { case (a, b) => (Option(a), Option(b)) }.toDF("id_a", "id_b")
+        else es.toDF("id_a", "id_b")
+      val onDriver = Dedup.connectedComponents(pairs)
+      val distributed = Dedup.connectedComponents(pairs, maxDriverEdges = 0)
+      onDriver.schema == distributed.schema &&
+        ccRows(onDriver) == ccRows(distributed)
+    }
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(6)
+      .withWorkers(1), prop)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
+  }
+
+  test("k-means on the driver gives bit-identical centroids to the distributed rounds") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    // ids 0..3591 span 4 fold chunks; id 9 duplicates id 0 (tied sims,
+    // so seed cluster 1 is empty after round 1); id 63 is zero-norm.
+    // Components span 1e-5..1e5, so double sums round and the fold
+    // order shows in the bits.
+    def v(i: Int) = Array.tabulate(64)(d =>
+      (math.sin(i * 0.37 + d * 1.3) * math.pow(10, (i * 7 + d) % 11 - 5)).toFloat)
+    val rows = (0 until 400).map { i =>
+      (i.toLong * 9,
+        if (i == 1) v(0) else if (i == 7) Array.fill(64)(0f) else v(i))
+    }
+    val emb = rows.toDF("id", "vec")
+    def bits(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => r.getInt(0) -> r.getSeq[Double](1)
+        .map(java.lang.Double.doubleToRawLongBits))
+      .sortBy(_._1).toSeq
+    def fits(e: org.apache.spark.sql.DataFrame, k: Int, n: Int) = {
+      val onDriver = Similarity.ivfFit(e, k, 2, 64, driverBytes = n * 256L)
+      val distributed = Similarity.ivfFit(e, k, 2, 64, driverBytes = n * 256L - 1)
+      assert(onDriver.queryExecution.logical.isInstanceOf[LocalRelation])
+      assert(!distributed.queryExecution.logical.isInstanceOf[LocalRelation])
+      assert(onDriver.schema == distributed.schema)
+      (bits(onDriver), bits(distributed))
+    }
+    val (a, b) = fits(emb, 16, 400)
+    assert(a.size == 16 && a == b)
+    // the seed duplicate's cluster got no members in round 1
+    val once = Similarity.ivfAssign(emb, Similarity.ivfFit(emb, 16, 0, 64))
+    assert(once.filter(col("cluster") === 1).isEmpty)
+    // fewer vectors than clusters
+    val (c, d) = fits(emb.filter(col("id") < 45), 8, 5)
+    assert(c.size == 5 && c == d)
+    // past TwoLevelMinK the fit stays distributed
+    assert(!Similarity.ivfFit(emb, Similarity.TwoLevelMinK + 1, 1, 64)
+      .queryExecution.logical.isInstanceOf[LocalRelation])
   }
 
   test("sample split is deterministic and ~80/10/10") {
