@@ -16,15 +16,14 @@ object Harness {
   /** Build (or get) the session. Master precedence: spark-submit's
     * `--master` (the `spark.master` sysprop, how the local-cluster
     * distributed-execution gate runs), then `SPARK_GRAFT_MASTER`, then
-    * `fallbackMaster`, then `local[$SPARK_GRAFT_CPUS]` with the caller's
-    * `defaultCpus`. Shuffle partitions follow the cpus; `conf` is applied
-    * last, so callers can override them. */
-  def session(defaultCpus: Int, conf: Seq[(String, String)] = Nil,
-      fallbackMaster: Option[String] = None): SparkSession = {
+    * `local[$SPARK_GRAFT_CPUS]` with the caller's `defaultCpus`. Shuffle
+    * partitions follow the cpus; `conf` is applied last, so callers can
+    * override them. */
+  def session(defaultCpus: Int, conf: Seq[(String, String)] = Nil)
+      : SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
     val master = sys.props.get("spark.master")
       .orElse(sys.env.get("SPARK_GRAFT_MASTER"))
-      .orElse(fallbackMaster)
       .getOrElse(s"local[$cpus]")
     val builder = SparkSession.builder()
       .master(master)

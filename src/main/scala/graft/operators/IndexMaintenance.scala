@@ -24,8 +24,9 @@ import org.apache.spark.sql.types.{BooleanType, DoubleType, StringType,
   */
 object IndexMaintenance {
 
-  /** Driver-side verdict (the shape an ingest loop consumes —
-    * [[graft.tools.IngestSoak]] fires compaction off this). */
+  /** Driver-side verdict, the shape an ingest loop fires compaction
+    * off (`ingest_soak_r13.json`/`_r14.json` record 120 micro-batches
+    * run that way). */
   final case class LshAdvice(appendedFrac: Double, segments: Int,
       fracThreshold: Double, maxSegments: Int) {
     def fracDue: Boolean = appendedFrac >= fracThreshold

@@ -1,7 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery,
+  StreamingQueryException, Trigger}
 
 /** Runs a stream to completion with the run-to-completion trigger
   * (`AvailableNow`): the batch bridge every stateful gate entry drains
@@ -75,16 +76,30 @@ object Drain {
       batch: (Dataset[Row], Long) => Unit): StreamingQuery =
     run(define(session(s, conf)), ckpt, "append")(batch)
 
+  /** Attempts a drain gets. A query that fails (an executor lost with
+    * the blocks a batch `localCheckpoint`ed, say) restarts from its
+    * checkpoint, which re-delivers the uncommitted batch; after the last
+    * attempt its error is rethrown. */
+  val MaxAttempts = 6
+
   private def run(stream: DataFrame, ckpt: String, outputMode: String)(
       batch: (Dataset[Row], Long) => Unit): StreamingQuery = {
-    val q = stream.writeStream
-      .foreachBatch(batch)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .outputMode(outputMode)
-      .start()
-    q.awaitTermination()
-    q
+    def attempt(n: Int): StreamingQuery = {
+      val q = stream.writeStream
+        .foreachBatch(batch)
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow())
+        .outputMode(outputMode)
+        .start()
+      try { q.awaitTermination(); q }
+      catch {
+        case e: StreamingQueryException if n < MaxAttempts =>
+          System.err.println(s"[drain] attempt $n of $ckpt failed, " +
+            s"restarting: ${e.getMessage.linesIterator.next()}")
+          attempt(n + 1)
+      }
+    }
+    attempt(1)
   }
 
   /** Pins the order a `maxFilesPerTrigger = 1` file stream reads the

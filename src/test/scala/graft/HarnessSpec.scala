@@ -87,6 +87,18 @@ class HarnessSpec extends SparkSpec {
     assert(files.exists(_.getFileName.toString == "Harness.scala"))
   }
 
+  test("the executor kill and the AvailableNow trigger live in one file each") {
+    val files = Files.walk(Paths.get("src/main/scala")).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    for ((p, owner) <- Seq(
+        "CoarseGrainedExecutorBackend" -> "tools/Drill.scala",
+        "Trigger.AvailableNow()" -> "streaming/Drain.scala")) {
+      val sites = files.filter(f => Files.readString(f).contains(p))
+      assert(sites.size == 1 && sites.head.endsWith(owner),
+        s"$p: ${sites.mkString(", ")}")
+    }
+  }
+
   test("the bounded-work session policy is defined once, in BoundedSession") {
     val key = java.util.regex.Pattern.quote("spark.sql.codegen.factoryMode")
     val sites = Files.walk(Paths.get("src/main/scala")).iterator.asScala

@@ -572,6 +572,46 @@ class StreamingSpec extends SparkSpec {
     } finally org.apache.commons.io.FileUtils.deleteQuietly(work.toFile)
   }
 
+  test("Drain restarts a failed drain from its checkpoint, up to MaxAttempts") {
+    import graft.streaming.Drain
+    val work = java.nio.file.Files.createTempDirectory("graft_drain_restart")
+    val in = work.resolve("in").toString
+    Seq(0L to 3L, 4L to 7L).zipWithIndex.foreach { case (ids, k) =>
+      ids.toDF("id").coalesce(1).write.parquet(s"$in/b$k")
+    }
+    Drain.pinOrder(in)(d => 1000000L * (1 + d.stripPrefix("b").toInt))
+    /** Drains `in` one file per batch, each batch to its own directory
+      * (so a re-delivered batch overwrites itself); `fail` throws. */
+    def drain(tag: String)(fail: Long => Boolean): Set[(Long, Int)] = {
+      val out = work.resolve(s"out_$tag").toString
+      Drain.foreachBatch(spark, work.resolve(s"ckpt_$tag").toString, Map.empty) {
+        ss => ss.readStream.schema("id long").option("maxFilesPerTrigger", 1)
+          .option("recursiveFileLookup", "true").parquet(in)
+      } { (b, batchId) =>
+        if (fail(batchId)) throw new IllegalStateException(s"batch $batchId")
+        b.write.mode("overwrite").parquet(s"$out/batch=$batchId")
+      }
+      spark.read.parquet(out).as[(Long, Int)].collect().toSet
+    }
+    try {
+      val clean = drain("clean")(_ => false)
+      assert(clean.map(_._2) == Set(0, 1))
+      var thrown = 0
+      assert(drain("flaky") { id =>
+        val first = id == 1 && thrown == 0
+        if (first) thrown += 1
+        first
+      } == clean)
+      assert(thrown == 1)
+      var attempts = 0
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+        drain("broken") { _ => attempts += 1; true })
+      assert(attempts == Drain.MaxAttempts)
+      assert(org.apache.commons.lang3.exception.ExceptionUtils
+        .getRootCause(e).getMessage == "batch 0")
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(work.toFile)
+  }
+
   test("RocksDB checkpoint kill/resume: dedup state restores, tags exactly-once") {
     // The reference persists collector state across process restarts
     // (state/state_file.go:1-81); the streaming analog is the RocksDB
