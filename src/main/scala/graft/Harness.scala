@@ -54,15 +54,54 @@ object Harness {
     df.agg(sum(xxhash64(struct(df.columns.map(col).toIndexedSeq: _*))
       .cast("decimal(38,0)"))).head.getDecimal(0)
 
-  /** Drop every cached frame and persisted RDD. Entries that
-    * localCheckpoint multi-consumer intermediates (k-means, BPE rounds,
-    * scoring tf tables) pin MEMORY_AND_DISK blocks; across a 100+-entry
-    * session those accumulate until the executor heap thrashes and every
-    * later entry pays GC, not compute (observed: 10-100x). */
+  /** Drop every cached frame and persisted RDD, and delete every
+    * [[scratch]] dir. Entries recover by lineage: an intermediate that
+    * several readers share is persisted (`GraftNative.persistRows`, a
+    * lost block is recomputed) and a spooled result keeps reading its
+    * scratch files, so both live until this call. Only the iterative
+    * loops still `localCheckpoint`. Left to accumulate across a
+    * 100+-entry session, cached blocks thrash the executor heap until
+    * every later entry pays GC, not compute (observed: 10-100x). */
   def release(spark: SparkSession): Unit = {
     spark.sharedState.cacheManager.clearCache()
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = false))
+    deleteScratch()
+  }
+
+  private val scratchDirs =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[java.io.File]()
+  sys.addShutdownHook(deleteScratch())
+
+  private def deleteScratch(): Unit = scratchDirs.forEach { d =>
+    org.apache.commons.io.FileUtils.deleteQuietly(d)
+    scratchDirs.remove(d)
+  }
+
+  /** A fresh scratch dir for spools, stream checkpoints and persisted
+    * indexes, one per call, so concurrent runs never share a path. It
+    * lives until the next [[release]] (one JVM exit hook deletes any
+    * that no release reached), so a frame may read its files lazily.
+    *
+    * tmpfs when available (the host disk throttles under sustained
+    * load), but tmpfs is RAM: a large-SF corpus's index + streaming
+    * scratch could exhaust it mid-run, so /dev/shm is used only when it
+    * has comfortable headroom (>4 GiB usable), and SPARK_GRAFT_SCRATCH
+    * overrides the location outright (set it to a disk path for large
+    * scale factors). */
+  def scratch(prefix: String): String = {
+    val shm = new java.io.File("/dev/shm")
+    val p = sys.env.get("SPARK_GRAFT_SCRATCH") match {
+      case Some(root) =>
+        val r = new java.io.File(root)
+        r.mkdirs()
+        Files.createTempDirectory(r.toPath, prefix)
+      case None if shm.isDirectory && shm.getUsableSpace > (4L << 30) =>
+        Files.createTempDirectory(shm.toPath, prefix)
+      case None => Files.createTempDirectory(prefix)
+    }
+    scratchDirs.add(p.toFile)
+    p.toFile.getAbsolutePath
   }
 
   /** Local-iteration entry filter: `SPARK_GRAFT_ONLY` is an include list,

@@ -505,7 +505,7 @@ object QueriesCatalog {
     def loadDoc(tick: Int): String =
       if (tick == 0) "9.99 9.98 9.97 1/1 1\n" else "1.25 0.75 0.50 2/300 999\n"
 
-    val spool = java.nio.file.Files.createTempDirectory("graft_proc_live")
+    val spool = java.nio.file.Paths.get(Harness.scratch("graft_proc_live"))
     (0 to 1).foreach { t =>
       ProcMetrics.spoolSample(spool, "synth", t, Map(
         "stat" -> statDoc(t), "meminfo" -> memDoc(t),
@@ -622,11 +622,8 @@ object QueriesCatalog {
       ("live", "host", "net_monotonic_ok", 1.0),
       ("live", "host", "loadavg_ok", 1.0)))
       .toDF("src", "dev", "metric", "value")
-    val out = cpuOut.union(diskOut).union(netOut).union(memOut)
+    cpuOut.union(diskOut).union(netOut).union(memOut)
       .union(loadOut).union(liveOut)
-      .localCheckpoint() // EAGER: materialize before the spool is deleted
-    org.apache.commons.io.FileUtils.deleteQuietly(spool.toFile)
-    out
   }
 
   /** S34/Azure — Azure Monitor system metrics

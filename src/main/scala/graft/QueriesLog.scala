@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftNative, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -17,12 +17,6 @@ object QueriesLog {
   /** The recommended log_line_prefix from the reference's docs. */
   val Prefix = "%t [%p]: [%l-1] user=%u,db=%d "
   val Compiled: LogPrefix.Compiled = LogPrefix.compile(Prefix)
-
-  /** Scratch dir for stream round-trips — QueriesText's policy (tmpfs
-    * only with headroom; SPARK_GRAFT_SCRATCH overrides; these dirs are
-    * deleted at the end of the query either way). */
-  private def scratchDir(prefix: String): String =
-    QueriesText.scratchDir(prefix)
 
   // X4/X5 — compile log_line_prefix to a regex, parse rendered lines back
   // into typed fields. A single-pass extractor: ONE regex match per row
@@ -171,7 +165,7 @@ object QueriesLog {
   // deterministically without waiting on event-time timeouts
   // (runner/logs.go:236-286, logs/stream/stream.go:240-312).
   def w5StreamBatch(s: SparkSession, dir: String): DataFrame = {
-    val tmp = scratchDir("graft_w5")
+    val tmp = Harness.scratch("graft_w5")
     val inDir = s"$tmp/in"; val outDir = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
     val sentinels = LogSynth.lines(s, dir)
       .groupBy("pid").agg(max(col("ts")).as("ts"))
@@ -239,15 +233,12 @@ object QueriesLog {
     // helper rows aggregate into their own groups: dead-letter lines at
     // the epoch-0 window (a raw continuation carries no event time),
     // the advancer under its marker class — drop both after the sink
-    val result = s.read.parquet(out2)
+    s.read.parquet(out2)
       .select(unix_micros(col("window.start")).as("window_start_us"),
         col("classification"), col("class_name"), col("n"))
       .filter(col("window_start_us") =!= 0 &&
         col("classification") =!= -999)
       .withColumn("n_discarded", lit(nDiscarded))
-      .localCheckpoint() // materialize before the temp dir is deleted
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
-    result
   }
 
   // X14 (exporter half) — OTel span export
@@ -260,7 +251,7 @@ object QueriesLog {
   // the oracle gate proves the span encoding end-to-end.
   def x14SpanExport(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.PgFns
-    val tmp = scratchDir("graft_spans")
+    val tmp = Harness.scratch("graft_spans")
     val tpRe = "^00-([0-9a-f]{32})-([0-9a-f]{16})-([0-9a-f]{2})$"
     val base = Tables.events(s, dir)
       .filter(col("event_type") === "purchase")
@@ -315,10 +306,7 @@ object QueriesLog {
     graft.sinks.SpanExporter.export(
       samples.select("trace_id", "parent_span_id", "tstate", "start_ns",
         "end_ns", "plan_url").withColumnRenamed("tstate", "trace_state"), tmp)
-    val decoded = graft.sinks.SpanExporter.readBack(s, tmp)
-      .localCheckpoint() // materialize before the temp dir is deleted
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
-    decoded
+    graft.sinks.SpanExporter.readBack(s, tmp)
   }
 
   // W11/D1 streaming — the reference's core stateful operator made
@@ -331,7 +319,7 @@ object QueriesLog {
   // orderTs alone is a total order per key.
   def w11StreamDiff(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val tmp = scratchDir("graft_w11")
+    val tmp = Harness.scratch("graft_w11")
     val inDir = s"$tmp/in"; val outDir = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
     val rows = Tables.events(s, dir).select(
       col("user_id").cast("string").as("key"),
@@ -342,14 +330,11 @@ object QueriesLog {
       graft.streaming.StreamingDiff(ss.readStream.schema(rows.schema)
         .parquet(inDir).as[graft.streaming.StreamingDiff.DiffRow]).toDF()
     }
-    val result = s.read.parquet(outDir)
+    s.read.parquet(outDir)
       .select(col("key").cast("long").as("user_id"),
         unix_micros(col("orderTs")).as("ts_us"),
         round(element_at(col("deltas"), "value"), 2).as("value_delta"),
         col("firstSeen").as("first_seen"))
-      .localCheckpoint()
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
-    result
   }
 
   // Streaming exact dedup — the incremental-shard form of dedup_exact:
@@ -360,7 +345,7 @@ object QueriesLog {
   // with it exactly.
   def dedupStream(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val tmp = scratchDir("graft_sdedup")
+    val tmp = Harness.scratch("graft_sdedup")
     val inDir = s"$tmp/in"; val outDir = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
     val rows = Tables.documents(s, dir).select(
       graft.functions.TextFns.contentFingerprint(col("text")).as("fingerprint"),
@@ -385,12 +370,9 @@ object QueriesLog {
         .option("recursiveFileLookup", "true").parquet(inDir)
         .as[graft.streaming.StreamingDedup.DocRow]).toDF()
     }
-    val result = s.read.parquet(outDir)
+    s.read.parquet(outDir)
       .select(col("docId").as("doc_id"), col("fingerprint"),
         col("isFirst").as("is_first"), col("canonicalId").as("canonical_id"))
-      .localCheckpoint()
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
-    result
   }
 
   // Streaming heavy hitters — per-word-hash-shard Misra–Gries state
@@ -405,7 +387,7 @@ object QueriesLog {
   def streamHeavyHitters(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val K = 200
-    val tmp = scratchDir("graft_shh")
+    val tmp = Harness.scratch("graft_shh")
     val inDir = s"$tmp/in"; val outDir = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
     val h = org.apache.spark.sql.GraftNative.column(
       graft.functions.expressions.Fnv64Expr(
@@ -424,15 +406,12 @@ object QueriesLog {
       .withColumn("rn", row_number().over(wlast))
       .filter(col("rn") === 1)
       .select(explode(col("words")).as("w")).distinct()
-    val result = toks.select("w").join(broadcast(candWords), Seq("w"))
+    toks.select("w").join(broadcast(candWords), Seq("w"))
       .groupBy("w").agg(count(lit(1)).as("cnt"))
       .crossJoin(broadcast(toks.agg(count(lit(1)).as("n_tokens"))))
       .filter(col("cnt") * (K + 1) > col("n_tokens"))
       .select(col("w"), col("cnt"),
         (col("cnt").cast("double") / col("n_tokens")).as("share"))
-      .localCheckpoint()
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
-    result
   }
 
   // Streaming corpus curation — the funnel at ingestion time:
@@ -447,7 +426,7 @@ object QueriesLog {
   // conjunction the batch funnel verifies stage by stage.
   def streamCuration(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val tmp = scratchDir("graft_scur")
+    val tmp = Harness.scratch("graft_scur")
     val inDir = s"$tmp/in"; val outDir = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
     val docs = Tables.documents(s, dir)
     val mid = 250L
@@ -504,14 +483,11 @@ object QueriesLog {
       .join(shared, Seq("doc_id"), "left")
       .withColumn("contaminated", coalesce(col("n_shared"), lit(0L)) >= 20)
       .select("doc_id", "is_bench", "q_keep", "contaminated")
-    val result = flagsBatch.join(firsts, Seq("doc_id"))
+    flagsBatch.join(firsts, Seq("doc_id"))
       .select(col("doc_id"), col("is_bench"), col("q_keep"),
         col("is_first"), col("contaminated"),
         (!col("is_bench") && col("q_keep") && col("is_first") &&
           !col("contaminated")).as("final_keep"))
-      .localCheckpoint()
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
-    result
   }
 
   // Streaming NEAR-dup — the incremental form of the MinHash→LSH
@@ -534,7 +510,7 @@ object QueriesLog {
     * recurrence). Batch order is pinned by file mtimes under
     * maxFilesPerTrigger=1, exactly like the other streaming drains. */
   def dedupStreamIndex(s: SparkSession, dir: String): DataFrame = {
-    val tmp = scratchDir("graft_sidx")
+    val tmp = Harness.scratch("graft_sidx")
     val inDir = s"$tmp/in"; val outDir = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
     val docs = Tables.documents(s, dir)
     val base = docs.filter(col("doc_id") % 10 =!= 0)
@@ -565,16 +541,10 @@ object QueriesLog {
         .option("recursiveFileLookup", "true").parquet(inDir)
     } { (b, batchId) => ingestBatch(b.sparkSession, idx, outDir)(b, batchId) }
     // verdicts live in per-batch subdirectories (the idempotence unit);
-    // underscore-prefixed commit markers are hidden to the file index.
-    // localCheckpoint pins the rows so the scratch tree (tmpfs) can be
-    // deleted before returning — lazy reads leaked one scratch dir per
-    // run across a 209-entry bench session
-    val result = s.read.schema(verdictSchema)
+    // underscore-prefixed commit markers are hidden to the file index
+    s.read.schema(verdictSchema)
       .option("recursiveFileLookup", "true")
       .parquet(outDir)
-      .localCheckpoint()
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
-    result
   }
 
   /** One ingestion micro-batch against the persisted index: probe,
@@ -606,31 +576,37 @@ object QueriesLog {
     val sigs = graft.operators.Dedup
       .minhashSignatures(b.toDF(), "doc_id", "text")
       .join(b.toDF().select(col("doc_id").as("id"), col("batch")), "id")
-      .localCheckpoint()
-    val scored = graft.operators.LshIndex.probe(s, idx,
-      sigs.select("id", "sig"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("delta_id"))
-      .orderBy(col("est_jaccard").desc, col("base_id"))
-    val best = scored.filter(col("est_jaccard") >= 0.7)
-      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .select(col("delta_id").as("id"), col("base_id").as("dup_of"),
-        round(col("est_jaccard"), 6).as("est_jaccard"))
-      .localCheckpoint()
-    sigs.join(best, Seq("id"), "left")
-      .select(col("id").as("doc_id"), col("batch"),
-        col("dup_of").isNotNull.as("is_dup"),
-        col("dup_of"), col("est_jaccard"))
-      .write.mode("overwrite").parquet(vDir.getAbsolutePath)
-    graft.operators.LshIndex.appendTagged(s, idx,
-      sigs.join(best, Seq("id"), "left_anti").select("id", "sig"), batchId)
+      // feeds the probe, the verdict write and the append
+      .transform(GraftNative.persistRows)
+    try {
+      val scored = graft.operators.LshIndex.probe(s, idx,
+        sigs.select("id", "sig"))
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("delta_id"))
+        .orderBy(col("est_jaccard").desc, col("base_id"))
+      val best = scored.filter(col("est_jaccard") >= 0.7)
+        .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+        .select(col("delta_id").as("id"), col("base_id").as("dup_of"),
+          round(col("est_jaccard"), 6).as("est_jaccard"))
+        // feeds the verdict write AND the append
+        .transform(GraftNative.persistRows)
+      try {
+        sigs.join(best, Seq("id"), "left")
+          .select(col("id").as("doc_id"), col("batch"),
+            col("dup_of").isNotNull.as("is_dup"),
+            col("dup_of"), col("est_jaccard"))
+          .write.mode("overwrite").parquet(vDir.getAbsolutePath)
+        graft.operators.LshIndex.appendTagged(s, idx,
+          sigs.join(best, Seq("id"), "left_anti").select("id", "sig"), batchId)
+      } finally GraftNative.unpersistRows(best)
+    } finally GraftNative.unpersistRows(sigs)
     marker.createNewFile()
     ()
   }
 
   def dedupStreamLsh(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val tmp = scratchDir("graft_snd")
+    val tmp = Harness.scratch("graft_snd")
     val inDir = s"$tmp/in"; val outDir = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
     val D = graft.operators.Dedup
     val sigs = D.minhashSignatures(Tables.documents(s, dir), "doc_id", "text")
@@ -667,15 +643,12 @@ object QueriesLog {
       .agg(min("holderId").as("parent"))
     val resolved = graft.operators.LockChains.resolve(edges)
       .select(col("pid").as("doc_id"), col("root_pid"), col("depth"))
-    val result = Tables.documents(s, dir).select(col("doc_id"))
+    Tables.documents(s, dir).select(col("doc_id"))
       .join(resolved, Seq("doc_id"), "left")
       .select(col("doc_id"),
         col("root_pid").isNull.as("is_first"),
         coalesce(col("root_pid"), col("doc_id")).as("canonical_id"),
         coalesce(col("depth"), lit(0L)).as("chain_depth"))
-      .localCheckpoint()
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
-    result
   }
 
   // X11 second half — the auto_explain format dispatch
@@ -914,9 +887,9 @@ object QueriesLog {
     // file is written by a single-task executor sort (spillable) and the
     // endpoint serves page windows off disk — the emulator scales with
     // the corpus it serves (r10 verdict, wrong #2)
-    val spoolRoot = java.nio.file.Files.createTempDirectory("graft_rds_spool")
-    val linesCk = lines.localCheckpoint() // EAGER: feeds 3 filtered writes
-    val fileMap = (0 until 3).map { i =>
+    val spoolRoot = Harness.scratch("graft_rds_spool")
+    val linesCk = GraftNative.persistRows(lines) // feeds 3 filtered writes
+    val fileMap = try (0 until 3).map { i =>
       val p = s"$spoolRoot/f$i"
       linesCk.filter(col("fidx") === i)
         .repartition(1).sortWithinPartitions("event_id")
@@ -927,7 +900,7 @@ object QueriesLog {
           .findFirst().get())
       s"error/postgresql.log.$i" ->
         (1700000000000L, graft.sources.RdsLogs.FileContent.spool(part))
-    }.toMap
+    }.toMap finally GraftNative.unpersistRows(linesCk)
     val creds = AwsSigV4.Credentials("AKIDGRAFT", "graft-secret-key")
     // the full reference chain (`awsutil/amazon.go:20-106`): base
     // credentials from the SDK default chain — whose last arm is a
@@ -946,7 +919,7 @@ object QueriesLog {
       fileMap + ("error/postgresql.log.stale" ->
         ((5L, graft.sources.RdsLogs.FileContent.mem(Seq("old"))))),
       pageSize = 400, tempCreds = sts.issued)
-    val spool = java.nio.file.Files.createTempDirectory("graft_rds_live")
+    val spool = java.nio.file.Paths.get(Harness.scratch("graft_rds_live"))
     try {
       val stsClient = new AwsSts.Client(sts.url, sts.host, "us-east-1",
         () => "20240101T000000Z")
@@ -1035,12 +1008,8 @@ object QueriesLog {
         java.nio.file.Files.write(spool.resolve(s"rds-$idx.body"),
           content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       }
-    } finally {
-      ep.stop(); sts.stop()
-      // the server-side spool is only read by the endpoint
-      org.apache.commons.io.FileUtils.deleteQuietly(spoolRoot.toFile)
-    }
-    val out = s.read.option("wholetext", "true")
+    } finally { ep.stop(); sts.stop() }
+    s.read.option("wholetext", "true")
       .option("pathGlobFilter", "*.body").text(spool.toString)
       .select(
         concat(lit("error/postgresql.log."),
@@ -1050,9 +1019,6 @@ object QueriesLog {
       .filter(col("col") =!= "")
       .select(col("file"), col("pos").cast("int").as("line_idx"),
         col("col").as("line"))
-      .localCheckpoint() // EAGER: materialize before the spool is deleted
-    org.apache.commons.io.FileUtils.deleteQuietly(spool.toFile)
-    out
   }
 
   // S28 — OTel OTLP/JSON log adapter: three record shapes per the
@@ -1085,7 +1051,7 @@ object QueriesLog {
     // the emulated corpus is spooled to a timestamp-sorted TSV file by a
     // single-task executor sort (spillable) and paged off disk — no
     // driver-held collection (r10 verdict, wrong #2)
-    val psSpool = java.nio.file.Files.createTempDirectory("graft_ps_srv")
+    val psSpool = Harness.scratch("graft_ps_srv")
     LogSynth.renderedLines(s, dir)
       .join(times, Seq("event_id"))
       .repartition(1).sortWithinPartitions("t", "event_id")
@@ -1098,7 +1064,7 @@ object QueriesLog {
     val ep = new PlanetScaleLogs.Endpoint("ps-tok-id", "ps-tok-secret",
       "graft-org", "graft-db", "main", "branch-abc123",
       PlanetScaleLogs.EntrySource.Spool(psPart))
-    val spool = java.nio.file.Files.createTempDirectory("graft_ps")
+    val spool = java.nio.file.Paths.get(Harness.scratch("graft_ps"))
     try {
       // wrong service token: 401 on the branch API
       val bad = new PlanetScaleLogs.Client(ep.url, ep.url, "ps-tok-id",
@@ -1145,17 +1111,11 @@ object QueriesLog {
         "branch id and valid signature must be cached")
       java.nio.file.Files.write(spool.resolve("planetscale-logs"),
         r1.content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } finally {
-      ep.stop()
-      org.apache.commons.io.FileUtils.deleteQuietly(psSpool.toFile)
-    }
-    val out = s.read.option("wholetext", "true").text(spool.toString)
+    } finally ep.stop()
+    s.read.option("wholetext", "true").text(spool.toString)
       .select(posexplode(split(col("value"), "\n")))
       .filter(col("col") =!= "")
       .select(col("pos").cast("int").as("line_idx"), col("col").as("line"))
-      .localCheckpoint() // EAGER: materialize before the spool is deleted
-    org.apache.commons.io.FileUtils.deleteQuietly(spool.toFile)
-    out
   }
 
   /** S36 — Tembo LIVE: the Loki tail-over-websocket log source
@@ -1203,7 +1163,7 @@ object QueriesLog {
     // frames spool to disk (one JSON frame per line, fid-sorted) and the
     // tail server streams them per traversal — no driver-held collection
     // (r10 verdict, wrong #2)
-    val tbSpool = java.nio.file.Files.createTempDirectory("graft_tembo_srv")
+    val tbSpool = Harness.scratch("graft_tembo_srv")
     frames0.repartition(1).sortWithinPartitions("fid").select("frame")
       .write.mode("overwrite").text(s"$tbSpool/frames")
     val tbPart = scala.util.Using.resource(java.nio.file.Files.list(
@@ -1213,7 +1173,7 @@ object QueriesLog {
     val frames = TemboLogs.spooledFrames(tbPart)
     val srv = new TemboLogs.LokiTailServer("graft-token", "org-graft",
       TemboLogs.tailPath("inst-graft", "graftns"), frames)
-    val spool = java.nio.file.Files.createTempDirectory("graft_tembo")
+    val spool = java.nio.file.Paths.get(Harness.scratch("graft_tembo"))
     try {
       def refuse(token: String, org: String): Boolean =
         try {
@@ -1229,16 +1189,11 @@ object QueriesLog {
         TemboLogs.tailPath("inst-graft", "graftns"), "graft-token",
         "org-graft", spool)
       require(n == frames.size, s"expected ${frames.size} frames, got $n")
-      val out = TemboLogs.parseFrames(
-        s.read.option("wholetext", "true")
-          .option("pathGlobFilter", "frame-*.json").text(spool.toString),
-        "value").localCheckpoint() // EAGER: spool deleted below
-      out
-    } finally {
-      srv.stop()
-      org.apache.commons.io.FileUtils.deleteQuietly(spool.toFile)
-      org.apache.commons.io.FileUtils.deleteQuietly(tbSpool.toFile)
-    }
+    } finally srv.stop()
+    TemboLogs.parseFrames(
+      s.read.option("wholetext", "true")
+        .option("pathGlobFilter", "frame-*.json").text(spool.toString),
+      "value")
   }
 
   /** S28 — the OTel server's Kubernetes pod/label FILTER
@@ -1373,7 +1328,7 @@ object QueriesLog {
         array_join(transform(col("rs"), x => x.getField("record")), ","),
         lit("]}]}]}")).as("req"))
       .collect().map(_.getString(0)) // bounded: |events|/3700 requests
-    val spool = java.nio.file.Files.createTempDirectory("graft_otel_live")
+    val spool = java.nio.file.Paths.get(Harness.scratch("graft_otel_live"))
     val rx = new OtelReceiver.Receiver(spool, maxPending = Int.MaxValue)
     try {
       reqs.foreach { r =>
@@ -1385,13 +1340,10 @@ object QueriesLog {
     } finally rx.stop()
     val spooled = s.read.option("wholetext", "true")
       .option("pathGlobFilter", "*.body").text(spool.toString)
-    val out = graft.sources.CloudLogs.otelLogLines(spooled, "value")
+    graft.sources.CloudLogs.otelLogLines(spooled, "value")
       .select("record_kind", "k8s_pod", "k8s_namespace", "pid",
         "log_line_no", "log_level", "username", "database", "content",
         "is_detail")
-      .localCheckpoint() // EAGER: materialize before the spool is deleted
-    org.apache.commons.io.FileUtils.deleteQuietly(spool.toFile)
-    out
   }
 
   // S29 — Heroku HTTPS log-drain adapter: octet-framed syslog bodies
@@ -1480,7 +1432,7 @@ object QueriesLog {
     val tokens = new GcpOAuth.TokenEndpoint(
       "collector@graft-project.iam.gserviceaccount.com", keys.getPublic)
     val em = new PubSubPull.Emulator(requireBearer = Some(tokens.isValid))
-    val spool = java.nio.file.Files.createTempDirectory("graft_pubsub_live")
+    val spool = java.nio.file.Paths.get(Harness.scratch("graft_pubsub_live"))
     try {
       messages.foreach(em.publish)
       // refusal surfaces: no token → 401; a forged assertion (wrong
@@ -1488,7 +1440,7 @@ object QueriesLog {
       val unauth = new PubSubPull.Puller(
         em.endpoint, "projects/p0/subscriptions/postgres-logs",
         Seq(PubSubPull.ServerCfg("p0", "inst0")),
-        java.nio.file.Files.createTempDirectory("graft_pubsub_unauth"))
+        java.nio.file.Paths.get(Harness.scratch("graft_pubsub_unauth")))
       require(unauth.tick(1).received == 0,
         "an untokened pull must receive nothing (401)")
       require(em.availableCount == messages.length,
@@ -1590,12 +1542,9 @@ object QueriesLog {
       .withColumn("event_id",
         regexp_extract(col("value"), "\"insertId\":\"ins(\\d+)\"", 1)
           .cast("long"))
-    val out = graft.sources.CloudLogs.gcpLogStream(spooled, "value")
+    graft.sources.CloudLogs.gcpLogStream(spooled, "value")
       .select("event_id", "project_id", "instance_id", "log_time",
         "severity", "content")
-      .localCheckpoint() // EAGER: materialize before the spool is deleted
-    org.apache.commons.io.FileUtils.deleteQuietly(spool.toFile)
-    out
   }
 
   // S31 — Azure Event Hub record synthesis: single-server records with
@@ -1684,10 +1633,10 @@ object QueriesLog {
     val saslCreds = "RootManageSharedAccessKey" -> "graft-sas-key"
     val broker = new AmqpEventHub.Broker("pglogs", partitions = 4,
       sasl = Some(saslCreds))
-    val spool = java.nio.file.Files.createTempDirectory("graft_eventhub")
+    val spool = java.nio.file.Paths.get(Harness.scratch("graft_eventhub"))
     try {
       bodies.zipWithIndex.foreach { case (b, i) => broker.publish(i % 4, b) }
-      val badSpool = java.nio.file.Files.createTempDirectory("graft_eh_bad")
+      val badSpool = java.nio.file.Paths.get(Harness.scratch("graft_eh_bad"))
       val bad = new AmqpEventHub.Consumer(
         "127.0.0.1", broker.port, "pglogs", partitions = 4, badSpool,
         sasl = Some(saslCreds._1 -> "wrong-key"))
@@ -1697,7 +1646,6 @@ object QueriesLog {
           String.valueOf(e.getMessage).contains("SASL") ||
             e.isInstanceOf[java.io.IOException] }
       require(refused, "a wrong SAS key must fail SASL authentication")
-      org.apache.commons.io.FileUtils.deleteQuietly(badSpool.toFile)
       val consumer = new AmqpEventHub.Consumer(
         "127.0.0.1", broker.port, "pglogs", partitions = 4, spool,
         sasl = Some(saslCreds))
@@ -1705,12 +1653,9 @@ object QueriesLog {
       require(received == bodies.length && spooled == bodies.length,
         s"wire loss: published ${bodies.length}, got $received/$spooled")
     } finally broker.stop()
-    val out = graft.sources.CloudLogs.azureLogLines(
+    graft.sources.CloudLogs.azureLogLines(
       AmqpEventHub.readSpool(s, spool), "value")
       .select("server_name", "log_level", "line", "is_detail")
-      .localCheckpoint() // EAGER: materialize before the spool is deleted
-    org.apache.commons.io.FileUtils.deleteQuietly(spool.toFile)
-    out
   }
 
   // X6 — timestamp parse with timezone resolution: offset-suffixed log

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftNative, SparkSession}
+import org.apache.spark.sql.GraftNative.persistRows
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Similarity}
@@ -11,39 +12,11 @@ import graft.functions.TextFns
   */
 object QueriesText {
 
-  /** Per-invocation scratch dir for persisted-index round-trips —
-    * tmpfs when available (the host disk throttles under sustained
-    * load). Per-invocation (not keyed by the data dir) so concurrent
-    * runs never race each other's save()/probe and distinct data dirs
-    * can never collide onto one index path.
-    *
-    * tmpfs is RAM: a large-SF corpus's index + streaming scratch could
-    * exhaust it mid-run, so /dev/shm is used only when it has
-    * comfortable headroom (>4 GiB usable), and SPARK_GRAFT_SCRATCH
-    * overrides the location outright (set it to a disk path — or an
-    * HDFS-mounted one — for large scale factors). */
-  private[graft] def scratchDir(prefix: String): String = {
-    val shm = new java.io.File("/dev/shm")
-    val p = sys.env.get("SPARK_GRAFT_SCRATCH") match {
-      case Some(root) =>
-        val r = new java.io.File(root)
-        r.mkdirs()
-        java.nio.file.Files.createTempDirectory(r.toPath, prefix)
-      case None if shm.isDirectory && shm.getUsableSpace > (4L << 30) =>
-        java.nio.file.Files.createTempDirectory(shm.toPath, prefix)
-      case None => java.nio.file.Files.createTempDirectory(prefix)
-    }
-    p.toFile.getAbsolutePath
-  }
-
-  /** Build-probe-cleanup bracket: `body` gets a fresh index path, its
-    * result is pinned with localCheckpoint (the scratch dir is deleted
-    * before returning, so the frame must not lazily re-read it). */
-  private def withScratchIndex(prefix: String)(body: String => DataFrame): DataFrame = {
-    val tmp = scratchDir(prefix)
-    try body(s"$tmp/index").localCheckpoint()
-    finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
-  }
+  /** Build-probe bracket: `body` gets a fresh index path under a
+    * [[Harness.scratch]] dir, which outlives the returned frame's reads. */
+  private def withScratchIndex(prefix: String)(body: String => DataFrame)
+      : DataFrame =
+    body(s"${Harness.scratch(prefix)}/index")
 
   def dedupExact(s: SparkSession, dir: String): DataFrame =
     Dedup.exact(Tables.fanOut(Tables.documents(s, dir)), "doc_id", "text")
@@ -448,10 +421,10 @@ object QueriesText {
   def semDedupBounded(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.fanOut(Tables.embeddings(s, dir))
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
-      .localCheckpoint() // EAGER: feeds the k-means passes + assignment
+      .transform(persistRows) // feeds the k-means passes + assignment
     val assigned = Similarity.ivfAssign(
         e, Similarity.ivfFit(e, k = Similarity.BoundedK, iters = 2, dim = 64))
-      .localCheckpoint() // feeds the drop arms + the final join
+      .transform(persistRows) // feeds the drop arms + the final join
     val dropped = Similarity.cappedWitnessDrop(assigned,
       threshold = 0.3, cap = Similarity.WitnessCap)
     assigned.join(dropped.withColumn("dup", lit(true)), Seq("id"), "left")
@@ -463,10 +436,11 @@ object QueriesText {
     val threshold = 0.3
     val e = Tables.fanOut(Tables.embeddings(s, dir))
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
-      .localCheckpoint() // EAGER: feeds count + ivfFit's k-means passes
-      // + ivfAssign + the final join — without it the auto-k count()
-      // re-runs the embeddings scan (r7 verdict finding #1); block-
-      // manager storage spills to disk so it stays bounded at scale
+      // feeds count + ivfFit's k-means passes + ivfAssign + the final
+      // join — without it the auto-k count() re-runs the embeddings scan
+      // (r7 verdict finding #1); MEMORY_AND_DISK, so it stays bounded at
+      // scale
+      .transform(persistRows)
     // k scales with the corpus so cluster sizes stay ~300 and the
     // within-cluster pairwise stays bounded (quadratic in cluster
     // size × k clusters = LINEAR total when k ∝ n) — the SemDeDup
@@ -477,16 +451,16 @@ object QueriesText {
     // k is bounded, a scale-killer once k ∝ n; strictly above
     // TwoLevelMinK the coarse-routed two-level assignment takes over
     // (n·√k·nprobe work, √k broadcast). Same threshold in the oracle.
-    // EAGER checkpoint: the assignment feeds THREE arms of one action
-    // (both pairwise sides + the kept-flag join) — without it Spark
-    // re-runs the whole fit+assign subtree once per arm (the dominant
-    // term of the r10 sf10 wall time)
+    // persisted: the assignment feeds THREE arms of one action (both
+    // pairwise sides + the kept-flag join) — without it Spark re-runs
+    // the whole fit+assign subtree once per arm (the dominant term of
+    // the r10 sf10 wall time)
     val assigned = (
       if (k > Similarity.TwoLevelMinK)
         Similarity.ivfFitAssign2L(e, k = k, iters = 2, dim = 64)
       else
         Similarity.ivfAssign(e, Similarity.ivfFit(e, k = k, iters = 2, dim = 64))
-    ).localCheckpoint()
+    ).transform(persistRows)
     // Duplicate-heavy corpora collapse identical vectors into one
     // cluster (measured at sf10: one cluster holds 41% of the corpus),
     // making the bare within-cluster pairwise intrinsically quadratic.
@@ -515,7 +489,7 @@ object QueriesText {
     val groups = nzAssigned.filter(col("nz"))
       .groupBy(col("cluster"), col("vec"))
       .agg(min(col("id")).as("rep_id"))
-      .localCheckpoint() // feeds the dup-drop arm AND the rep pairwise
+      .transform(persistRows) // feeds the dup-drop arm AND the rep pairwise
     val dupDropped = nzAssigned.filter(col("nz"))
       .join(groups, Seq("cluster", "vec"))
       .filter(col("id") > col("rep_id"))
@@ -548,14 +522,12 @@ object QueriesText {
     * decimals). */
   def textTfidfTopK(s: SparkSession, dir: String): DataFrame = {
     val d = Tables.fanOut(Tables.documents(s, dir))
-    // tf feeds both the df aggregation and the scoring join:
-    // materialize it (vocab × docs rows, far smaller than the token
-    // stream) so the corpus is exploded and counted once, not once per
-    // consumer. At lake scale this is persist(DISK_ONLY); locally a
-    // lazy checkpoint.
+    // tf feeds both the df aggregation and the scoring join: persist
+    // it (vocab × docs rows, far smaller than the token stream) so the
+    // corpus is exploded and counted once, not once per consumer.
     val tf = d.select(col("doc_id"), explode(TextFns.words(col("text"))).as("term"))
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      .localCheckpoint() // EAGER: feeds df agg + scoring join
+      .transform(persistRows) // feeds df agg + scoring join
     val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val n = d.agg(count(lit(1)).as("n_docs"))
     val w = org.apache.spark.sql.expressions.Window
@@ -581,15 +553,15 @@ object QueriesText {
     val terms = Seq("hash", "table", "scan")
     val k1 = 1.2; val b = 0.75
     // ONE tokenization pass: per-doc length and the pruned-to-3-terms
-    // hit list come out of the same projection, materialized
-    // doc-count-sized (lazy localCheckpoint) so the stats branch and
-    // the tf branch don't each re-tokenize the corpus — tokenizing
-    // 100 TB twice is the avoidable cost here.
+    // hit list come out of the same projection, persisted
+    // doc-count-sized so the stats branch and the tf branch don't each
+    // re-tokenize the corpus — tokenizing 100 TB twice is the avoidable
+    // cost here.
     val d = Tables.fanOut(Tables.documents(s, dir))
       .select(col("doc_id"), TextFns.words(col("text")).as("ws"))
       .select(col("doc_id"), size(col("ws")).as("dl"),
         filter(col("ws"), w => w.isInCollection(terms)).as("hits"))
-      .localCheckpoint() // EAGER: feeds tf branch + corpus stats branch
+      .transform(persistRows) // feeds tf branch + corpus stats branch
     val tf = d.select(col("doc_id"), col("dl"),
       explode(col("hits")).as("term"))
       .groupBy("doc_id", "dl", "term").agg(count(lit(1)).as("tf"))
@@ -956,9 +928,8 @@ object QueriesText {
         .as(Seq("pos", "bg")))
       .select(col("doc_id"), col("pos"),
         col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-      .localCheckpoint() // EAGER: feeds counts + scoring join — three
-    // branches of one final action; a lazy checkpoint here is
-    // recomputed concurrently per branch (see dedupSubstrings)
+      // feeds counts + scoring join: three branches of one final action
+      .transform(persistRows)
     val cBig = bg.groupBy("w1", "w2").agg(count(lit(1)).as("cb"))
     val cCtx = bg.groupBy("w1").agg(count(lit(1)).as("cu"))
     val vocab = docs
@@ -1002,7 +973,7 @@ object QueriesText {
     val lm = textLmScore(s, dir)
       .select(col("doc_id"), col("perplexity"),
         floor(col("perplexity") * 16).cast("long").as("pf"))
-      .localCheckpoint() // EAGER: feeds the histogram AND the assignment
+      .transform(persistRows) // feeds the histogram AND the assignment
     val hist = lm.groupBy("pf").agg(count(lit(1)).as("cnt"))
       .withColumn("cum", sum("cnt").over(
         W.orderBy("pf").rowsBetween(W.unboundedPreceding, W.currentRow)))
@@ -1037,11 +1008,9 @@ object QueriesText {
     val docs = Tables.fanOut(Tables.documents(s, dir))
     val tokens = docs.select(col("doc_id"),
         posexplode(TextFns.words(col("text"))).as(Seq("i", "tok")))
-      // EAGER: these tables feed two branches of ONE action each — a
-      // lazy checkpoint would be computed concurrently (and redundantly)
-      // by both branches' stages before it persists; eager pays one
-      // up-front job and every consumer reads the materialized copy
-      .localCheckpoint()
+      // these tables feed two branches of ONE action each: persisted,
+      // so both branches read one computed copy
+      .transform(persistRows)
     val windows = docs
       .select(col("doc_id"), TextFns.words(col("text")).as("ws"))
       // size < W would make sequence(0, negative) run DESCENDING in
@@ -1054,12 +1023,12 @@ object QueriesText {
       .select(col("doc_id"), posexplode(
         graft.functions.expressions.NgramFnv64Expr.column(col("ws"), W))
         .as(Seq("pos", "h")))
-      .localCheckpoint() // feeds dup count + the dup join (see above)
+      .transform(persistRows) // feeds dup count + the dup join (see above)
     val dupHashes = windows.groupBy("h")
       .agg(count(lit(1)).as("n")).filter(col("n") > 1).select("h")
     val dupw = windows.join(dupHashes, Seq("h"))
       .select(col("doc_id"), col("pos"))
-      .localCheckpoint() // feeds coverage + per-doc count (see above)
+      .transform(persistRows) // feeds coverage + per-doc count (see above)
     val covered = dupw
       .select(col("doc_id"),
         explode(expr(s"sequence(pos, pos + $W - 1)")).as("i"))
@@ -1147,8 +1116,9 @@ object QueriesText {
     // only 50 full vectors per query instead of the corpus
     val adc50 = ProductQuant.adcTopK(queries, codes, cents,
       k = 50, m = 8, dim = 64, nCodes = 16)
-      .localCheckpoint() // EAGER: feeds raw top-5 AND the re-rank — a
-    // lazy checkpoint re-runs the whole ADC chain once per branch
+      // feeds raw top-5 AND the re-rank — unpersisted, the whole ADC chain
+      // would re-run once per branch
+      .transform(persistRows)
     val adc5 = adc50.filter(col("rank") <= 5)
       .select(col("q_id"), col("n_id"), lit(1L).as("hit"))
     val corpus = e.select(col("vec_id").as("n_id"), col("embedding").as("n_vec"))
@@ -1194,8 +1164,9 @@ object QueriesText {
       .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
     val r = ProductQuant.ivfPqTopK(queries, emb, k = 50,
       nClusters = 16, nprobe = 4, m = 8, nCodes = 16, iters = 2, dim = 64)
-    val adc50 = r.topK.localCheckpoint() // EAGER: feeds raw + rerank —
-    // lazy would re-run the full IVF-PQ ADC chain once per branch
+    // feeds raw + rerank — unpersisted, the full IVF-PQ ADC chain
+    // would re-run once per branch
+    val adc50 = r.topK.transform(persistRows)
     val adc5 = adc50.filter(col("rank") <= 5)
       .select(col("q_id"), col("n_id"), lit(1L).as("hit"))
     val w = org.apache.spark.sql.expressions.Window
@@ -1271,7 +1242,7 @@ object QueriesText {
     val docFeat = bg
       .select(col("doc_id"), col("lang"), pmod(col("h"), lit(B)).as("bucket"))
       .groupBy("doc_id", "lang", "bucket").agg(count(lit(1)).as("n"))
-      .localCheckpoint() // EAGER: feeds raw + target + per-doc weights
+      .transform(persistRows) // feeds raw + target + per-doc weights
     val raw = docFeat.groupBy("bucket").agg(sum("n").as("cr"))
     val tgt = docFeat.filter(col("lang") === "en")
       .groupBy("bucket").agg(sum("n").as("ct"))
@@ -1403,7 +1374,7 @@ object QueriesText {
     // B divides 2^64 → signed pmod equals the oracle's unsigned mod
     val sb = toks.select(col("source"), pmod(h, lit(B)).as("bucket"))
       .groupBy("source", "bucket").agg(count(lit(1)).as("n"))
-      .localCheckpoint() // EAGER: feeds corpus totals AND the grid
+      .transform(persistRows) // feeds corpus totals AND the grid
     val cb = sb.groupBy("bucket").agg(sum("n").as("cbn"))
     val totals = sb.agg(sum("n").as("nn"))
     val srcs = sb.groupBy("source").agg(sum("n").as("ns"))
@@ -1441,7 +1412,7 @@ object QueriesText {
     // per-instance ranks) and the source list — previously three
     // separate corpus-wide explode passes
     val g = toks.groupBy("source", "w").agg(count(lit(1)).as("c"))
-      .localCheckpoint() // EAGER: feeds ranks + sources + tot
+      .transform(persistRows) // feeds ranks + sources + tot
     val h = org.apache.spark.sql.GraftNative.column(
       graft.functions.expressions.Fnv64Expr(
         org.apache.spark.sql.GraftNative.expression(col("w"))))
@@ -1571,7 +1542,7 @@ object QueriesText {
         .select(col("vec_id").as("q_id"), col("embedding").as("q_vec")),
       e.select(col("vec_id").as("n_id"), col("embedding").as("n_vec")),
       k = 5).select("q_id", "n_id")
-      .localCheckpoint() // EAGER: joined against all three arms
+      .transform(persistRows) // joined against all three arms
     val arms = Seq(8, 16, 32).map { d =>
       val approx = Similarity.bruteForceTopK(
         e.filter(col("vec_id") < 20)
@@ -1637,8 +1608,8 @@ object QueriesText {
     * column — each produce a per-query top-20, fused by
     * RRF(60): score = Σ 1/(60 + rank), missing rank contributes 0.
     * The corpus is documents ⨝ embeddings on id (co-partitioned
-    * equi-join at scale); the ONE tokenization pass is checkpointed
-    * eagerly because stats / df / tf / query-terms all branch from it.
+    * equi-join at scale); the ONE tokenization pass is persisted
+    * because stats / df / tf / query-terms all branch from it.
     * BM25 contributions fold in term order and cosine is the proven
     * brute-force shape, so every rank — and therefore the fused
     * ordering — is bit-reproduced by the oracle.
@@ -1660,7 +1631,7 @@ object QueriesText {
       .select(col("doc_id"), TextFns.words(col("text")).as("ws"))
       .join(emb, col("doc_id") === col("vec_id"))
       .select(col("doc_id"), col("ws"), col("embedding"))
-      .localCheckpoint() // EAGER: stats + df + tf + queries + vector side
+      .transform(persistRows) // feeds stats + df + tf + queries + vector side
     val stats = corpus.agg(count(lit(1)).as("n_docs"),
       sum(size(col("ws"))).as("sum_dl"))
     val toks = corpus.select(col("doc_id"), size(col("ws")).as("dl"),
@@ -1732,7 +1703,7 @@ object QueriesText {
             concat(lit(prefix), c.cast("string")))))
     val d = Tables.fanOut(Tables.documents(s, dir))
       .select(col("doc_id"), TextFns.winnowFingerprints(col("text")).as("fps"))
-      .localCheckpoint() // EAGER: feeds the bench bit-set AND the train scan
+      .transform(persistRows) // feeds the bench bit-set AND the train scan
     val benchFps = d.filter(col("doc_id") % 97 === 0)
       .select(explode(col("fps")).as("fp")).distinct()
     // the filter travels as a REAL bitset: 4096 bits = 64 words,
@@ -1892,7 +1863,7 @@ object QueriesText {
     val wc = Tables.fanOut(Tables.documents(s, dir))
       .select(explode(TextFns.words(col("text"))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint() // EAGER: feeds sketch build + candidates + output
+      .transform(persistRows) // feeds sketch build + candidates + output
     def bucket(dRow: Column, word: Column): Column =
       pmod(org.apache.spark.sql.GraftNative.column(
         graft.functions.expressions.Fnv64Expr(
@@ -2222,7 +2193,7 @@ object QueriesText {
     *    6 decimals; prediction compares the ROUNDED scores (tie → 0).
     *
     * Scale shape: ONE corpus tokenization feeds both branches
-    * (localCheckpoint); training is one map-side-combined count
+    * (persisted); training is one map-side-combined count
     * shuffle; scoring is a corpus scan against the broadcast V-row
     * model plus one per-doc aggregation. Linear end-to-end with a
     * constant-size broadcast — no corpus-proportional state anywhere. */
@@ -2234,7 +2205,7 @@ object QueriesText {
         when(size(col("ws")) > 0 &&
           TextFns.stopwordHits(col("ws"), "en").cast("double") /
             size(col("ws")) >= 0.05, 1).otherwise(0))
-      .localCheckpoint() // EAGER: feeds the train branch + the eval branch
+      .transform(persistRows) // feeds the train branch + the eval branch
     val train = d.filter(col("doc_id") % 5 =!= 0)
     val toks = train.select(col("label"), explode(col("ws")).as("term"))
     val vocab = toks.groupBy("term").agg(count(lit(1)).as("cnt"))
@@ -2326,7 +2297,7 @@ object QueriesText {
     val dSigs = Dedup.minhashSignatures(delta, "doc_id", "text")
       // probe fans the (small) delta side into three broadcasts — build
       // the signatures once, not once per consumer
-      .localCheckpoint()
+      .transform(persistRows)
     val scored = graft.operators.LshIndex.probe(s, path, dSigs)
     val nCand = scored.groupBy("delta_id")
       .agg(count(lit(1)).as("n_cand"))
@@ -2366,11 +2337,11 @@ object QueriesText {
     graft.operators.LshIndex.save(base, "doc_id", "text", path)
     val dSigs = Dedup.minhashSignatures(delta, "doc_id", "text")
       .withColumn("b", expr("(id DIV 10) % 3").cast("int"))
-      .localCheckpoint()
-    (0 until 3).foreach { k =>
+      .transform(persistRows) // feeds the three appends
+    try (0 until 3).foreach { k =>
       graft.operators.LshIndex.appendTagged(s, path,
         dSigs.filter(col("b") === k).select("id", "sig"), k.toLong)
-    }
+    } finally GraftNative.unpersistRows(dSigs)
     graft.operators.IndexMaintenance.lshPolicyFrame(s, path,
       fracThreshold = 0.05, maxSegments = 16)
   }

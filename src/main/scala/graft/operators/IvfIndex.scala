@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftNative, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -82,20 +82,22 @@ object IvfIndex {
     AtomicSwap.recover(path)
     val cents = s.read.parquet(s"$path/centroids")
     // feeds the lists append AND the stats append — assign once
-    val assigned = Similarity.ivfAssign(delta, cents).localCheckpoint()
-    assigned.write.mode(SaveMode.Append).partitionBy("cluster")
-      .parquet(s"$path/lists")
-    // appended-shard list populations accumulate under seg=delta (≤ k
-    // rows per append): the [[IndexMaintenance.ivfPolicy]] refit
-    // trigger reads THESE instead of re-scoring the corpus — a shard
-    // that collapses into a few lists under the stale centroids
-    // (domain shift: a new source sharing a dominant direction) is
-    // exactly the case the drift artifact showed losing 27 recall
-    // points, and the skew ALSO predicts the probe-cost hot-list
-    // failure
-    statsOf(assigned)
-      .coalesce(1).write.mode(SaveMode.Append)
-      .parquet(s"$path/stats/seg=delta")
+    val assigned = GraftNative.persistRows(Similarity.ivfAssign(delta, cents))
+    try {
+      assigned.write.mode(SaveMode.Append).partitionBy("cluster")
+        .parquet(s"$path/lists")
+      // appended-shard list populations accumulate under seg=delta (≤ k
+      // rows per append): the [[IndexMaintenance.ivfPolicy]] refit
+      // trigger reads THESE instead of re-scoring the corpus — a shard
+      // that collapses into a few lists under the stale centroids
+      // (domain shift: a new source sharing a dominant direction) is
+      // exactly the case the drift artifact showed losing 27 recall
+      // points, and the skew ALSO predicts the probe-cost hot-list
+      // failure
+      statsOf(assigned)
+        .coalesce(1).write.mode(SaveMode.Append)
+        .parquet(s"$path/stats/seg=delta")
+    } finally GraftNative.unpersistRows(assigned)
   }
 
   /** Re-fit — the IVF maintenance counterpart of
@@ -149,8 +151,9 @@ object IvfIndex {
       .filter(col("rn") <= nprobe)
       .select("q_id", "q_vec", "cluster")
       // feeds the router collect AND the candidate join — tiny
-      // (queries × nprobe rows); eager so the centroid scoring runs once
-      .localCheckpoint()
+      // (queries × nprobe rows); persisted so the centroid scoring runs
+      // once
+      .transform(GraftNative.persistRows)
     val probedLists = probes.select("cluster").distinct()
       .collect().map(_.getInt(0)).sorted
     val lists = s.read.parquet(s"$path/lists")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftNative, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Persisted MinHash-LSH band index: the build-once / probe-per-shard
@@ -124,7 +124,7 @@ object LshIndex {
       .agg(count(lit(1)).as("n"))
       // both the anti-join filter and the keycounts write read this;
       // one aggregation pass, not two
-      .localCheckpoint()
+      .transform(GraftNative.persistRows)
     val hot = counts.filter(col("n") > cap).select("band", "band_sig")
     // one exchange keyed on the physical partition column (each bucket
     // dir gets one file per write, still row-group-splittable), then an
@@ -132,15 +132,17 @@ object LshIndex {
     // required ordering (prefix `bucket`), so no second sort runs and
     // the `band` order survives into row-group min/max stats — the
     // within-bucket pruning under each bucket dir
-    b.join(broadcast(hot), Seq("band", "band_sig"), "left_anti")
-      .withColumn("bucket", bucketOf(col("band_sig")))
-      .repartition(col("bucket"))
-      .sortWithinPartitions("bucket", "band")
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("bucket")
-      .parquet(s"$root/bands/seg=$seg")
-    writeCounts(counts.filter(col("n") <= cap), root, seg,
-      SaveMode.Overwrite)
+    try {
+      b.join(broadcast(hot), Seq("band", "band_sig"), "left_anti")
+        .withColumn("bucket", bucketOf(col("band_sig")))
+        .repartition(col("bucket"))
+        .sortWithinPartitions("bucket", "band")
+        .write.mode(SaveMode.Overwrite)
+        .partitionBy("bucket")
+        .parquet(s"$root/bands/seg=$seg")
+      writeCounts(counts.filter(col("n") <= cap), root, seg,
+        SaveMode.Overwrite)
+    } finally GraftNative.unpersistRows(counts)
   }
 
   /** Append write path: plain sorted files only — no dynamic partition
@@ -198,11 +200,10 @@ object LshIndex {
   def probe(s: SparkSession, path: String, delta: DataFrame,
       maxBucket: Int = MaxBucket): DataFrame = {
     AtomicSwap.recover(path) // roll FORWARD an interrupted compact
+    // read by the router collect AND the candidate join; not persisted:
+    // banding is a per-row slice of `delta`, which callers persist
     val dBands = banded(delta)
       .select(col("id").as("delta_id"), col("band"), col("band_sig"))
-      // feeds the router collect AND the candidate join — materialize
-      // the (small) delta banding once
-      .localCheckpoint()
     // router: the delta's touched (band, bucket) cells — bounded by
     // Bands × NumBuckets (512) regardless of delta size. The bucket
     // projection of the cells is pushed as a LITERAL partition filter

@@ -258,7 +258,7 @@ object Similarity {
     * aggregation buffer, forcing SortAggregate over the full n·k
     * scored frame (external-sort spill storm on small executors at
     * sf10 — the lc drill's exit-52). The vector column joins back from
-    * `emb` afterward (callers pass a checkpointed or plain-scan emb, so
+    * `emb` afterward (callers pass a persisted or plain-scan emb, so
     * the double reference is a cheap re-scan, not a recompute). */
   def ivfAssign(emb: DataFrame, cents: DataFrame): DataFrame = {
     val scored = emb.select("id", "vec").crossJoin(broadcast(cents))
@@ -325,7 +325,8 @@ object Similarity {
     val groups = nzAssigned.filter(col("nz"))
       .groupBy(col("cluster"), col("vec"))
       .agg(min(col("id")).as("rep_id"))
-      .localCheckpoint() // feeds the dup-drop arm AND the witness frame
+      // feeds the dup-drop arm AND the witness frame
+      .transform(GraftNative.persistRows)
     val dupDropped = nzAssigned.filter(col("nz"))
       .join(groups, Seq("cluster", "vec"))
       .filter(col("id") > col("rep_id"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftNative}
 import org.apache.spark.sql.functions._
 
 /** Unigram-LM tokenizer (the SentencePiece / Kudo-2018 family) — the
@@ -83,7 +83,8 @@ object UnigramLm {
   /** One full E+M pass: (piece, freq, lp, m_count, n_words_using). */
   def emRound(wordCounts: DataFrame, vocabTop: Int): DataFrame = {
     val vocab = seedVocab(wordCounts, vocabTop)
-      .localCheckpoint() // EAGER: feeds the candidate join AND the output
+      // feeds the candidate join AND the output
+      .transform(GraftNative.persistRows)
     val seg = viterbi(wordCounts, vocab)
     val usage = seg
       .select(col("wc"), col("w"), explode(col("pieces")).as("piece"))

@@ -1,6 +1,6 @@
 package graft.sinks
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftNative, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -137,10 +137,12 @@ object CompactSnapshotPipeline {
       droppedSections: Seq[String] = Nil)
 
   /** Run the distributed stages and collect the bounded sections. The
-    * parsed corpus and the sample subset are each materialized once
-    * (they feed several consumers); the six section collects then run
-    * concurrently — wall-clock is the longest collect, not the sum
-    * (same overlap pattern as [[FullSnapshotPipeline.assemble]]). */
+    * parsed corpus and the sample subset are each cached while the
+    * section collects need them (they feed several consumers); the six
+    * section collects then run concurrently — wall-clock is the longest
+    * collect, not the sum (same overlap pattern as
+    * [[FullSnapshotPipeline.assemble]]). Nothing stays persisted
+    * afterwards. */
   def assemble(s: SparkSession, dir: String,
       logLineLimit: Int = SectionCap.LogLineLimit): Doc = {
     import scala.concurrent.{Await, ExecutionContext, Future}
@@ -148,94 +150,94 @@ object CompactSnapshotPipeline {
     implicit val ec: ExecutionContext = ExecutionContext.global
     def bg[T](f: => T): Future[T] = Future(f)
 
-    // J5 dims over the parsed corpus. Eager checkpoints: the parsed
-    // corpus feeds multiple consumers (two dim builds + four section
-    // collects, several CONCURRENT), so the expensive parse lineage is
-    // materialized exactly once up front (a lazy checkpoint would both
-    // recompute per consumer and race its first materialization across
-    // the collect futures). One interval's lines are the reference's
-    // bounded logs tick, not the full lake.
-    val base = parsedLines(s, dir).localCheckpoint()
+    // J5 dims over the parsed corpus. The parsed corpus feeds multiple
+    // consumers (two dim builds + four section collects, several
+    // CONCURRENT), so the expensive parse lineage is cached and computed
+    // once; released when the document is assembled. One interval's
+    // lines are the reference's bounded logs tick, not the full lake.
+    val base = parsedLines(s, dir).transform(GraftNative.persistRows)
     val (roleDim, f1) = DimEncode.encode(base, "username")
     val (dbDim, f2) = DimEncode.encode(f1, "database")
-    val lines = f2.localCheckpoint()
+    val lines = f2.transform(GraftNative.persistRows)
     val clicks = lines.filter(col("is_query"))
       .withColumn("qkey",
         struct(col("database_idx"), col("username_idx"), col("fp")))
     val (_, qFact0) = DimEncode.encode(clicks, "qkey")
-    val qFact = qFact0.localCheckpoint()
+    val qFact = qFact0.transform(GraftNative.persistRows)
 
-    // W6 made a hard bound: the reference's log path is backpressure-
-    // bounded (`runner/logs.go:265-283` discards rather than buffer
-    // unboundedly); here the equivalent guard drops an over-limit
-    // batch's line AND sample sections (samples derive from the same
-    // lines) with a flag, keeping the driver collect limit-bounded.
-    val fLines = bg {
-      SectionCap.guarded(
-        lines.join(qFact.select(col("event_id"), col("qkey_idx")),
-            Seq("event_id"), "left")
-          .select(col("file_idx"), col("byte_start"),
-            col("byte_content_start"), col("byte_end"), col("pid"),
-            col("level"), col("classification"), col("username_idx"),
-            col("database_idx"), col("qkey_idx"), col("occurred_at_s"),
-            col("content"), col("event_id"))
-          .orderBy("file_idx", "byte_start"),
-        logLineLimit, "log lines", "log line")
-    }
-    val fSamples = bg {
-      SectionCap.guarded(
-        qFact.select(col("qkey_idx"), col("occurred_at_s"),
-            col("runtime_ms"), col("query"), col("file_idx"),
-            col("byte_start"), col("event_id"))
-          .orderBy("file_idx", "byte_start"),
-        logLineLimit, "query samples", "query sample")
-    }
-    val fQueryRows = bg {
-      qFact.groupBy("qkey_idx")
-        .agg(first("database_idx").as("database_idx"),
-          first("username_idx").as("username_idx"), first("fp").as("fp"),
-          min("normalized_query").as("normalized_query"))
-        .orderBy("qkey_idx").collect().toIndexedSeq
-    }
-    val fFiles = bg {
-      lines.groupBy("file_idx")
-        .agg(sum(col("len") + 1).as("byte_size"),
-          count(lit(1)).as("n_lines"))
-        .orderBy("file_idx").collect().toIndexedSeq
-    }
-    val fRoles = bg(roleDim.select("username_idx", "username")
-      .orderBy("username_idx").collect().toIndexedSeq)
-    val fDbs = bg(dbDim.select("database_idx", "database")
-      .orderBy("database_idx").collect().toIndexedSeq)
-    val fAt = bg(lines.agg(max("occurred_at_s")).head.getLong(0))
+    try {
+      // W6 made a hard bound: the reference's log path is backpressure-
+      // bounded (`runner/logs.go:265-283` discards rather than buffer
+      // unboundedly); here the equivalent guard drops an over-limit
+      // batch's line AND sample sections (samples derive from the same
+      // lines) with a flag, keeping the driver collect limit-bounded.
+      val fLines = bg {
+        SectionCap.guarded(
+          lines.join(qFact.select(col("event_id"), col("qkey_idx")),
+              Seq("event_id"), "left")
+            .select(col("file_idx"), col("byte_start"),
+              col("byte_content_start"), col("byte_end"), col("pid"),
+              col("level"), col("classification"), col("username_idx"),
+              col("database_idx"), col("qkey_idx"), col("occurred_at_s"),
+              col("content"), col("event_id"))
+            .orderBy("file_idx", "byte_start"),
+          logLineLimit, "log lines", "log line")
+      }
+      val fSamples = bg {
+        SectionCap.guarded(
+          qFact.select(col("qkey_idx"), col("occurred_at_s"),
+              col("runtime_ms"), col("query"), col("file_idx"),
+              col("byte_start"), col("event_id"))
+            .orderBy("file_idx", "byte_start"),
+          logLineLimit, "query samples", "query sample")
+      }
+      val fQueryRows = bg {
+        qFact.groupBy("qkey_idx")
+          .agg(first("database_idx").as("database_idx"),
+            first("username_idx").as("username_idx"), first("fp").as("fp"),
+            min("normalized_query").as("normalized_query"))
+          .orderBy("qkey_idx").collect().toIndexedSeq
+      }
+      val fFiles = bg {
+        lines.groupBy("file_idx")
+          .agg(sum(col("len") + 1).as("byte_size"),
+            count(lit(1)).as("n_lines"))
+          .orderBy("file_idx").collect().toIndexedSeq
+      }
+      val fRoles = bg(roleDim.select("username_idx", "username")
+        .orderBy("username_idx").collect().toIndexedSeq)
+      val fDbs = bg(dbDim.select("database_idx", "database")
+        .orderBy("database_idx").collect().toIndexedSeq)
+      val fAt = bg(lines.agg(max("occurred_at_s")).head.getLong(0))
 
-    val lineSec = Await.result(fLines, Duration.Inf)
-    val sampleSec = Await.result(fSamples, Duration.Inf)
-    // a dropped line section takes its derived samples with it: a
-    // document with samples pointing at absent lines would be
-    // internally inconsistent
-    val sampleRows = if (lineSec.dropped) Vector.empty[Row] else sampleSec.rows
-    val derivedFlag =
-      if (lineSec.dropped && !sampleSec.dropped && sampleSec.rows.nonEmpty)
-        Seq("query sample information will not be sent " +
-          "(log line section was dropped)")
-      else Nil
-    // the file section's byte accounting is DERIVED from the line rows
-    // (decode verifies sum of line spans == file byte_size), so a
-    // dropped line section takes the file section with it
-    val fileRows =
-      if (lineSec.dropped) Vector.empty[Row]
-      else Await.result(fFiles, Duration.Inf)
-    Doc(
-      collectedAtSecs = Await.result(fAt, Duration.Inf),
-      fileRows = fileRows,
-      roleRows = Await.result(fRoles, Duration.Inf),
-      dbRows = Await.result(fDbs, Duration.Inf),
-      queryRows = Await.result(fQueryRows, Duration.Inf),
-      lineRows = lineSec.rows,
-      sampleRows = sampleRows,
-      droppedSections =
-        lineSec.flag.toSeq ++ sampleSec.flag.toSeq ++ derivedFlag)
+      val lineSec = Await.result(fLines, Duration.Inf)
+      val sampleSec = Await.result(fSamples, Duration.Inf)
+      // a dropped line section takes its derived samples with it: a
+      // document with samples pointing at absent lines would be
+      // internally inconsistent
+      val sampleRows = if (lineSec.dropped) Vector.empty[Row] else sampleSec.rows
+      val derivedFlag =
+        if (lineSec.dropped && !sampleSec.dropped && sampleSec.rows.nonEmpty)
+          Seq("query sample information will not be sent " +
+            "(log line section was dropped)")
+        else Nil
+      // the file section's byte accounting is DERIVED from the line rows
+      // (decode verifies sum of line spans == file byte_size), so a
+      // dropped line section takes the file section with it
+      val fileRows =
+        if (lineSec.dropped) Vector.empty[Row]
+        else Await.result(fFiles, Duration.Inf)
+      Doc(
+        collectedAtSecs = Await.result(fAt, Duration.Inf),
+        fileRows = fileRows,
+        roleRows = Await.result(fRoles, Duration.Inf),
+        dbRows = Await.result(fDbs, Duration.Inf),
+        queryRows = Await.result(fQueryRows, Duration.Inf),
+        lineRows = lineSec.rows,
+        sampleRows = sampleRows,
+        droppedSections =
+          lineSec.flag.toSeq ++ sampleSec.flag.toSeq ++ derivedFlag)
+    } finally Seq(base, lines, qFact).foreach(GraftNative.unpersistRows)
   }
 
   // ----------------------------------------------------------- encoding

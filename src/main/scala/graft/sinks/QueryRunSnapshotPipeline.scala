@@ -1,6 +1,6 @@
 package graft.sinks
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftNative, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -172,7 +172,8 @@ object QueryRunSnapshotPipeline {
     // request side: the % 3 subset of click-run requests
     val reqFrame = runRequests(s, dir).filter(col("run_id") % 3 === 0)
       .select("run_id", "backend_pid", "started_s", "k", "query")
-      .localCheckpoint() // feeds the collect now AND the wire-join later
+      // feeds the collect now AND the wire-join later
+      .transform(GraftNative.persistRows)
     val reqs = reqFrame.orderBy("run_id").collect().toIndexedSeq
     require(reqs.nonEmpty, "corpus must produce at least one run request")
     def toMsg(r: Row): Msg = QueryRun(QueryRunReq(num(r, 0), 1, "graftdb",
@@ -218,17 +219,17 @@ object QueryRunSnapshotPipeline {
           s"the undecodable frame must be ONE warning, got ${st.warnings}")
         require(st.queryRuns.size == reqs.length,
           s"duplicate id must be ignored: ${st.queryRuns.size} registered")
+        val sent = reqs.map(r => num(r, 0) -> r.getString(4)).toMap
+        require(st.queryRuns.values.forall(q =>
+            sent.get(q.id).forall(_ == q.queryText)),
+          "wire-delivered query text must match the request")
         // execute the REGISTERED runs: wire texts back to a distributed
         // frame, X20 guard on the text that arrived, stub EXPLAIN
         import s.implicits._
         val wire = st.queryRuns.values.toSeq.map(q => (q.id, q.queryText))
-          .toDF("run_id", "wire_query")
-        val joined = reqFrame.join(broadcast(wire), "run_id")
-          .localCheckpoint() // fidelity check + outcome: 2 actions
-        require(joined.filter(col("query") =!= col("wire_query")).count() == 0,
-          "wire-delivered query text must match the request")
-        val executed = outcome(joined.drop("query")
-          .withColumnRenamed("wire_query", "query"))
+          .toDF("run_id", "query")
+        val executed = outcome(reqFrame.drop("query")
+            .join(broadcast(wire), "run_id"))
           .select(col("run_id"), col("backend_pid"), col("started_s"),
             col("k"), col("query"), col("verdict"), col("result"),
             col("error"), col("finished_s"))
@@ -246,7 +247,7 @@ object QueryRunSnapshotPipeline {
         // decode from the bytes the server RECEIVED, paired by order
         // (one socket, FIFO) and integrity-checked against the source
         replies.zip(executed).map { case (w, r) => decodeRunDoc(w, r) }
-      } finally ep.close()
+      } finally { ep.close(); GraftNative.unpersistRows(reqFrame) }
     import scala.jdk.CollectionConverters._
     s.createDataFrame(decoded.asJava, outSchema)
   }

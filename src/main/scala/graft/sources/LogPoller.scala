@@ -2,7 +2,7 @@ package graft.sources
 
 import java.util.concurrent.atomic.AtomicReference
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftNative, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The S32/S33 polling DRIVER — what turns [[IncrementalTail]]'s
@@ -24,7 +24,9 @@ import org.apache.spark.sql.functions._
   * reference's `PersistedLogState`; it is the only driver-side state
   * and is #files-bounded. The per-tick tail work is the distributed
   * [[IncrementalTail.tail]] plan — at 100 TB this loop schedules a
-  * partition-parallel scan per tick, not a driver loop over files. */
+  * partition-parallel scan per tick, not a driver loop over files.
+  * The tick's lines are cached only while `sink` runs, so a sink
+  * consumes them before it returns. */
 final class LogPoller(
     spark: SparkSession,
     filesProvider: () => DataFrame,
@@ -45,17 +47,21 @@ final class LogPoller(
     val files = filesProvider()
     val prev = markers.get()
     val markerDf = prev.toSeq.toDF("file", "prev_offset")
-    val out = IncrementalTail.tail(files, markerDf, maxTailBytes)
-      .filter(col("line") =!= "") // tail windows ending in '\n' yield one empty fragment
-      .localCheckpoint() // one materialization feeds sink + marker collect
-    // marker advance: every PRESENT file moves to its current size;
-    // files absent this tick keep their old marker (the reference keeps
-    // state per file until the file rotates out of the returned set)
-    val advanced = files
-      .select(col("file"), length(col("content")).cast("long").as("sz"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    markers.set(prev ++ advanced)
-    sink(out)
-    out.count()
+    // one read of the files feeds the markers, the sink and the count
+    val tailed = IncrementalTail.tail(files, markerDf, maxTailBytes)
+      .transform(GraftNative.persistRows)
+    try {
+      // every PRESENT file (line 0 of its tail) moves to its current
+      // size; files absent this tick keep their old marker (the
+      // reference keeps state per file until the file rotates out of
+      // the returned set)
+      markers.set(prev ++ tailed.filter(col("line_idx") === 0)
+        .select("file", "new_offset").collect()
+        .map(r => r.getString(0) -> r.getLong(1)))
+      // tail windows ending in '\n' yield one empty fragment
+      val out = tailed.filter(col("line") =!= "")
+      sink(out)
+      out.count()
+    } finally GraftNative.unpersistRows(tailed)
   }
 }

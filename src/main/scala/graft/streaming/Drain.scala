@@ -76,10 +76,12 @@ object Drain {
       batch: (Dataset[Row], Long) => Unit): StreamingQuery =
     run(define(session(s, conf)), ckpt, "append")(batch)
 
-  /** Attempts a drain gets. A query that fails (an executor lost with
-    * the blocks a batch `localCheckpoint`ed, say) restarts from its
+  /** Attempts a drain gets. A query that fails restarts from its
     * checkpoint, which re-delivers the uncommitted batch; after the last
-    * attempt its error is rethrown. */
+    * attempt its error is rethrown. A batch's own intermediates are
+    * `persist`ed, so a lost executor usually costs it recomputed
+    * tasks, not an attempt; attempts cover a batch that fails anyway
+    * (a job that runs out of task or stage retries). */
   val MaxAttempts = 6
 
   private def run(stream: DataFrame, ckpt: String, outputMode: String)(

@@ -18,11 +18,13 @@ import graft.{Harness, SparkEntry}
   * once more while one executor JVM is SIGKILLed as soon as the faulted
   * run has started half as many tasks as the clean run did. A finished
   * map output dies with its executor, so downstream stages hit
-  * `FetchFailed` and re-run the lost map tasks on survivors; a
-  * `localCheckpoint`ed block has no lineage to re-run and fails the
-  * query. The standalone worker respawns the executor before the next
-  * entry. One `DRILL <entry> PASS|FAIL …` line per entry ([[verdict]]);
-  * the exit status is 1 on any FAIL.
+  * `FetchFailed` and re-run the lost map tasks on survivors; a lost
+  * `persist`ed block is recomputed from lineage the same way. Only a
+  * `localCheckpoint`ed block (left in the iterative loops of ROADMAP
+  * D8) has no lineage to re-run and fails the query. The standalone
+  * worker respawns the executor before the next entry. One
+  * `DRILL <entry> PASS|FAIL …` line per entry ([[verdict]]); the exit
+  * status is 1 on any FAIL.
   *
   * Executors need the packaged jar, so it runs under spark-submit:
   * {{{

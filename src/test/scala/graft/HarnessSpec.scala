@@ -23,11 +23,14 @@ class HarnessSpec extends SparkSpec {
     Tables.nation(spark, Sf).cache().count()
     Tables.region(spark, Sf).localCheckpoint()
     spark.range(10).rdd.persist().count()
+    val dir = Paths.get(Harness.scratch("graft_release"))
+    Files.writeString(dir.resolve("spool"), "x")
     assert(!spark.sharedState.cacheManager.isEmpty)
     assert(spark.sparkContext.getPersistentRDDs.nonEmpty)
     Harness.release(spark)
     assert(spark.sharedState.cacheManager.isEmpty)
     assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+    assert(!Files.exists(dir))
   }
 
   test("SPARK_GRAFT_ONLY / SPARK_GRAFT_SKIP select entries") {
@@ -85,6 +88,28 @@ class HarnessSpec extends SparkSpec {
     } yield s"$f: $p"
     assert(offenders.isEmpty, offenders.mkString("\n"))
     assert(files.exists(_.getFileName.toString == "Harness.scala"))
+  }
+
+  test("localCheckpoint only in the iterative loops; Queries* make no temp dir") {
+    val files = Files.walk(Paths.get("src/main/scala")).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    def count(p: String) = files.map { f =>
+      f.getFileName.toString ->
+        java.util.regex.Pattern.quote(p).r.findAllIn(Files.readString(f)).size
+    }.filter(_._2 > 0).toMap
+    // the loops that still cut their lineage per round (ROADMAP D8);
+    // everything else recovers by lineage: persist, or no barrier
+    val loops = Map("BpeTrain.scala" -> 2, "Dedup.scala" -> 2,
+      "LockChains.scala" -> 2, "Pca.scala" -> 6, "ProductQuant.scala" -> 3,
+      "Similarity.scala" -> 3)
+    assert(count(".localCheckpoint(") == loops)
+    val queries = files.filter(_.getFileName.toString.startsWith("Queries"))
+    assert(queries.size >= 3)
+    val offenders = for {
+      f <- queries
+      p <- Seq("createTempDirectory", "scratchDir") if Files.readString(f).contains(p)
+    } yield s"$f: $p"
+    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
   test("the executor kill and the AvailableNow trigger live in one file each") {

@@ -14,9 +14,7 @@ class IndexMaintenanceSpec extends SparkSpec {
   private lazy val delta = docs.filter(col("doc_id") % 10 === 0)
 
   test("fresh build: nothing due; appends move both rules; thresholds fire them") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_maint_spec").toFile
-    dir.deleteOnExit()
+    val dir = new java.io.File(Harness.scratch("graft_maint_spec"))
     val p = dir.getAbsolutePath
     LshIndex.save(base, "doc_id", "text", p)
     val fresh = IndexMaintenance.lshPolicy(spark, p)
@@ -70,9 +68,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     .select(col("vec_id").as("id"), col("embedding").as("vec"))
 
   test("ivf policy: iid appends age only the fraction; refit resets both rules") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_maint_ivf").toFile
-    dir.deleteOnExit()
+    val dir = new java.io.File(Harness.scratch("graft_maint_ivf"))
     val p = dir.getAbsolutePath
     IvfIndex.save(eBase, p, nClusters = 16, iters = 2, dim = 64)
     val fresh = IndexMaintenance.ivfPolicy(spark, p)
@@ -98,9 +94,7 @@ class IndexMaintenanceSpec extends SparkSpec {
   }
 
   test("ivf policy: a domain-shifted shard fires the skew rule") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_maint_ivf_shift").toFile
-    dir.deleteOnExit()
+    val dir = new java.io.File(Harness.scratch("graft_maint_ivf_shift"))
     val p = dir.getAbsolutePath
     IvfIndex.save(eBase, p, nClusters = 16, iters = 2, dim = 64)
     // constant bias on every element: deterministic stand-in for a

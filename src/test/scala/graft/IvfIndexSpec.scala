@@ -13,9 +13,7 @@ class IvfIndexSpec extends SparkSpec {
 
   private lazy val e = Tables.embeddings(spark, Sf)
   private lazy val idx = {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ivf_spec").toFile
-    dir.deleteOnExit()
+    val dir = new java.io.File(Harness.scratch("graft_ivf_spec"))
     IvfIndex.save(
       e.select(col("vec_id").as("id"), col("embedding").as("vec")),
       dir.getAbsolutePath, nClusters = 16, iters = 2, dim = 64)
@@ -66,9 +64,7 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("append assigns delta to existing centroids; index serves base ∪ delta") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ivf_spec_append").toFile
-    dir.deleteOnExit()
+    val dir = new java.io.File(Harness.scratch("graft_ivf_spec_append"))
     val p = dir.getAbsolutePath
     val base = e.filter(col("vec_id") % 10 =!= 0)
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
@@ -100,11 +96,8 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("refit after appends is bit-identical to a from-scratch build over the union") {
-    val d1 = java.nio.file.Files
-      .createTempDirectory("graft_ivf_refit_a").toFile
-    val d2 = java.nio.file.Files
-      .createTempDirectory("graft_ivf_refit_b").toFile
-    Seq(d1, d2).foreach(_.deleteOnExit())
+    val d1 = new java.io.File(Harness.scratch("graft_ivf_refit_a"))
+    val d2 = new java.io.File(Harness.scratch("graft_ivf_refit_b"))
     val (pA, pB) = (d1.getAbsolutePath, d2.getAbsolutePath)
     val base = e.filter(col("vec_id") % 10 =!= 0)
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
@@ -142,9 +135,7 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("interrupted refit swap: repair rolls back before the marker, forward after") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ivf_crash").toFile
-    dir.deleteOnExit()
+    val dir = new java.io.File(Harness.scratch("graft_ivf_crash"))
     val p = dir.getAbsolutePath
     val base = e.filter(col("vec_id") % 10 =!= 0)
       .select(col("vec_id").as("id"), col("embedding").as("vec"))

@@ -292,7 +292,7 @@ class LiveIngestSpec extends SparkSpec {
   test("Pub/Sub subscription id format is validated") {
     val ex = intercept[IllegalArgumentException] {
       new PubSubPull.Puller("http://127.0.0.1:1", "bad/path",
-        Seq.empty, Files.createTempDirectory("graft_ps_bad"))
+        Seq.empty, java.nio.file.Paths.get(Harness.scratch("graft_ps_bad")))
     }
     assert(ex.getMessage.contains("unsupported subscription format"))
   }

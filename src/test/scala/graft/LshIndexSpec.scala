@@ -17,9 +17,7 @@ class LshIndexSpec extends SparkSpec {
   private lazy val delta = docs.filter(col("doc_id") % 10 === 0)
 
   private lazy val idx = {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_lsh_spec").toFile
-    dir.deleteOnExit()
+    val dir = new java.io.File(Harness.scratch("graft_lsh_spec"))
     LshIndex.save(base, "doc_id", "text", dir.getAbsolutePath)
     dir.getAbsolutePath
   }
@@ -74,9 +72,7 @@ class LshIndexSpec extends SparkSpec {
   }
 
   test("append extends the index: a re-probe finds the appended docs") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_lsh_spec_append").toFile
-    dir.deleteOnExit()
+    val dir = new java.io.File(Harness.scratch("graft_lsh_spec_append"))
     val p = dir.getAbsolutePath
     LshIndex.save(base, "doc_id", "text", p)
     val dSigs = Dedup.minhashSignatures(delta, "doc_id", "text")
@@ -165,9 +161,7 @@ class LshIndexSpec extends SparkSpec {
 
   test("probe-time hot-key guard: a bucket inflated past the cap by appends yields no candidates") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_lsh_hot").toFile
-    dir.deleteOnExit()
+    val dir = new java.io.File(Harness.scratch("graft_lsh_hot"))
     val p = dir.getAbsolutePath
     val twin = "identical hot bucket text alpha beta gamma delta " * 4
     // filler keeps the index non-degenerate: after compaction drops the
@@ -196,11 +190,8 @@ class LshIndexSpec extends SparkSpec {
   }
 
   test("interrupted compact swap: repair rolls back before the marker, forward after") {
-    val d1 = java.nio.file.Files
-      .createTempDirectory("graft_lsh_crash_a").toFile
-    val d2 = java.nio.file.Files
-      .createTempDirectory("graft_lsh_crash_b").toFile
-    Seq(d1, d2).foreach(_.deleteOnExit())
+    val d1 = new java.io.File(Harness.scratch("graft_lsh_crash_a"))
+    val d2 = new java.io.File(Harness.scratch("graft_lsh_crash_b"))
     val (pA, pB) = (d1.getAbsolutePath, d2.getAbsolutePath)
     val dSigs = Dedup.minhashSignatures(delta, "doc_id", "text")
       .localCheckpoint()
@@ -241,9 +232,7 @@ class LshIndexSpec extends SparkSpec {
     // CONCURRENT maintenance writer mid-stage. Roll-back of unmarked
     // staging is the next WRITER's job (AtomicSwap.begin); readers act
     // only on a marker.
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_lsh_reader").toFile
-    dir.deleteOnExit()
+    val dir = new java.io.File(Harness.scratch("graft_lsh_reader"))
     val p = dir.getAbsolutePath
     LshIndex.save(base, "doc_id", "text", p)
     val dSigs = Dedup.minhashSignatures(delta, "doc_id", "text")
@@ -302,9 +291,7 @@ class LshIndexSpec extends SparkSpec {
       .toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("s"))
       .withColumn("n_chars", length(col("text")).cast("long"))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_sidx_spec").toFile
-    dir.deleteOnExit()
+    val dir = new java.io.File(Harness.scratch("graft_sidx_spec"))
     docs.coalesce(1).write.mode("overwrite")
       .parquet(dir.getAbsolutePath + "/documents.parquet")
     val out = QueriesLog.dedupStreamIndex(spark, dir.getAbsolutePath)
@@ -327,9 +314,7 @@ class LshIndexSpec extends SparkSpec {
   test("ingest batch is idempotent: re-delivery and mid-write crash both recover") {
     // foreachBatch is at-least-once; the commit-marker protocol must
     // make a re-delivered batch a no-op and a mid-write crash erasable
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_sidx_idem").toFile
-    tmp.deleteOnExit()
+    val tmp = new java.io.File(Harness.scratch("graft_sidx_idem"))
     val idxP = tmp.getAbsolutePath + "/index"
     val outP = tmp.getAbsolutePath + "/out"
     new java.io.File(outP).mkdirs()
@@ -355,11 +340,8 @@ class LshIndexSpec extends SparkSpec {
   }
 
   test("compact collapses segments and equals a from-scratch build over the union") {
-    val d1 = java.nio.file.Files
-      .createTempDirectory("graft_lsh_compact_a").toFile
-    val d2 = java.nio.file.Files
-      .createTempDirectory("graft_lsh_compact_b").toFile
-    Seq(d1, d2).foreach(_.deleteOnExit())
+    val d1 = new java.io.File(Harness.scratch("graft_lsh_compact_a"))
+    val d2 = new java.io.File(Harness.scratch("graft_lsh_compact_b"))
     val (pA, pB) = (d1.getAbsolutePath, d2.getAbsolutePath)
     // A: base build + append, then compact; B: one build over the union
     LshIndex.save(base, "doc_id", "text", pA)

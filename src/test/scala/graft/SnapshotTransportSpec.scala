@@ -172,7 +172,7 @@ class SnapshotTransportSpec extends SparkSpec {
   }
 
   test("local-dir grant writes the file and submits its path (uploadSnapshot:31-45)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_upload").toString
+    val dir = Harness.scratch("graft_upload")
     var submitted: String = null
     val http: Http = (url, _, body) =>
       if (url.contains("/v2/")) { submitted = new String(body, UTF_8); (200, "") }
