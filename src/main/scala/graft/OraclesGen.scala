@@ -2837,7 +2837,6 @@ object OraclesGen {
     * query, per-probed-list residual distance tables, and the
     * list-restricted ADC fold — against exact-L2 truth. */
   val embedIvfPqRecall: String = {
-    def d264(a: String, b: String) = pqD2(a, b, 64)
     s"""WITH e AS (SELECT vec_id AS id, embedding AS vec FROM embeddings),
        |${pqSvCte("svc", "e", "vec", 1, 64, castDouble = true)},
        |${pqChainCtes("c", "svc", 64, 16)},

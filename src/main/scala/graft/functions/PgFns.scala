@@ -36,13 +36,8 @@ object PgFns {
 
   /** Query fingerprint (`util/fingerprint.go:13-48`, X1): stable digest of
     * the normalized text. md5 hex — identical builtin in DuckDB, so the
-    * oracle can reproduce it; for cluster-internal grouping keys prefer
-    * [[fingerprint64]] (xxhash64, cheaper, codegen'd). */
+    * oracle can reproduce it. */
   def fingerprint(c: Column): Column = md5(normalizeQuery(c))
-
-  /** 64-bit fingerprint for internal grouping at scale (not oracled —
-    * xxhash64 seed/variant is Spark-specific). */
-  def fingerprint64(c: Column): Column = xxhash64(normalizeQuery(c))
 
   /** pg_query-parity normalization (X1/X2): lexer-based constant→`$n`
     * replacement with truncation repair — see [[PgNormalize]]. Validated

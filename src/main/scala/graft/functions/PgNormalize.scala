@@ -710,7 +710,4 @@ object PgNormalize {
   /** 64-bit grouping fingerprint of the canonical form (engine-owned
     * FNV-1a; the reference's XXH3-of-parse-tree is pg_query-internal). */
   def fingerprint(q: String): Long = Hashing.fnv1a64(canonical(q))
-
-  /** Hex form for display/oracle parity. */
-  def fingerprintHex(q: String): String = f"${fingerprint(q)}%016x"
 }

@@ -38,7 +38,6 @@ object LogPrefix {
     "proc_start_time=\"%s\" session_id=\"%c\" vtid=\"%v\" tid=\"%x\" " +
     "log_line=\"%l\" %qdatabase=\"%d\" connection_source=\"%r\" " +
     "user=\"%u\" application_name=\"%a\" "
-  val Recommended: String = Custom3
 
   val byName: Map[String, String] = Map(
     "LogPrefixAmazonRds" -> AmazonRds, "LogPrefixAzure" -> Azure,

@@ -278,23 +278,6 @@ object LogSecrets {
     }
   }
 
-  /** DETAIL `parameters:` line marking (matchAll semantics). */
-  def detailParamsMark(content: String): (Boolean, List[Marker]) = {
-    val mt = paramsPattern.matcher(content)
-    val out = ListBuffer.empty[Marker]
-    var found = false
-    while (mt.find()) {
-      found = true
-      var g = 0
-      while (g < 2) {
-        if (mt.start(g + 1) >= 0)
-          out += Marker(mt.start(g + 1), mt.end(g + 1), StatementParameter)
-        g += 1
-      }
-    }
-    (found, out.toList)
-  }
-
   /** STATEMENT/QUERY context lines: whole content is statement text
     * (`markLineAsSecret`, analyze.go:2226-2233). When the associated
     * primary line is a SYNTAX_ERROR, the same span additionally gets a

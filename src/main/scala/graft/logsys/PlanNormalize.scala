@@ -258,9 +258,6 @@ object PlanNormalize {
 
   val TruncationMarker = "[Your log message was truncated]"
 
-  /** X19 — `logs/util/parse.go:5-10`. */
-  def wasTruncated(line: String): Boolean = line.contains(TruncationMarker)
-
   // --------------------------------------------------- sqlcommenter (X13)
 
   /** sqlcommenter / marginalia query tags from SQL comments

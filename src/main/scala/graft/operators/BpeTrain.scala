@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** BPE tokenizer training (Sennrich-style merge induction) over a
@@ -53,8 +53,6 @@ object BpeTrain {
     * merge folds run once per DISTINCT word, never per occurrence. */
   def trainWithVocab(words: DataFrame, rounds: Int): (DataFrame, DataFrame) = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-    val spark = words.sparkSession
-    import spark.implicits._
     // per-code-point split: CharsExpr equals
     // `filter(split(w, ''), x -> x != '')` here because every `w` is a
     // whitespace-tokenized word (contains no whitespace byte), and both

@@ -154,12 +154,6 @@ object ActivitySnapshotPipeline {
       backendLimit: Int = SectionCap.BackendLimit): Doc =
     docFromRow(docFrame(backsIn, vacsIn, backendLimit).head(), backendLimit)
 
-  /** [[assembleDoc]] over a pre-tagged union (the hoisted-base tick
-    * path — see [[deriveBackendCols]]). */
-  private[graft] def assembleDocTagged(u0: DataFrame,
-      backendLimit: Int = SectionCap.BackendLimit): Doc =
-    docFromRow(docFrameTagged(u0, backendLimit).head(), backendLimit)
-
   /** The single-row document plan behind [[assembleDoc]]. */
   def docFrame(backsIn: DataFrame, vacsIn: DataFrame,
       backendLimit: Int = SectionCap.BackendLimit): DataFrame =

@@ -65,9 +65,4 @@ object SectionCap {
     } else Section(head.toIndexedSeq, dropped = false,
       observed = head.length.toLong, flag = None)
   }
-
-  /** The no-op guard for sections that are structurally bounded (dims,
-    * per-file aggregates): keeps call sites uniform without a count. */
-  def unguarded(rows: IndexedSeq[Row]): Section =
-    Section(rows, dropped = false, rows.length.toLong, None)
 }

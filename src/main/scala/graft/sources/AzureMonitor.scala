@@ -1,6 +1,5 @@
 package graft.sources
 
-import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets.UTF_8
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}

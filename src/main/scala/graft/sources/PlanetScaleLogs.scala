@@ -1,6 +1,5 @@
 package graft.sources
 
-import java.io.ByteArrayOutputStream
 import java.net.{HttpURLConnection, URL}
 import java.nio.charset.StandardCharsets.UTF_8
 

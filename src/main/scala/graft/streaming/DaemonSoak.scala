@@ -4,9 +4,7 @@ import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.{Column, DataFrame, GraftNative, Row,
   SparkSession}
-import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
 
 import graft.{BoundedSession, LocalHttp, Tables}
 import graft.logsys.LogSynth
@@ -187,11 +185,11 @@ object DaemonSoak {
     // partition, sorted by offset, so the ticks do not re-read the lake
     // 270 times; a tick's window is period-bounded, so single-partition
     // is the right shape for it at any corpus size — the same
-    // boundedness argument as assembleDoc's. The window filter prunes
-    // whole in-memory column batches only: at sf0.01 the default
-    // 10,000-row batch holds the ~10.5k-row base in two, so a tick
-    // scans most of it. A 200-row batch measured only ~4 ms/tick
-    // faster, so the batch size stays the default.
+    // boundedness argument as assembleDoc's. A tick's bounds are job
+    // parameters, not literals, so its window filter prunes no cached
+    // column batch: every tick scans the whole base (at sf0.01 ~10.5k
+    // rows; pruning 200-row batches by literal bounds saved only
+    // ~4 ms/tick).
     private def clustered(df: DataFrame): DataFrame = {
       val out = df.coalesce(1).sortWithinPartitions("off").persist()
       out.count()
@@ -259,49 +257,20 @@ object DaemonSoak {
       .foreach(_.unpersist(blocking = false))
   }
 
-  private val MarkLo = -271828183L
-  private val MarkHi = -314159265L
+  private val Lo = "graft.soak.window.lo"
+  private val Hi = "graft.soak.window.hi"
 
-  /** A windowed tick frame planned ONCE: every tick of a cadence runs one
-    * fixed tree in which only the two window-bound literals differ, so
-    * the tree is analyzed, optimized and physically planned over
-    * distinctive marker literals here, and each tick substitutes its
-    * bounds into a copy of the physical plan and runs it. A tick pays
-    * for its window, not for planning (analysis, optimization and
-    * physical planning were ~50 ms of a ~196 ms activity tick run
-    * alone). The cached bases are read through the plan's in-memory
-    * scans. The returned runner decodes with one deserializer, so one
-    * cadence's ticks must run one after another — as
-    * [[Scheduler.runConcurrent]] runs them. */
-  def compiled(build: (Column, Column) => DataFrame)
+  /** A windowed tick frame prepared ONCE ([[GraftNative.Prepared]]): its
+    * window bounds are job parameters, so a tick sets them and runs one
+    * job over the RDD built here, paying for its window, not for planning
+    * (~50 ms of a ~196 ms activity tick run alone) or for building ~40
+    * RDDs. One deserializer decodes every tick, so one cadence's ticks
+    * must run one after another, as [[Scheduler.runConcurrent]] runs them. */
+  def prepared(build: (Column, Column) => DataFrame)
       : (Long, Long) => Array[Row] = {
-    val frame = GraftNative.compile(build(lit(MarkLo), lit(MarkHi)))
-    // the markers the physical plan holds, in every node and subquery
-    // plan: each bound sits in a Filter and in its in-memory scan's
-    // pruning predicates
-    def held(mark: Long): Int = frame.template.collectWithSubqueries {
-      case p => p.expressions.map(_.collect {
-        case Literal(`mark`, LongType) => }.size).sum
-    }.sum
-    val nLo = held(MarkLo)
-    val nHi = held(MarkHi)
-    // a marker the optimizer rewrote (e.g. folded into a cast) is gone
-    // from the plan: every tick would silently run an always-false window
-    require(nLo >= 1 && nHi >= 1,
-      s"compiled(): the tick plan holds lo=$nLo hi=$nHi window markers")
-    (lo: Long, hi: Long) => {
-      var sLo = 0; var sHi = 0
-      val plan = frame.template.transformAllExpressions {
-        case Literal(MarkLo, LongType) => sLo += 1; Literal(lo)
-        case Literal(MarkHi, LongType) => sHi += 1; Literal(hi)
-      }
-      // a marker the substitution does not reach (a subquery plan)
-      // would keep its always-false bound: fail loudly instead
-      require(sLo == nLo && sHi == nHi,
-        s"compiled(): substituted lo=$sLo hi=$sHi of the plan's " +
-          s"lo=$nLo hi=$nHi window markers")
-      frame.collect(plan)
-    }
+    val frame = GraftNative.prepare(
+      build(GraftNative.param(Lo), GraftNative.param(Hi)), Lo, Hi)
+    (lo, hi) => frame.collect(Lo -> lo, Hi -> hi)
   }
 
   /** Drive the four-cadence daemon for [[Cycles]] cycles. Returns every
@@ -314,9 +283,9 @@ object DaemonSoak {
       : (Seq[SoakRow], Seq[Scheduler.Report]) = {
     val live = new LiveServer(s, dir, horizon)
     val (ticks, windowStart) = plan(horizon)
-    val actRows = compiled(live.activity)
-    val hfRows = compiled(live.highFreq)
-    val logRows = compiled(live.logs)
+    val actRows = prepared(live.activity)
+    val hfRows = prepared(live.highFreq)
+    val logRows = prepared(live.logs)
 
     // the reference's previous-scrape state (`state/state.go`) —
     // pgss.max-bounded per server, held in collector memory
@@ -419,12 +388,10 @@ object DaemonSoak {
     val results = new ConcurrentHashMap[(String, Long), TickResult]()
     val reports = Scheduler.runConcurrent(ticks, { t =>
       if (slowTick.exists(_(t))) Thread.sleep(3600000L)
-      // label the tick's jobs (guide: label your jobs) — an explicit
-      // call site also skips Spark's per-job getCallSite stack walk +
-      // regex filter, measured ~11% of the cadence worker's driver-side
-      // CPU across 270 ticks (thread-local, so each cadence worker
-      // labels only its own jobs)
-      live.ts.sparkContext.setCallSite(s"soak:${t.cadence}")
+      // label the tick's jobs and RDDs; with both call-site forms set,
+      // Spark skips the stack walk it otherwise makes for every job and
+      // every RDD built (thread-local, so each tick labels only its own)
+      GraftNative.callSite(live.ts.sparkContext, s"soak:${t.cadence}")
       val tn0 = System.nanoTime()
       def window(rows: (Long, Long) => Array[Row]) =
         rows(windowStart(t), t.fireAt)

@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, GraftNative, Row,
+  SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery,
   StreamingQueryException, Trigger}
 
@@ -60,7 +61,7 @@ object Drain {
     * terminated query, for its progress. */
   def apply(s: SparkSession, ckpt: String, out: String,
       conf: Map[String, String], outputMode: String = "append")(
-      define: SparkSession => DataFrame): StreamingQuery = {
+      define: SparkSession => DataFrame): StreamingQuery = scoped(s) {
     val stream = define(session(s, conf))
     s.createDataFrame(s.sparkContext.emptyRDD[Row], stream.schema)
       .write.mode("overwrite").parquet(out)
@@ -74,7 +75,19 @@ object Drain {
   def foreachBatch(s: SparkSession, ckpt: String, conf: Map[String, String])(
       define: SparkSession => DataFrame)(
       batch: (Dataset[Row], Long) => Unit): StreamingQuery =
-    run(define(session(s, conf)), ckpt, "append")(batch)
+    scoped(s)(run(define(session(s, conf)), ckpt, "append")(batch))
+
+  /** Runs `drain`, then removes the streaming listener buses added to the
+    * SparkContext meanwhile (its sessions', which would otherwise stay for
+    * good; a stream another thread starts meanwhile would lose its bus). */
+  private def scoped(s: SparkSession)(drain: => StreamingQuery)
+      : StreamingQuery = {
+    val sc = s.sparkContext
+    val before = GraftNative.streamBuses(sc).toSet
+    try drain
+    finally GraftNative.streamBuses(sc).filterNot(before)
+      .foreach(sc.removeSparkListener)
+  }
 
   /** Attempts a drain gets. A query that fails restarts from its
     * checkpoint, which re-delivers the uncommitted batch; after the last

@@ -3,12 +3,11 @@ package graft.streaming
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.operators.Dedup
-
 /** Streaming NEAR-duplicate detection — the incremental-ingestion form
-  * of the MinHash→LSH batch pipeline ([[Dedup.lshCandidates]]): shards
-  * of documents arrive over time and each must be tagged against all
-  * history without re-pairing the corpus.
+  * of the MinHash→LSH batch pipeline
+  * ([[graft.operators.Dedup.lshCandidates]]): shards of documents arrive
+  * over time and each must be tagged against all history without
+  * re-pairing the corpus.
   *
   * Keying: one state group per LSH bucket (band index + the band's
   * 8-long signature slice). The bucket's state is its FIRST claimant —

@@ -3,8 +3,9 @@ package graft
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.functions.lit
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{Column, DataFrame, GraftNative, Row}
+import org.apache.spark.sql.functions.{col, lit}
 
 import graft.streaming.{DaemonSoak, Scheduler}
 
@@ -13,7 +14,7 @@ import graft.streaming.{DaemonSoak, Scheduler}
   * overlap-skip observed in the executed run, per-tick wire integrity,
   * deadline cancellation under an injected stall, session-level
   * memory stability across cycles, full snapshots that generate no
-  * code once warm, and the plan-once tick frames. */
+  * code once warm, and the prepared tick frames. */
 class DaemonSoakSpec extends SparkSpec {
 
   // the JVM-wide generated-class count at the end of each full tick
@@ -107,9 +108,9 @@ class DaemonSoakSpec extends SparkSpec {
         Scheduler.LogDownload -> live.logs).foreach { case (cad, build) =>
         val windows = ticks.filter(_.cadence == cad).sortBy(_.fireAt)
           .map(t => (windowStart(t), t.fireAt))
-        val rowsOf = DaemonSoak.compiled(build)
+        val rowsOf = DaemonSoak.prepared(build)
         // the tick session's conf reaches the tasks: interpreted
-        // evaluation, so no tick compiles a class for its literals
+        // evaluation, so no tick compiles a class
         val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
         val got = windows.map { case (lo, hi) => rowsOf(lo, hi) }
         assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiles,
@@ -121,5 +122,65 @@ class DaemonSoakSpec extends SparkSpec {
         }
       }
     } finally live.release()
+  }
+
+  test("prepared ticks build no RDD and run one job each") {
+    val sc = spark.sparkContext
+    val live = new DaemonSoak.LiveServer(spark, Sf, 600L)
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        started.add(e.properties.getProperty("spark.job.description"))
+    }
+    sc.addSparkListener(listener)
+    try {
+      Seq[(String, (Column, Column) => DataFrame)](
+        Scheduler.Activity -> live.activity,
+        Scheduler.HighFreq -> live.highFreq,
+        Scheduler.LogDownload -> live.logs).foreach { case (cad, build) =>
+        val rowsOf = DaemonSoak.prepared(build)
+        rowsOf(0L, 10L)
+        sc.setJobDescription(s"ticks $cad")
+        val rddId = sc.emptyRDD[Int].id
+        (1 to 10).foreach(i => rowsOf(10L * i, 10L * i + 10L))
+        assert(sc.emptyRDD[Int].id == rddId + 1, s"$cad ticks built RDDs")
+        // the listener bus is asynchronous: wait for a marker job
+        sc.setJobDescription(s"marker $cad")
+        sc.emptyRDD[Int].count()
+        val deadline = System.nanoTime() + 30000000000L
+        while (!started.contains(s"marker $cad") && System.nanoTime() < deadline)
+          Thread.sleep(10)
+        assert(started.toArray.count(_ == s"ticks $cad") == 10, cad)
+      }
+    } finally {
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+      live.release()
+    }
+  }
+
+  test("an unset job parameter fails the run, naming its key") {
+    val k = "graft.test.unset"
+    val frame = GraftNative.prepare(
+      spark.range(5).toDF().filter(col("id") < GraftNative.param(k)), k)
+    assert(frame.collect(k -> 3L).length == 3)
+    val e = intercept[Exception](frame.collect())
+    assert(org.apache.commons.lang3.exception.ExceptionUtils
+      .getThrowableList(e).toArray.exists(_.toString.contains(s"'$k'")), e)
+  }
+
+  test("a build that ignores a bound, or reads one below an exchange, fails at prepare time") {
+    val ignored = intercept[IllegalArgumentException](DaemonSoak.prepared(
+      (_, hi) => spark.range(5).toDF().filter(col("id") < hi)))
+    assert(ignored.getMessage.contains("holds no graft.soak.window.lo"),
+      ignored.getMessage)
+    val k = "graft.test.shuffled"
+    // an adaptive plan (the spec's session), then a planned exchange
+    Seq(spark, BoundedSession(spark)).foreach { s =>
+      val e = intercept[IllegalArgumentException](GraftNative.prepare(
+        s.range(5).toDF().filter(col("id") < GraftNative.param(k))
+          .groupBy(col("id") % 2).count(), k))
+      assert(e.getMessage.contains(s"one RDD computes $k once"), e.getMessage)
+    }
   }
 }

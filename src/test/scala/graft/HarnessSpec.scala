@@ -166,4 +166,21 @@ class HarnessSpec extends SparkSpec {
     }
     assert(sites == Seq("LocalHttp.scala"), sites.mkString("\n"))
   }
+
+  test("every call-site label goes through GraftNative.callSite, which sets both forms") {
+    val sites = Files.walk(Paths.get("src/main/scala")).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+      .flatMap { f =>
+        java.util.regex.Pattern.quote("setCallSite(").r
+          .findAllIn(Files.readString(f))
+          .map(_ => f.getFileName.toString)
+      }
+    assert(sites == Seq("GraftNative.scala"), sites.mkString("\n"))
+    val sc = spark.sparkContext
+    org.apache.spark.sql.GraftNative.callSite(sc, "graft-label")
+    try {
+      assert(sc.getLocalProperty("callSite.short") == "graft-label")
+      assert(sc.getLocalProperty("callSite.long") == "graft-label")
+    } finally sc.clearCallSite()
+  }
 }

@@ -572,6 +572,23 @@ class StreamingSpec extends SparkSpec {
     } finally org.apache.commons.io.FileUtils.deleteQuietly(work.toFile)
   }
 
+  test("Drain leaves no streaming listener bus on the SparkContext") {
+    import graft.streaming.Drain
+    import org.apache.spark.sql.GraftNative
+    val work = java.nio.file.Files.createTempDirectory("graft_drain_buses")
+    val in = work.resolve("in").toString
+    (0L to 3L).toDF("id").write.parquet(in)
+    def buses = GraftNative.streamBuses(spark.sparkContext).size
+    val before = buses
+    try (1 to 3).foreach { i =>
+      Drain(spark, work.resolve(s"ckpt$i").toString,
+          work.resolve(s"out$i").toString, Drain.partitions(2)) { ss =>
+        ss.readStream.schema("id long").parquet(in)
+      }
+      assert(buses == before, s"after drain $i")
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(work.toFile)
+  }
+
   test("Drain restarts a failed drain from its checkpoint, up to MaxAttempts") {
     import graft.streaming.Drain
     val work = java.nio.file.Files.createTempDirectory("graft_drain_restart")
