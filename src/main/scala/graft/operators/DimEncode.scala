@@ -94,6 +94,20 @@ object DimEncode {
     (dim, fact)
   }
 
+  /** Driver-side numbering of keys collected in Spark's ascending sort
+    * order (nulls first): the ids [[encode]] assigns, stepping as the
+    * key changes, so the driver never re-orders struct or boolean keys. */
+  def denseIds(sortedKeys: Seq[Any]): Seq[Int] =
+    sortedKeys.zip(new AnyRef +: sortedKeys).scanLeft(0) {
+      case (id, (k, prev)) => if (k == prev) id else id + 1 }.tail
+
+  /** The ids [[encode]] assigns a long-valued dim (boxed integral values,
+    * nulls first), sorted on the driver: value → id. */
+  def longIds(values: Iterable[Any]): Map[Any, Int] =
+    values.toSeq.distinct
+      .sortBy(v => Option(v).map(_.asInstanceOf[Number].longValue))
+      .zipWithIndex.map { case (v, i) => v -> (i + 1) }.toMap
+
   /** Encode several dimensions of one fact table. Each dim build runs
     * its jobs (the probe, and past the cap the distributed numbering) on
     * a separate thread, so the three-dim snapshot assembly overlaps its

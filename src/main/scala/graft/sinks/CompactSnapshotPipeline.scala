@@ -140,9 +140,7 @@ object CompactSnapshotPipeline {
     * parsed corpus and the sample subset are each cached while the
     * section collects need them (they feed several consumers); the six
     * section collects then run concurrently — wall-clock is the longest
-    * collect, not the sum (same overlap pattern as
-    * [[FullSnapshotPipeline.assemble]]). Nothing stays persisted
-    * afterwards. */
+    * collect, not the sum. Nothing stays persisted afterwards. */
   def assemble(s: SparkSession, dir: String,
       logLineLimit: Int = SectionCap.LogLineLimit): Doc = {
     import scala.concurrent.{Await, ExecutionContext, Future}

@@ -25,9 +25,10 @@ import graft.sources.CatalogSynth
   *   verification (`output/full.go:73-97` length equality PLUS every
   *   stat idx resolving) → the decoded document as a DataFrame.
   *
-  * Diffs and grouping are Spark plans; the dims are numbered on the
-  * driver under their broadcast cap ([[DimEncode]]), and only the
-  * assembled DOCUMENT is collected — the
+  * Diffs and grouping are Spark plans; each section is one bounded
+  * collect of its facts in key order, the dims are numbered on the
+  * driver from those collects, and only the assembled DOCUMENT reaches
+  * the driver — the
   * snapshot is the reference's bounded per-server artifact (dims +
   * one tick's grouped facts), and the bound is ENFORCED: every
   * section collect runs through a [[SectionCap]] guard (schema 5000
@@ -153,157 +154,111 @@ object FullSnapshotPipeline {
       schemaTableLimit: Int = SectionCap.SchemaTableLimit,
       statementLimit: Int = SectionCap.StatementLimit)
 
-  /** Run the stages and collect the bounded sections, each sorted by its
-    * dimension index. The document is bounded per server, so the
-    * stages run on the [[BoundedSession]] derived from `s`. The
-    * four heavy branches (statement groups, relations+indexes,
-    * functions, database stats) have no cross-dependencies beyond the
-    * tiny database dim, so each runs in its own future — Spark
-    * schedules their jobs concurrently and the wall-clock is the
-    * longest branch, not the sum (same overlap trick as
-    * DimEncode.encodeAll). Nothing stays persisted afterwards. */
+  /** Run the stages and collect the bounded sections. The document is
+    * bounded per server, so the stages run on the [[BoundedSession]]
+    * derived from `s`. Each section is ONE bounded collect of its
+    * pre-dim facts, ordered by the section's key, in its own future: no
+    * future waits on another, so Spark runs their jobs concurrently and
+    * the wall-clock is the longest collect (the statement groups), not
+    * the sum. The six dims (db, role, qkey, rel, index, function) are
+    * then numbered on the driver with the ids [[DimEncode.encode]] would
+    * give, and the idx lookups and db-dim inner joins are map lookups.
+    * A capped section counts its facts before the db lookup (every
+    * synthesized db_oid names a known database). Nothing is persisted. */
   def assemble(s: SparkSession, dir: String, caps: Caps = Caps()): Doc = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
     def bg[T](f: => T): Future[T] = Future(f)
+    def await[T](f: Future[T]): T = Await.result(f, Duration.Inf)
     val bs = BoundedSession(s)
 
-    // J5: reference arrays (DimEncode numbers each cap-bounded dim on
-    // the driver), then every fact carries the small idx. The db dim is
-    // the one shared input — built up front, broadcast everywhere.
-    val dbs = CatalogSynth.databases(bs, dir)
-    val (dbDim, dbFact) = DimEncode.encode(dbs, "db_oid")
+    val fDbs = bg(CatalogSynth.databases(bs, dir)
+      .select("db_oid", "datname", "frozenxid", "temp_files")
+      .orderBy("db_oid").collect().toIndexedSeq)
 
-    // -------- branch A: statement groups → role dim → query dim
+    // statement groups in qkey order, capped (statements.go:78-110 holds
+    // entries near pg_stat_statements.max); the role dim covers every
+    // group, so a dropped section leaves the roles their own collect
     val fQ = bg {
-      // the grouped statement facts feed THREE actions (the role dim
-      // probe, the qkey dim probe, the section collect) — cached once,
-      // or each re-runs the event-scale diff+fingerprint lineage, and
-      // released when the branch is done; the table is #groups-sized
-      // (bounded by the per-server query cap), the reference's
-      // TransientState
-      val groups0 = queryGroups(bs, dir).persist()
-      try {
-        val (roleDim, groupsR) = DimEncode.encode(groups0, "user_oid")
-        val withDb = groupsR.join(broadcast(dbDim), Seq("db_oid"))
-        val (_, qFact) = DimEncode.encode(
-          withDb.withColumn("qkey",
-            struct(col("db_oid"), col("user_oid"), col("toplevel"), col("fp"))),
-          "qkey")
-        val roleRows = roleDim.select("user_oid_idx", "user_oid")
-          .orderBy("user_oid_idx").collect().toIndexedSeq
-        // statement cap (statements.go:78-110 holds entries near
-        // pg_stat_statements.max): over the limit the query section is
-        // dropped, never collected unbounded
-        val qSec = SectionCap.guarded(
-          qFact.select(
-            col("qkey_idx"), col("db_oid_idx"), col("user_oid_idx"),
-            col("toplevel"), col("fp"), col("normalized_query"),
-            col("query_ids"), col("calls"), col("total_ms"))
-            .orderBy("qkey_idx"),
-          caps.statementLimit, "statements", "statement")
-        (roleRows, qSec)
-      } finally groups0.unpersist()
+      val groups = queryGroups(bs, dir)
+      val sec = SectionCap.guarded(
+        groups.select("db_oid", "user_oid", "toplevel", "fp",
+            "normalized_query", "query_ids", "calls", "total_ms")
+          .orderBy(struct(col("db_oid"), col("user_oid"), col("toplevel"),
+            col("fp"))),
+        caps.statementLimit, "statements", "statement")
+      val roles =
+        if (sec.dropped) groups.select("user_oid").distinct().collect()
+          .map(_.get(0)).toSeq
+        else sec.rows.map(_.get(1))
+      (sec, roles)
     }
 
-    // -------- branch B: relations → D4 diff → indexes (D5, chained
-    // through the relation dim: IndexInformation carries relation_idx)
+    // relations → D4 diff → indexes (D5: IndexInformation carries
+    // relation_idx). schema_table_limit (schema.go:14,97-110): the
+    // RELATION count is the trigger, and an overflow drops the whole
+    // schema section — the dependent collects never run
     val fRel = bg {
-      val rels = CatalogSynth.relations(bs, dir)
-      val (relDim, relFact) = DimEncode.encode(rels, "rel_oid")
-      val relRefs = relFact.join(broadcast(dbDim), Seq("db_oid"))
-      val relDiff = Diff.relationDiff(
-        CatalogSynth.relationStatsTimeline(bs, dir),
-        keyCols = Seq("rel_oid"), snapCol = "snap",
-        counterCols = Seq("seq_scan", "idx_scan"),
-        gaugeCols = Seq("n_live_tup"), lockedCol = "locked")
-        .filter(col("snap") === 2)
-        .join(broadcast(relDim), Seq("rel_oid"))
-      val idxDiff = Diff.relationDiff(
-        CatalogSynth.indexStatsTimeline(bs, dir),
-        keyCols = Seq("index_oid"), snapCol = "snap",
-        counterCols = Seq("idx_scan", "idx_tup_read"),
-        gaugeCols = Seq("size_bytes"), lockedCol = "locked")
-        .filter(col("snap") === 2)
-      val (_, idxFact) = DimEncode.encode(idxDiff, "index_oid")
-      val idxJoined = idxFact
-        .withColumn("rel_oid", col("index_oid") - 1000000L)
-        .join(relRefs.select(col("rel_oid"), col("rel_oid_idx"),
-          col("db_oid_idx"), col("nspname")), Seq("rel_oid"))
-        .withColumn("index_name", concat(lit("idx_"), col("rel_oid")))
-      // schema_table_limit (schema.go:14,97-110): the RELATION count is
-      // the trigger, and an overflow drops the whole schema section
-      // (refs, stats, indexes) — the dependent collects never run
       val refSec = SectionCap.guarded(
-        relRefs.select(
-          col("rel_oid_idx"), col("db_oid_idx"), col("nspname"),
-          col("relname"), col("relkind"))
-          .orderBy("rel_oid_idx"),
+        CatalogSynth.relations(bs, dir)
+          .select("rel_oid", "db_oid", "nspname", "relname", "relkind")
+          .orderBy("rel_oid"),
         caps.schemaTableLimit, "total tables", "schema")
-      val (statRows, idxRows) =
-        if (refSec.dropped) (Vector.empty[Row], Vector.empty[Row])
-        else {
-          val stats = relDiff.select(
-            col("rel_oid_idx"), col("seq_scan_delta"), col("idx_scan_delta"),
-            col("n_live_tup"))
-            .orderBy("rel_oid_idx").collect().toIndexedSeq
-          val idx = idxJoined.select(
-            col("index_oid_idx"), col("db_oid_idx"), col("nspname"),
-            col("index_name"), col("rel_oid_idx"), col("size_bytes"),
-            col("idx_scan_delta"), col("idx_tup_read_delta"))
-            .orderBy("index_oid_idx").collect().toIndexedSeq
-          (stats, idx)
-        }
-      (refSec, statRows, idxRows)
+      if (refSec.dropped) (refSec, Vector.empty[Row], Vector.empty[Row])
+      else {
+        val stats = Diff.relationDiff(
+          CatalogSynth.relationStatsTimeline(bs, dir),
+          keyCols = Seq("rel_oid"), snapCol = "snap",
+          counterCols = Seq("seq_scan", "idx_scan"),
+          gaugeCols = Seq("n_live_tup"), lockedCol = "locked")
+          .filter(col("snap") === 2)
+          .select("rel_oid", "seq_scan_delta", "idx_scan_delta", "n_live_tup")
+          .orderBy("rel_oid").collect().toIndexedSeq
+        val idx = Diff.relationDiff(
+          CatalogSynth.indexStatsTimeline(bs, dir),
+          keyCols = Seq("index_oid"), snapCol = "snap",
+          counterCols = Seq("idx_scan", "idx_tup_read"),
+          gaugeCols = Seq("size_bytes"), lockedCol = "locked")
+          .filter(col("snap") === 2)
+          .select(col("index_oid"), (col("index_oid") - 1000000L).as("rel_oid"),
+            col("size_bytes"), col("idx_scan_delta"), col("idx_tup_read_delta"))
+          .orderBy("index_oid").collect().toIndexedSeq
+        (refSec, stats, idx)
+      }
     }
 
-    // -------- branch C: functions (D9 diff; functions share the
-    // relations' database/schema derivation rules)
-    val fFn = bg {
-      val fnDiff = Diff.counterDiff(
+    // functions (D9 diff; database and schema derived as for relations)
+    val fFn = bg(SectionCap.guarded(
+      Diff.counterDiff(
         CatalogSynth.functionStatsTimeline(bs, dir),
         keyCols = Seq("func_oid"), orderCols = Seq("snap"),
         counterCols = Seq("calls", "total_time_ms", "self_time_ms"))
         .filter(col("snap") === 2)
-      val (_, fnFact) = DimEncode.encode(fnDiff, "func_oid")
-      val fnFact2 = fnFact
-        .withColumn("db_oid", (col("func_oid") % 3).cast("long"))
-        .join(broadcast(dbDim), Seq("db_oid"))
-        .withColumn("nspname",
+        .select(col("func_oid"), (col("func_oid") % 3).cast("long").as("db_oid"),
           expr("CASE func_oid % 8 WHEN 0 THEN 'pg_catalog' " +
             "WHEN 1 THEN 'pg_toast' WHEN 2 THEN 'information_schema' " +
-            "WHEN 3 THEN 'app_private' ELSE 'public' END"))
-      SectionCap.guarded(
-        fnFact2.select(
-          col("func_oid_idx"), col("db_oid_idx"), col("nspname"),
+            "WHEN 3 THEN 'app_private' ELSE 'public' END").as("nspname"),
           col("funcname"), col("calls_delta"), col("total_time_ms_delta"),
           col("self_time_ms_delta"))
-          .orderBy("func_oid_idx"),
-        caps.schemaTableLimit, "functions", "function")
-    }
+        .orderBy("func_oid"),
+      caps.schemaTableLimit, "functions", "function"))
 
-    // -------- branch D: database stats (D6 diff) + small sections
-    val fDbStat = bg {
-      Diff.counterDiff(
-        Tables.nation(bs, dir)
-          .select(col("n_nationkey"),
-            explode(sequence(lit(0L), lit(2L))).as("snap"))
-          .select(
-            col("n_nationkey").cast("long").as("db_oid"),
-            col("snap"),
-            (col("n_nationkey") * 977L * (col("snap") + 1)).as("xact_commit"),
-            (col("n_nationkey") * 131L * (col("snap") + 1)).as("xact_rollback")),
-        keyCols = Seq("db_oid"), orderCols = Seq("snap"),
-        counterCols = Seq("xact_commit", "xact_rollback"))
-        .filter(col("snap") === 2)
-        .join(broadcast(dbDim), Seq("db_oid"))
-        .join(broadcast(dbs.select("db_oid", "temp_files")), Seq("db_oid"))
+    // database stats (D6 diff)
+    val fDbStat = bg(Diff.counterDiff(
+      Tables.nation(bs, dir)
+        .select(col("n_nationkey"),
+          explode(sequence(lit(0L), lit(2L))).as("snap"))
         .select(
-          col("db_oid_idx"), col("xact_commit_delta"),
-          col("xact_rollback_delta"), col("temp_files"))
-        .orderBy("db_oid_idx").collect().toIndexedSeq
-    }
+          col("n_nationkey").cast("long").as("db_oid"),
+          col("snap"),
+          (col("n_nationkey") * 977L * (col("snap") + 1)).as("xact_commit"),
+          (col("n_nationkey") * 131L * (col("snap") + 1)).as("xact_rollback")),
+      keyCols = Seq("db_oid"), orderCols = Seq("snap"),
+      counterCols = Seq("xact_commit", "xact_rollback"))
+      .filter(col("snap") === 2)
+      .select("db_oid", "xact_commit_delta", "xact_rollback_delta")
+      .orderBy("db_oid").collect().toIndexedSeq)
     val fCollectedAt = bg(Tables.events(bs, dir)
       .agg(expr("unix_micros(max(ts)) div 1000000").as("s")).head.getLong(0))
     // -------- backend counts (`postgres_backend_counts.go`) + standbys
@@ -319,28 +274,60 @@ object FullSnapshotPipeline {
       .filter(col("s_suppkey") < 5)
       .select(col("s_suppkey").cast("long").as("sk"))
       .orderBy("sk").collect().map(_.getLong(0)).toIndexedSeq)
-    val fDbIdx = bg(dbDim.select("db_oid", "db_oid_idx").collect()
-      .map(r => num(r, 0) -> num(r, 1)).toMap)
-    val fDbRows = bg(dbFact
-      .select("db_oid_idx", "datname", "frozenxid", "temp_files")
-      .orderBy("db_oid_idx").collect().toIndexedSeq)
     val fSettings = bg(CatalogSynth.settings(bs, dir).select("name", "setting")
       .orderBy("name").collect().toIndexedSeq)
 
-    val (roleRows, qSec) = Await.result(fQ, Duration.Inf)
-    val (refSec, relStatRows, idxRows) = Await.result(fRel, Duration.Inf)
-    val fnSec = Await.result(fFn, Duration.Inf)
-    val dbIdxOf = Await.result(fDbIdx, Duration.Inf)
+    // J5 on the driver: each section arrives in its key's Spark order, so
+    // its ids step as the key changes. A NULL key gets an id, but matches
+    // nothing in an inner join on its dim.
+    def key(r: Row, i: Int): Option[Long] =
+      if (r.isNullAt(i)) None else Some(num(r, i))
+    def numbered(rows: Seq[Row]): Seq[(Row, Int)] =
+      rows.zip(DimEncode.denseIds(rows.map(_.get(0))))
+
+    val dbs = numbered(await(fDbs))
+    val dbIdOf = dbs.flatMap { case (r, id) => key(r, 0).map(_ -> id) }.toMap
+    def dbId(r: Row, i: Int): Option[Int] = key(r, i).flatMap(dbIdOf.get)
+    val tempFiles = dbs.groupMap(p => key(p._1, 0))(_._1(3))
+    val dbStatRows = for {
+      r <- await(fDbStat); id <- dbId(r, 0).toSeq
+      t <- tempFiles(key(r, 0))
+    } yield Row(id, r(1), r(2), t)
+
+    val (qSec, roles) = await(fQ)
+    val roleIdOf = DimEncode.longIds(roles)
+    val qFacts = qSec.rows.filter(dbId(_, 0).isDefined)
+    val queryRows = qFacts.zip(DimEncode.denseIds(qFacts.map(_.toSeq.take(4))))
+      .map { case (r, id) =>
+        Row.fromSeq(Seq(id, dbId(r, 0).get, roleIdOf(r(1))) ++ r.toSeq.drop(2)) }
+
+    val (refSec, stats, idx) = await(fRel)
+    val rels = numbered(refSec.rows)
+    val relIdOf = rels.flatMap { case (r, id) => key(r, 0).map(_ -> id) }.toMap
+    val refs = rels.flatMap { case (r, id) =>
+      dbId(r, 1).map(d => key(r, 0) -> Row(id, d, r(2), r(3), r(4))) }
+    val refOf = refs.collect { case (Some(k), ref) => k -> ref }.toMap
+    val relStatRows = stats.flatMap(r => key(r, 0).flatMap(relIdOf.get)
+      .map(id => Row.fromSeq(id +: r.toSeq.tail)))
+    val idxRows = numbered(idx).flatMap { case (r, id) =>
+      key(r, 1).flatMap(k => refOf.get(k).map(ref => Row.fromSeq(
+        Seq(id, ref(1), ref(2), s"idx_$k", ref(0)) ++ r.toSeq.drop(2))))
+    }
+    val fnSec = await(fFn)
+    val fnRows = numbered(fnSec.rows).flatMap { case (r, id) =>
+      dbId(r, 1).map(d => Row.fromSeq(Seq(id, d) ++ r.toSeq.drop(2))) }
+    val roleRows = roleIdOf.toIndexedSeq.sortBy(_._2).map(p => Row(p._2, p._1))
+
     val nRoles = roleRows.length
     def roleIdxAt(i: Long): Long = num(roleRows((i % nRoles).toInt), 0)
-    val backendCountRows = Await.result(fBackendRaw, Duration.Inf).map { pk =>
+    val backendCountRows = await(fBackendRaw).map { pk =>
       val hasDb = pk % 3 != 0
       val hasRole = pk % 4 != 0
       (hasRole, if (hasRole) roleIdxAt(pk) else 0L,
-        hasDb, if (hasDb) dbIdxOf.getOrElse(pk % 5, 0L) else 0L,
+        hasDb, if (hasDb) dbIdOf.getOrElse(pk % 5, 0).toLong else 0L,
         (pk % 7).toInt, (pk % 13).toInt, pk % 2 == 0, pk % 9 + 1)
     }
-    val standbyRows = Await.result(fStandbyRaw, Duration.Inf).map { sk =>
+    val standbyRows = await(fStandbyRaw).map { sk =>
       (s"10.0.2.${10 + sk}", roleIdxAt(sk), 9000L + sk, "walreceiver",
         (50000 + sk).toInt, (sk % 2).toInt,
         (sk % 3) match { case 0 => "sync"; case 1 => "async"
@@ -360,16 +347,16 @@ object FullSnapshotPipeline {
         dbExtraNames = Seq("db_1", "db_2"),
         awsRegion = "us-east-1", awsDbInstanceId = "db-GRAFT",
         awsAccessKeyId = "AKIDGRAFT")),
-      collectedAtSecs = Await.result(fCollectedAt, Duration.Inf),
-      dbRows = Await.result(fDbRows, Duration.Inf),
+      collectedAtSecs = await(fCollectedAt),
+      dbRows = dbs.map { case (r, id) => Row(id, r(1), r(2), r(3)) },
       roleRows = roleRows,
-      queryRows = qSec.rows,
-      relRefRows = refSec.rows,
+      queryRows = queryRows,
+      relRefRows = refs.map(_._2),
       relStatRows = relStatRows,
-      dbStatRows = Await.result(fDbStat, Duration.Inf),
-      settingRows = Await.result(fSettings, Duration.Inf),
+      dbStatRows = dbStatRows,
+      settingRows = await(fSettings),
       idxRows = idxRows,
-      fnRows = fnSec.rows,
+      fnRows = fnRows,
       // deterministic flag order: schema, then statements, then functions
       collectorErrors =
         refSec.flag.toSeq ++ qSec.flag.toSeq ++ fnSec.flag.toSeq)
@@ -377,14 +364,14 @@ object FullSnapshotPipeline {
 
   // ----------------------------------------------------------- encoding
 
-  /** FullSnapshot wire bytes (field numbers per
-    * `protobuf/full_snapshot.proto` / `shared.proto`; indices are the
-    * 1-based [[DimEncode]] indices — the reference uses 0-based array
-    * positions, so array position = idx - 1). */
   /** Width-tolerant numeric getter (synth columns are int or long
     * depending on the source table's parquet types). */
   private def num(r: Row, i: Int): Long = r.getAs[Number](i).longValue
 
+  /** FullSnapshot wire bytes (field numbers per
+    * `protobuf/full_snapshot.proto` / `shared.proto`; indices are the
+    * 1-based [[DimEncode]] indices — the reference uses 0-based array
+    * positions, so array position = idx - 1). */
   def encode(doc: Doc): Array[Byte] = {
     val m = ProtoWire.msg()
       .varint(1, 1L)                       // snapshot_version_major

@@ -4,8 +4,8 @@ import org.apache.spark.sql.DataFrame
 
 /** Phase census for the e2e snapshot-sink family (round-15 verdict item
   * #8): attributes each entry's wall to its pipeline phases —
-  * `assemble` (the Spark work: scans, diffs, dim encodes, section
-  * collects), `encode` (driver-side protobuf build), `zlib`, and
+  * `assemble` (the Spark work: scans, diffs, section collects; plus the
+  * dim numbering), `encode` (driver-side protobuf build), `zlib`, and
   * `decodeVerify+force` (driver-side parse + integrity checks + the
   * bench's materialization hash over the resulting local rows). For the
   * two upload entries the ship leg (grant + storage POST + submission /

@@ -56,14 +56,15 @@ class DimEncodeSpec extends SparkSpec {
   }
 
   // statement-group-shaped facts: a nullable string dim with duplicates,
-  // and a struct key shaped like the full snapshot's qkey, with null
-  // fields and a null key
+  // a nullable long dim with negative values, and a struct key shaped
+  // like the full snapshot's qkey, with null fields and a null key
   private def groupsDf: DataFrame = {
     import spark.implicits._
     (0 until 40).map { i =>
       (if (i % 7 == 0) None else Some(s"u${i % 9}"), i % 3, i % 5,
-        i % 2 == 0, if (i % 11 == 0) None else Some((i % 6).toLong), i)
-    }.toDF("user", "db_oid", "user_oid", "toplevel", "fp", "v")
+        i % 2 == 0, if (i % 11 == 0) None else Some((i % 6).toLong), i,
+        if (i % 13 == 5) None else Some((i % 7 - 3) * 3000000000L))
+    }.toDF("user", "db_oid", "user_oid", "toplevel", "fp", "v", "neg")
       .withColumn("qkey", when(col("v") =!= 13, struct(col("db_oid"),
         col("user_oid"), col("toplevel"), col("fp"))))
   }
@@ -97,6 +98,28 @@ class DimEncodeSpec extends SparkSpec {
       // ids are dense and 1-based, the null key first
       assert(dimRows.map(_.getInt(1)) == (1 to n.toInt))
       assert(dimRows.head.isNullAt(0))
+    }
+  }
+
+  test("driver-side numbering gives encode's ids: null keys first, negative longs, booleans, struct keys") {
+    val df = groupsDf
+    def encoded(c: String): Map[Int, Int] =
+      DimEncode.encode(df, c)._2.select(col("v"), col(s"${c}_idx")).collect()
+        .map(r => r.getInt(0) -> r.getInt(1)).toMap
+    // keys collected in Spark's order, ids stepped on the driver
+    Seq("user", "toplevel", "fp", "neg", "qkey").foreach { c =>
+      val sorted = df.select(col("v"), col(c)).orderBy(col(c)).collect().toSeq
+      val ids = DimEncode.denseIds(sorted.map(_.get(1)))
+      assert(sorted.map(_.getInt(0)).zip(ids).toMap == encoded(c), c)
+      if (c != "toplevel") assert(sorted.head.isNullAt(1) && ids.head == 1, c)
+    }
+    // long-valued dims sorted on the driver
+    Seq("db_oid", "fp", "neg").foreach { c =>
+      val ids = DimEncode.longIds(df.select(c).collect().map(_.get(0)))
+      val byV = df.select(col("v"), col(c)).collect()
+        .map(r => r.getInt(0) -> ids(r.get(1))).toMap
+      assert(byV == encoded(c), c)
+      if (c != "db_oid") assert(ids(null) == 1, c)
     }
   }
 }

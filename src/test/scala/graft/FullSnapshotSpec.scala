@@ -1,5 +1,8 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
 
 import graft.sinks.{FullSnapshotPipeline => P, ProtoWire}
@@ -176,14 +179,46 @@ class FullSnapshotSpec extends SparkSpec {
     assert(rows.length === doc.queryRows.length)
     assert(rows.forall(_.getAs[Boolean]("integrity_ok")))
     // decoded values equal the assembled (pre-wire) values, row for row
+    // query rows: (qkey_idx, db_idx, role_idx, toplevel, fp,
+    // normalized_query, query_ids, calls, total_ms)
     val assembled = doc.queryRows.map(r =>
-      (r.getAs[Number]("calls").longValue, r.getAs[Number]("total_ms").longValue))
+      (r.getAs[Number](7).longValue, r.getAs[Number](8).longValue))
       .sortBy(identity)
     val decoded = rows.map(r =>
       (r.getAs[Long]("calls"), r.getAs[Long]("total_ms"))).toSeq.sortBy(identity)
     assert(decoded === assembled)
     // F5: no collector-marker query survives into the document
-    assert(doc.queryRows.forall(!_.getAs[String]("normalized_query")
-      .startsWith(P.CollectorMarker)))
+    assert(doc.queryRows.forall(!_.getString(5).startsWith(P.CollectorMarker)))
+  }
+
+  test("a warm assembly runs at most 14 Spark jobs and persists nothing") {
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        started.add(e.jobId -> String.valueOf(
+          e.properties.getProperty("spark.job.description")))
+    }
+    // the listener bus is asynchronous: a marker job's id bounds the count
+    def marker(): Int = {
+      val m = s"marker ${java.util.UUID.randomUUID}"
+      sc.setJobDescription(m)
+      try sc.emptyRDD[Int].count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30000000000L
+      while (!started.asScala.exists(_._2 == m) && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      started.asScala.find(_._2 == m).get._1
+    }
+    P.assemble(spark, Sf) // warm
+    val persisted = sc.getPersistentRDDs.keySet
+    sc.addSparkListener(listener)
+    try {
+      val from = marker()
+      P.assemble(spark, Sf)
+      val to = marker()
+      val jobs = started.asScala.count { case (id, _) => id > from && id < to }
+      assert(jobs <= 14, s"$jobs jobs")
+      assert(sc.getPersistentRDDs.keySet == persisted)
+    } finally sc.removeSparkListener(listener)
   }
 }

@@ -64,6 +64,12 @@ class SectionCapSpec extends SparkSpec {
     assert(decoded.count() === 0L) // zero query rows, but decode is green
   }
 
+  test("full snapshot: the role dim covers every statement group whatever the statement cap") {
+    val capped = FP.assemble(spark, Sf, FP.Caps(statementLimit = 1))
+    assert(capped.queryRows.isEmpty && capped.roleRows.nonEmpty)
+    assert(capped.roleRows == FP.assemble(spark, Sf).roleRows)
+  }
+
   test("full snapshot: default caps emit no collector_errors (golden bytes unchanged)") {
     val doc = FP.assemble(spark, Sf)
     assert(doc.collectorErrors.isEmpty)
