@@ -34,21 +34,8 @@ case class CosineSimilarity(left: Expression, right: Expression)
     }
   }
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    val n = math.min(a.numElements(), b.numElements())
-    var dot = 0.0; var na = 0.0; var nb = 0.0
-    var i = 0
-    while (i < n) {
-      val x = a.getFloat(i).toDouble
-      val y = b.getFloat(i).toDouble
-      dot += x * y; na += x * x; nb += y * y
-      i += 1
-    }
-    val denom = math.sqrt(na) * math.sqrt(nb)
-    if (denom == 0.0) 0.0 else dot / denom
-  }
+  override def nullSafeEval(l: Any, r: Any): Any =
+    CosineSimilarity.sim(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
@@ -76,6 +63,23 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CosineSimilarity =
     copy(left = newLeft, right = newRight)
+}
+
+object CosineSimilarity {
+  /** The generated loop above, for interpreted eval and the driver-side SemDeDup. */
+  def sim(a: ArrayData, b: ArrayData): Double = {
+    val n = math.min(a.numElements(), b.numElements())
+    var dot = 0.0; var na = 0.0; var nb = 0.0
+    var i = 0
+    while (i < n) {
+      val x = a.getFloat(i).toDouble
+      val y = b.getFloat(i).toDouble
+      dot += x * y; na += x * x; nb += y * y
+      i += 1
+    }
+    val denom = math.sqrt(na) * math.sqrt(nb)
+    if (denom == 0.0) 0.0 else dot / denom
+  }
 }
 
 /** Cosine similarity of a float vector against a double vector (the

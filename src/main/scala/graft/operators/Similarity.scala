@@ -5,12 +5,14 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.GraftNative
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructField, StructType}
 
 import graft.functions.Hashing
-import graft.functions.expressions.{CosineSimilarity, CosineSimilarityFD, VecStructSumExpr}
+import graft.functions.expressions.{CosineSimilarity, CosineSimilarityFD, Norm2FExpr,
+  VecStructSumExpr}
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -153,22 +155,35 @@ object Similarity {
       chunkWidth: Long = DefaultChunkWidth,
       driverBytes: Long = DimEncode.BroadcastBudgetBytes): DataFrame = {
     val s = emb.sparkSession
-    import s.implicits._
     val cap = if (k <= TwoLevelMinK) driverBytes / (4L * dim) else -1L
-    lazy val head = emb.select("id", "vec").as[(Long, Array[Float])]
-      .coalesce(1).limit(math.min(cap, Int.MaxValue - 1L).toInt + 1).collect()
-    if (cap >= 0 && head.length <= cap) {
-      val cents = lloydOnDriver(head.sortBy(_._1), k, iters, dim, chunkWidth)
-      s.createDataFrame(cents.indices.map(c => Row(c, cents(c))).asJava,
-        StructType(Seq(StructField("cluster", IntegerType, nullable = false),
-          StructField("centroid", ArrayType(DoubleType), emb.schema("vec").nullable))))
-    } else (0 until iters).foldLeft(seedCents(emb, k))((cents, _) =>
-      lloydUpdate(ivfAssign(emb, cents), cents, dim, chunkWidth))
+    vectorsUnder(emb, cap) match {
+      case Some(vs) =>
+        val cents = lloydOnDriver(vs, k, iters, dim, chunkWidth)
+        s.createDataFrame(cents.indices.map(c => Row(c, cents(c))).asJava,
+          StructType(Seq(StructField("cluster", IntegerType, nullable = false),
+            StructField("centroid", ArrayType(DoubleType), emb.schema("vec").nullable))))
+      case None => (0 until iters).foldLeft(seedCents(emb, k))((cents, _) =>
+        lloydUpdate(ivfAssign(emb, cents), cents, dim, chunkWidth))
+    }
   }
 
+  /** The (id, vec) rows of `emb` sorted by id, if there are at most
+    * `cap` of them; `None` otherwise. One `coalesce(1).limit(cap + 1)`
+    * collect both probes the size and gathers the rows; a negative cap
+    * runs nothing. The driver passes' gate, with `cap` derived from
+    * [[DimEncode.BroadcastBudgetBytes]] at 4·dim B a vector. */
+  def vectorsUnder(emb: DataFrame, cap: Long): Option[Array[(Long, Array[Float])]] =
+    if (cap < 0) None
+    else {
+      import emb.sparkSession.implicits._
+      val head = emb.select("id", "vec").as[(Long, Array[Float])]
+        .coalesce(1).limit(math.min(cap, Int.MaxValue - 1L).toInt + 1).collect()
+      if (head.length <= cap) Some(head.sortBy(_._1)) else None
+    }
+
   /** [[ivfFit]]'s rounds over id-sorted vectors, op for op: a vector
-    * goes to the max (sim, -cluster) as `max_by` orders it (-0.0 ==
-    * 0.0, NaN on top); sums fold as [[VecStructSumExpr]] does. */
+    * goes to its [[nearest]] centroid; sums fold as [[VecStructSumExpr]]
+    * does. */
   private def lloydOnDriver(vs: Array[(Long, Array[Float])], k: Int,
       iters: Int, dim: Int, chunkWidth: Long): Array[Array[Double]] = {
     val data = vs.map(v => UnsafeArrayData.fromPrimitiveArray(v._2))
@@ -182,12 +197,7 @@ object Similarity {
     var cents = wide.take(k)
     for (_ <- 0 until iters) {
       val cd = cents.map(c => UnsafeArrayData.fromPrimitiveArray(c))
-      val members = vs.indices.groupBy { i =>
-        val sims = cd.map(CosineSimilarityFD.sim(data(i), _))
-        sims.indices.foldLeft(0)((b, c) =>
-          if (sims(c) != sims(b) && java.lang.Double.compare(sims(c), sims(b)) > 0) c
-          else b)
-      }
+      val members = vs.indices.groupBy(i => nearest(data(i), cd))
       cents = cents.indices.map { c =>
         members.get(c).fold(cents(c)) { ms =>
           val chunks = ms.groupBy(vs(_)._1 / chunkWidth).toSeq.sortBy(_._1)
@@ -196,6 +206,50 @@ object Similarity {
       }.toArray
     }
     cents
+  }
+
+  /** [[ivfAssign]]'s argmax on the driver: the cluster with the max
+    * (sim, -cluster) as `max_by` orders it (-0.0 == 0.0, NaN on top),
+    * so ties go to the lowest cluster. */
+  private def nearest(v: ArrayData, cents: Array[UnsafeArrayData]): Int = {
+    val sims = cents.map(CosineSimilarityFD.sim(v, _))
+    sims.indices.foldLeft(0)((b, c) =>
+      if (SQLOrderingUtil.compareDoubles(sims(c), sims(b)) > 0) c else b)
+  }
+
+  /** The flat SemDeDup of `QueriesText.semDedup` in one driver pass over
+    * id-sorted vectors with unique ids: [[ivfFit]]'s rounds, the
+    * [[ivfAssign]] argmax, then the distributed plan's drop rule. Every
+    * non-zero-norm vector is dropped if a lower-id vector of its
+    * cluster has the same grouping key (Spark normalizes float keys:
+    * -0.0f is 0.0f, one NaN), or if its key's representative (the
+    * lowest id holding it) scores ≥ `threshold` by [[CosineSimilarity]]
+    * against a lower-id representative of its cluster. Comparisons
+    * follow Spark SQL's double order, so a NaN norm counts as non-zero
+    * and a NaN score as a match, as in the distributed plan. Returns
+    * each vector's (cluster, kept), in `vs` order. */
+  def semDedupOnDriver(vs: Array[(Long, Array[Float])], k: Int, iters: Int,
+      dim: Int, threshold: Double): Array[(Int, Boolean)] = {
+    val cents = lloydOnDriver(vs, k, iters, dim, DefaultChunkWidth)
+      .map(c => UnsafeArrayData.fromPrimitiveArray(c))
+    val data = vs.map(v => UnsafeArrayData.fromPrimitiveArray(v._2))
+    val cluster = data.map(nearest(_, cents))
+    val kept = Array.fill(vs.length)(true)
+    val keys = scala.collection.mutable.HashSet.empty[(Int, Seq[Int])]
+    val reps = Array.fill(cents.length)(Vector.empty[UnsafeArrayData])
+    for (i <- vs.indices
+         if SQLOrderingUtil.compareDoubles(Norm2FExpr.norm2(data(i)), 0d) > 0) {
+      val c = cluster(i)
+      val bits = vs(i)._2.map(x => if (x == 0f) 0 else java.lang.Float.floatToIntBits(x))
+      if (!keys.add((c, bits.toSeq))) kept(i) = false
+      else {
+        val rep = UnsafeArrayData.fromPrimitiveArray(bits.map(java.lang.Float.intBitsToFloat))
+        kept(i) = !reps(c).exists(a =>
+          SQLOrderingUtil.compareDoubles(CosineSimilarity.sim(a, rep), threshold) >= 0)
+        reps(c) = reps(c) :+ rep
+      }
+    }
+    cluster.zip(kept)
   }
 
   /** Centroid init shared by the flat and two-level fits: the `k`
@@ -321,7 +375,7 @@ object Similarity {
   def cappedWitnessDrop(assigned: DataFrame, threshold: Double,
       cap: Int): DataFrame = {
     val nzAssigned = assigned.withColumn("nz",
-      graft.functions.expressions.Norm2FExpr.column(col("vec")) > 0d)
+      Norm2FExpr.column(col("vec")) > 0d)
     val groups = nzAssigned.filter(col("nz"))
       .groupBy(col("cluster"), col("vec"))
       .agg(min(col("id")).as("rep_id"))

@@ -179,18 +179,20 @@ object FullSnapshotPipeline {
 
     // statement groups in qkey order, capped (statements.go:78-110 holds
     // entries near pg_stat_statements.max); the role dim covers every
-    // group, so a dropped section leaves the roles their own collect
+    // group, so a dropped section gets the roles and the flag's count
+    // from one per-role count collect
     val fQ = bg {
       val groups = queryGroups(bs, dir)
+      lazy val perRole = groups.groupBy("user_oid").count().collect()
       val sec = SectionCap.guarded(
         groups.select("db_oid", "user_oid", "toplevel", "fp",
             "normalized_query", "query_ids", "calls", "total_ms")
           .orderBy(struct(col("db_oid"), col("user_oid"), col("toplevel"),
             col("fp"))),
-        caps.statementLimit, "statements", "statement")
+        caps.statementLimit, "statements", "statement",
+        perRole.map(_.getLong(1)).sum)
       val roles =
-        if (sec.dropped) groups.select("user_oid").distinct().collect()
-          .map(_.get(0)).toSeq
+        if (sec.dropped) perRole.map(_.get(0)).toSeq
         else sec.rows.map(_.get(1))
       (sec, roles)
     }

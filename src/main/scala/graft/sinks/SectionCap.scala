@@ -22,7 +22,8 @@ import org.apache.spark.sql.{DataFrame, Row}
   * most `limit + 1` rows (an orderBy+limit plan is
   * TakeOrderedAndProject, so driver memory stays limit-bounded even
   * against a pathological input); only the rare overflow path pays a
-  * second count() for the diagnostic. On overflow the section is
+  * second count() for the diagnostic (or a count the caller already
+  * needs). On overflow the section is
   * DROPPED and the returned flag message becomes part of the document
   * (FullSnapshot carries it on the wire as `collector_errors` —
   * `protobuf/full_snapshot.proto:24` field 21; the compact protos have
@@ -55,10 +56,16 @@ object SectionCap {
     * ("Too many X: got N, but only M can be monitored per server;
     * X information will not be sent"). */
   def guarded(ordered: DataFrame, limit: Int, what: String,
-      section: String): Section = {
+      section: String): Section =
+    guarded(ordered, limit, what, section, ordered.count())
+
+  /** [[guarded]] with the overflow count from `observed`, which runs
+    * only on overflow. */
+  def guarded(ordered: DataFrame, limit: Int, what: String,
+      section: String, observed: => Long): Section = {
     val head = ordered.limit(limit + 1).collect()
     if (head.length > limit) {
-      val n = ordered.count()
+      val n = observed
       Section(Vector.empty, dropped = true, observed = n,
         flag = Some(s"Too many $what: got $n, but only $limit can be " +
           s"monitored per server; $section information will not be sent"))

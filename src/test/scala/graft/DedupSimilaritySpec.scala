@@ -258,6 +258,109 @@ class DedupSimilaritySpec extends SparkSpec {
       .queryExecution.logical.isInstanceOf[LocalRelation])
   }
 
+  private val sf001 = java.nio.file.Paths.get(Sf).resolveSibling("sf0.01").toString
+
+  /** `QueriesText.semDedupImpl`'s driver pass and its distributed plan
+    * (forced with `driverBytes = 0`) over the embeddings in `dir`. */
+  private def semDedupBothPaths(dir: String) = {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    val onDriver = QueriesText.semDedupImpl(spark, dir, minK = 16)
+    val distributed = QueriesText.semDedupImpl(spark, dir, minK = 16, driverBytes = 0)
+    try {
+      assert(onDriver.queryExecution.logical.isInstanceOf[LocalRelation])
+      assert(!distributed.queryExecution.logical.isInstanceOf[LocalRelation])
+      assert(onDriver.schema == distributed.schema)
+      val rows = onDriver.collect().toSeq
+      assert(rows.map(_.get(0)).distinct.size == rows.size)
+      (rows.toSet, distributed.collect().toSet)
+    } finally Harness.release(spark)
+  }
+
+  test("sem_dedup: the driver pass equals the distributed plan on sf0.01") {
+    val (a, b) = semDedupBothPaths(sf001)
+    assert(a.size == 500 && a == b)
+    assert(a.exists(_.getBoolean(2)) && a.exists(!_.getBoolean(2)))
+  }
+
+  test("sem_dedup: the driver pass equals the distributed plan on dups, signed zeros, zero norms, NaNs and tied sims") {
+    // v(i) and the id-0 duplicate at id 9 (tied sims) are the k-means
+    // parity fixture's; ids 900.. add an exact dup, a dup that differs
+    // only by -0.0f components, and zero-norm vectors of both signs.
+    // The second corpus holds two equal NaN-component vectors: Spark
+    // orders NaN above every double, so their norm counts as non-zero
+    // and their NaN scores as matches
+    def v(i: Int) = Array.tabulate(64)(d =>
+      (math.sin(i * 0.37 + d * 1.3) * math.pow(10, (i * 7 + d) % 11 - 5)).toFloat)
+    val signed = v(3).zipWithIndex.map { case (x, d) => if (d % 3 == 0) 0f else x }
+    val base = (0 until 100).map(i => (i.toLong * 9, if (i == 1) v(0) else v(i)))
+    val extra = Seq(
+      900L -> v(5), // exact dup of id 45
+      901L -> signed,
+      902L -> signed.map(x => if (x == 0f) -0f else x),
+      903L -> Array.fill(64)(0f),
+      904L -> Array.fill(64)(-0f),
+      905L -> Array.fill(64)(0f))
+    val nan = Seq(
+      0L -> v(1), 1L -> v(2), 2L -> v(1).updated(4, Float.NaN),
+      3L -> v(1).updated(4, Float.NaN), 4L -> v(7), 5L -> Array.fill(64)(0f))
+    Seq(base ++ extra -> 106, nan -> 6).foreach { case (rows, n) =>
+      val dir = java.nio.file.Files.createTempDirectory("graft_semdedup")
+      try {
+        rows.toDF("vec_id", "embedding").coalesce(1).write
+          .parquet(s"$dir/embeddings.parquet")
+        val (a, b) = semDedupBothPaths(dir.toString)
+        assert(a.size == n && a == b)
+      } finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
+    }
+  }
+
+  test("sem_dedup over the budget or past TwoLevelMinK keeps the distributed plan") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    val dir = sf001
+    try {
+      assert(!QueriesText.semDedupImpl(spark, dir, 16, driverBytes = 499L * 256)
+        .queryExecution.logical.isInstanceOf[LocalRelation])
+      assert(QueriesText.semDedupImpl(spark, dir, 16, driverBytes = 500L * 256)
+        .queryExecution.logical.isInstanceOf[LocalRelation])
+      assert(!QueriesText.semDedup2L(spark, dir)
+        .queryExecution.logical.isInstanceOf[LocalRelation])
+    } finally Harness.release(spark)
+  }
+
+  test("a warm sem_dedup at sf0.01 runs at most 3 Spark jobs and persists nothing") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val dir = sf001
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        started.add(e.jobId -> String.valueOf(
+          e.properties.getProperty("spark.job.description")))
+    }
+    // the listener bus is asynchronous: a marker job's id bounds the count
+    def marker(): Int = {
+      val m = s"marker ${java.util.UUID.randomUUID}"
+      sc.setJobDescription(m)
+      try sc.emptyRDD[Int].count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30000000000L
+      while (!started.asScala.exists(_._2 == m) && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      started.asScala.find(_._2 == m).get._1
+    }
+    Harness.force(QueriesText.semDedup(spark, dir)) // warm
+    val persisted = sc.getPersistentRDDs.keySet
+    sc.addSparkListener(listener)
+    try {
+      val from = marker()
+      Harness.force(QueriesText.semDedup(spark, dir))
+      val to = marker()
+      val jobs = started.asScala.count { case (id, _) => id > from && id < to }
+      assert(jobs <= 3, s"$jobs jobs")
+      assert(sc.getPersistentRDDs.keySet == persisted)
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("sample split is deterministic and ~80/10/10") {
     val d = (0L until 512L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
     // same routing as QueriesText.sampleSplit, against the pure kernel

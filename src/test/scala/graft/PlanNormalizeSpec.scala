@@ -62,6 +62,7 @@ class PlanNormalizeSpec extends AnyFunSuite {
   }
 
   test("normalized query text matches all reference expectations") {
+    assume(Files.exists(dir), "reference fixtures not present")
     // querysample/normalize_test.go's expected normalized texts,
     // extracted to querysample_normalize_goldens.tsv
     val res = getClass.getResourceAsStream("/querysample_normalize_goldens.tsv")
